@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** DML semantics over an immutable lake (reference: dml/delete.slt,
@@ -114,9 +114,13 @@ object Dml {
         // recoverable), and the lake itself never holds a partial day.
         val tmp = new Path(rootP, s".ttl-tmp-$dayName")
         val old = new Path(rootP, s".ttl-old-$dayName")
-        val kept = spark.read.parquet(dir.toString).filter(col("ts") >= cutoffNs)
-        kept.write.mode("overwrite").parquet(tmp.toString)
-        boundaryKept = spark.read.parquet(tmp.toString).count()
+        // the kept-row count rides the write as an observed metric
+        // instead of a second job re-reading the rewrite
+        val kept = Observation()
+        spark.read.parquet(dir.toString).filter(col("ts") >= cutoffNs)
+          .observe(kept, count(lit(1)).as("rows"))
+          .write.mode("overwrite").parquet(tmp.toString)
+        boundaryKept = kept.get("rows").asInstanceOf[Long]
         fs.delete(old, true) // clear any previous crashed attempt
         require(fs.rename(dir, old), s"rename $dir -> $old failed")
         require(fs.rename(tmp, dir), s"rename $tmp -> $dir failed")
@@ -233,12 +237,14 @@ object Dml {
       } else if (day == cutDay && Math.floorMod(cutoffNs, nsPerDay) != 0L) {
         val aside = new Path(rootP, s".ttl-aside-$dayName")
         val dataCols = spark.table(table).columns.filterNot(_ == "day")
+        val keptRows = Observation()
         spark.table(table)
           .filter(col("day") === to_date(lit(dayName)) && col("ts") >= cutoffNs)
           .select(dataCols.map(col): _*)
+          .observe(keptRows, count(lit(1)).as("rows"))
           .write.mode("overwrite").parquet(aside.toString)
+        boundaryKept = keptRows.get("rows").asInstanceOf[Long]
         val kept = spark.read.parquet(aside.toString)
-        boundaryKept = kept.count()
         val view = s"graft_ttl_aside_${System.nanoTime()}"
         kept.createOrReplaceTempView(view)
         spark.sql(

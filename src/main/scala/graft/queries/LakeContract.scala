@@ -565,23 +565,20 @@ object LakeContract {
       val dayDir = root.resolve(s"day=$d1")
       def partFiles() = Option(dayDir.toFile.listFiles()).getOrElse(Array.empty)
         .count(_.getName.startsWith("part-"))
-      // fragment: one day re-written as 16 micro-batch-sized files
-      // (materialize a copy first — a dir cannot be overwritten from a
-      // scan of itself)
+      // fragment: one day re-written as 16 micro-batch-sized files,
+      // written beside the dir (a dir cannot be overwritten from a scan
+      // of itself) and swapped in
       val frag = java.nio.file.Files.createTempDirectory("graft_compact_frag")
-      s.read.parquet(dayDir.toString)
+      s.read.parquet(dayDir.toString).repartition(16)
         .write.mode("overwrite").parquet(frag.toString)
-      s.read.parquet(frag.toString).repartition(16)
-        .write.mode("overwrite").parquet(dayDir.toString)
+      swapFilesIn(frag, dayDir)
       val fragmented = partFiles()
       require(fragmented >= 16, s"fragmentation failed: $fragmented part files")
       // compact THAT directory back, series-key sorted
       val out = java.nio.file.Files.createTempDirectory("graft_compact_out")
       val target = graft.operators.Dml.compact(s, dayDir.toString, out.toString,
         sortCols = Seq("event_type", "ts"))
-      // swap the compacted files in
-      Option(dayDir.toFile.listFiles()).getOrElse(Array.empty).foreach(_.delete())
-      copyTree(out, dayDir)
+      swapFilesIn(out, dayDir)
       val after = partFiles()
       require(after == target && after < fragmented,
         s"compaction did not level the day: $fragmented -> $after files (target $target)")
@@ -1001,6 +998,16 @@ object LakeContract {
       if (Files.isDirectory(p)) Files.createDirectories(q)
       else Files.copy(p, q, StandardCopyOption.REPLACE_EXISTING)
     } finally walk.close()
+  }
+
+  /** Replace the files of the flat directory `dst` with those of `src`,
+    * moving them (a rename within one file system) and removing `src`.
+    */
+  private def swapFilesIn(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
+    Option(dst.toFile.listFiles()).getOrElse(Array.empty).foreach(_.delete())
+    Option(src.toFile.listFiles()).getOrElse(Array.empty)
+      .foreach(f => java.nio.file.Files.move(f.toPath, dst.resolve(f.getName)))
+    java.nio.file.Files.delete(src)
   }
 
   /** Everything at or after the middle day's noon over the RAW lake —

@@ -7,11 +7,12 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import graft.Tables
 import graft.sources.LineProtocol
-import graft.streaming.StreamIngest
+import graft.streaming.{LocalCheckpointFileManager, StreamIngest}
 
 /** Batch/stream EQUIVALENCE driver entries — the streaming lanes'
   * upgrade from "MemoryStream spec only" to oracle-checked (reference
@@ -65,14 +66,6 @@ object StreamQueries {
     */
   private[graft] val replayBatches = TrieMap.empty[String, Int]
 
-  /** Run a streaming frame to completion through a parquet sink and
-    * hand back a batch scan of the sink files. AvailableNow processes
-    * everything then stops, so the call is synchronous. Unlike the r5
-    * memory sink (which collected the whole sink table into driver
-    * memory — corpus-sized for the dedup/neardup/anomaly lanes), the
-    * parquet sink keeps every row on the executors; the driver only
-    * brokers file paths.
-    */
   /** State/shuffle partition count for the replay itself. The conf at
     * query START pins the stateful operators' partition count for the
     * checkpoint's lifetime, so this is a per-replay sizing knob, not a
@@ -115,24 +108,57 @@ object StreamQueries {
       }
   }
 
+  /** The conf Spark reads to pick its checkpoint file manager. A replay
+    * sets it to [[LocalCheckpointFileManager]] for its lifetime.
+    */
+  private[graft] val CheckpointManagerConf = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** The one place an AvailableNow replay starts. It pins the replay's
+    * shuffle width (above) and the java.nio checkpoint writer, starts
+    * `writer` under `Trigger.AvailableNow`, waits for it to drain, and
+    * restores both confs in `finally` (unset stays unset, so nothing
+    * leaks into the next lane). The confs stay set until the query has
+    * terminated, so every checkpoint writer it creates sees them.
+    * Records the data-bearing micro-batches under `name` in
+    * [[replayBatches]].
+    */
+  private[graft] def runAvailableNow(s: SparkSession, name: String, parts: Int)(
+      writer: DataStreamWriter[_]): Unit = {
+    val scoped = Seq("spark.sql.shuffle.partitions" -> parts.toString,
+      CheckpointManagerConf -> classOf[LocalCheckpointFileManager].getName)
+    val explicit = s.conf.getAll
+    val prior = scoped.map { case (k, _) => k -> explicit.get(k) }
+    val q = try {
+      scoped.foreach { case (k, v) => s.conf.set(k, v) }
+      val q0 = writer.trigger(Trigger.AvailableNow()).start()
+      q0.awaitTermination()
+      q0
+    } finally prior.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+    replayBatches(name) = q.recentProgress.count(_.numInputRows > 0)
+  }
+
+  /** Run a streaming frame to completion through a parquet sink and
+    * hand back a batch scan of the sink files. AvailableNow processes
+    * everything then stops, so the call is synchronous. Unlike the r5
+    * memory sink (which collected the whole sink table into driver
+    * memory — corpus-sized for the dedup/neardup/anomaly lanes), the
+    * parquet sink keeps every row on the executors; the driver only
+    * brokers file paths.
+    */
   private def replay(s: SparkSession, out: DataFrame, name: String,
                      lakeDir: String): DataFrame = {
     val root = Files.createTempDirectory(s"graft_replay_$name").toString
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val parts = replayParts(lakeDir) // consumes this lane's staging record
-    val q = try {
-      s.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      val q0 = out.writeStream
+    // replayParts consumes this lane's staging record
+    runAvailableNow(s, name, replayParts(lakeDir)) {
+      out.writeStream
         .format("parquet")
         .option("path", s"$root/data")
         .option("checkpointLocation", s"$root/ckpt")
         .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q0.awaitTermination()
-      q0
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    replayBatches(name) = q.recentProgress.count(_.numInputRows > 0)
+    }
     // explicit schema: survives a legitimately-empty sink (no files to
     // infer from) instead of failing schema inference
     s.read.schema(out.schema).parquet(s"$root/data")
@@ -195,12 +221,15 @@ object StreamQueries {
     stagedTriggerBytes.set(math.max(stagedTriggerBytes.get(), perTrigger))
     root
   }
+  private val stagedSchemas = TrieMap.empty[String, StructType]
   private def staged(s: SparkSession, df: DataFrame, orderCol: String,
                      lakeDir: String, lane: String): DataFrame = {
     val root = stageDir(lakeDir, lane, dir =>
       df.repartitionByRange(StageFiles, col(orderCol))
         .write.mode("overwrite").parquet(dir.toString))
-    val schema = s.read.parquet(root).schema
+    // a published staged dir never changes, and its root carries the
+    // source fingerprint, so its schema is inferred once per root
+    val schema = stagedSchemas.getOrElseUpdate(root, s.read.parquet(root).schema)
     s.readStream
       .schema(schema)
       .option("pathGlobFilter", "part-*")
@@ -832,20 +861,13 @@ object StreamQueries {
       // width derivation so replayParts sees THIS lane's staged bytes.
       val src = eventsStream(s, dir)
         .withColumn("day", expr(graft.Tables.dayOfNsSql("ts")))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions", replayParts(dir).toString)
-        val q0 = src.writeStream.format("parquet")
+      runAvailableNow(s, "stream_sink_partitioned", replayParts(dir)) {
+        src.writeStream.format("parquet")
           .option("path", s"$root/data")
           .option("checkpointLocation", s"$root/ckpt")
           .partitionBy("day")
           .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q0.awaitTermination()
-        q0
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      replayBatches("stream_sink_partitioned") = q.recentProgress.count(_.numInputRows > 0)
+      }
       val days = Option(new java.io.File(s"$root/data").listFiles())
         .getOrElse(Array.empty)
         .filter(f => f.isDirectory && f.getName.startsWith("day="))
@@ -910,10 +932,8 @@ object StreamQueries {
       val dataCols = Seq("event_id", "ts", "user_id", "event_type", "value", "props")
       // staged before the width derivation (see stream_sink_partitioned)
       val srcStream = eventsStream(s, dir)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions", replayParts(dir).toString)
-        val q0 = srcStream.writeStream
+      runAvailableNow(s, "stream_sink_unified", replayParts(dir)) {
+        srcStream.writeStream
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             val v = s"graft_stream_uni_b${batchId}_${System.nanoTime()}"
             batch.withColumn("day", expr(graft.Tables.dayOfNsSql("ts")))
@@ -924,12 +944,7 @@ object StreamQueries {
             ()
           }
           .option("checkpointLocation", s"$root/_ckpt")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q0.awaitTermination()
-        q0
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      replayBatches("stream_sink_unified") = q.recentProgress.count(_.numInputRows > 0)
+      }
       val days = s.sql(s"SHOW PARTITIONS $tbl").collect()
         .map(_.getString(0).stripPrefix("day=")).sorted.toSeq
       require(days.size > 1,

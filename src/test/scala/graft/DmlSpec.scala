@@ -138,6 +138,34 @@ class DmlSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.read.parquet(lake4).count() == 8)
   }
 
+  test("expireDays boundaryRowsKept equals the rows in the rewritten day, across files") {
+    import spark.implicits._
+    val N = graft.Tables.NsPerDay
+    val minute = 60L * 1000000000L
+    // day 1 holds 1,000 rows one minute apart (00:00 to 16:39) in 4
+    // files, so the kept rows are counted across several write tasks
+    def mkLake(): String = {
+      val root = java.nio.file.Files.createTempDirectory("graft_ttl_kept").toString
+      (0L until 1000L).map(i => N + i * minute).toDF("ts")
+        .withColumn("day", expr(graft.Tables.dayOfNsSql("ts")))
+        .repartition(4)
+        .write.partitionBy("day").mode("overwrite").parquet(root)
+      root
+    }
+    def dayRows(root: String) = spark.read.parquet(s"$root/day=1970-01-02").count()
+
+    val lake1 = mkLake()
+    val s1 = Dml.expireDays(spark, lake1, N + 600L * minute)
+    assert(s1 == Dml.ExpireStats(0, true, 400L), s1.toString)
+    assert(dayRows(lake1) == s1.boundaryRowsKept)
+
+    // a cutoff past the day's last row still rewrites the day, keeping 0
+    val lake2 = mkLake()
+    val s2 = Dml.expireDays(spark, lake2, N + 23L * 60L * minute)
+    assert(s2 == Dml.ExpireStats(0, true, 0L), s2.toString)
+    assert(dayRows(lake2) == 0L)
+  }
+
   test("expireDays self-heals a swap interrupted at either crash point (ADVICE r12)") {
     import spark.implicits._
     val N = graft.Tables.NsPerDay

@@ -29,8 +29,30 @@ class ExactlyOnceSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  private val NioManager = classOf[graft.streaming.LocalCheckpointFileManager].getName
+
+  /** Runs `body` with the session's checkpoint file manager set to `cls`
+    * (None: Spark's default), unset again afterwards.
+    */
+  private def withManager[T](cls: Option[String])(body: => T): T = {
+    val key = graft.queries.StreamQueries.CheckpointManagerConf
+    cls.foreach(spark.conf.set(key, _))
+    try body finally spark.conf.unset(key)
+  }
+
   test("checkpointed file-source stream restarted mid-run delivers exactly once") {
-    import spark.implicits._
+    restartDeliversExactlyOnce(run1 = None, run2 = None)
+  }
+
+  test("the restart delivers exactly once under the java.nio checkpoint writer") {
+    restartDeliversExactlyOnce(run1 = Some(NioManager), run2 = Some(NioManager))
+  }
+
+  test("a checkpoint begun by Spark's default manager resumes exactly once under the java.nio writer") {
+    restartDeliversExactlyOnce(run1 = None, run2 = Some(NioManager))
+  }
+
+  private def restartDeliversExactlyOnce(run1: Option[String], run2: Option[String]): Unit = {
     val root = Files.createTempDirectory("graft_exactly_once").toString
     val src = s"$root/src"
     val sink = s"$root/sink"
@@ -66,13 +88,16 @@ class ExactlyOnceSpec extends AnyFunSuite {
     // Run 1: stop as soon as at least one batch committed — before the
     // 4-file backlog drains (ProcessingTime keeps it running so the
     // stop lands mid-stream, possibly mid-batch).
-    val q1 = stream().trigger(Trigger.ProcessingTime("10 milliseconds")).start()
-    val deadline = System.currentTimeMillis() + 60000
-    while (Option(q1.lastProgress).forall(_.batchId < 1) &&
-           System.currentTimeMillis() < deadline) Thread.sleep(20)
-    val lastCommitted = Option(q1.lastProgress).map(_.batchId).getOrElse(-1L)
-    q1.stop()
-    q1.awaitTermination()
+    val lastCommitted = withManager(run1) {
+      val q1 = stream().trigger(Trigger.ProcessingTime("10 milliseconds")).start()
+      val deadline = System.currentTimeMillis() + 60000
+      while (Option(q1.lastProgress).forall(_.batchId < 1) &&
+             System.currentTimeMillis() < deadline) Thread.sleep(20)
+      val last = Option(q1.lastProgress).map(_.batchId).getOrElse(-1L)
+      q1.stop()
+      q1.awaitTermination()
+      last
+    }
     assert(lastCommitted >= 1, "run 1 never committed a batch")
 
     val committedAfterStop =
@@ -82,8 +107,11 @@ class ExactlyOnceSpec extends AnyFunSuite {
         "nothing left to prove about the restart")
 
     // Run 2: same checkpoint + sink, drain the rest.
-    val q2 = stream().trigger(Trigger.AvailableNow()).start()
-    q2.awaitTermination()
+    val q2 = withManager(run2) {
+      val q = stream().trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      q
+    }
     val resumedFrom = q2.recentProgress.headOption.map(_.batchId).getOrElse(-1L)
     assert(resumedFrom > 0,
       s"restart began at batch $resumedFrom — it re-ran from scratch " +
@@ -108,5 +136,16 @@ class ExactlyOnceSpec extends AnyFunSuite {
     }
     info(s"sink part-files on disk: $raw (manifest-committed rows: $n, " +
       s"run-1 committed $committedAfterStop rows through batch $lastCommitted)")
+
+    // The chosen manager really wrote the checkpoint: Hadoop's local
+    // writes leave a hidden .<name>.crc beside each file, java.nio none.
+    val ckptFiles = Files.walk(Paths.get(ckpt)).iterator()
+    var crcs = 0
+    while (ckptFiles.hasNext) {
+      val name = ckptFiles.next().getFileName.toString
+      if (name.startsWith(".") && name.endsWith(".crc")) crcs += 1
+    }
+    if (run1.isEmpty) assert(crcs > 0, "Spark's default manager wrote no .crc files")
+    else assert(crcs == 0, s"the java.nio writer left $crcs .crc files")
   }
 }

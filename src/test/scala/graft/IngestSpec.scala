@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -428,6 +430,87 @@ class IngestSpec extends AnyFunSuite {
     assert(kf.count() > 0)
     val kfB = graft.queries.StreamQueries.replayBatches("stream_kafka_ingest_sink")
     assert(kfB > 1, s"kafka expected >1 data-bearing micro-batch, got $kfB")
+  }
+
+  test("an AvailableNow replay leaks no conf and leaves a checkpoint without .crc or temp files") {
+    import graft.queries.StreamQueries
+    import java.nio.file.{Files, Path}
+    val keys = Seq("spark.sql.shuffle.partitions", StreamQueries.CheckpointManagerConf)
+    def explicit() = { val all = spark.conf.getAll; keys.map(all.get) }
+    val root = Files.createTempDirectory("graft_replay_scope")
+    spark.range(60).selectExpr("id % 7 AS k").repartition(3)
+      .write.json(root.resolve("src").toString)
+    def counts(ckpt: Path, check: String) = spark.readStream.schema("k LONG")
+      .option("maxFilesPerTrigger", "1").json(root.resolve("src").toString)
+      .where(s"assert_true($check) IS NULL").groupBy("k").count()
+      .writeStream.format("noop").outputMode("update")
+      .option("checkpointLocation", ckpt.toString)
+    val prior = spark.conf.getAll
+    try {
+      // returns: the width was set, the manager unset
+      spark.conf.unset(StreamQueries.CheckpointManagerConf)
+      val before = explicit()
+      val ckpt = root.resolve("ckpt")
+      StreamQueries.runAvailableNow(spark, "scope_spec", 2)(counts(ckpt, "k >= 0"))
+      assert(explicit() == before)
+      assert(StreamQueries.replayBatches("scope_spec") == 3)
+      val files = {
+        val w = Files.walk(ckpt)
+        try w.iterator().asScala.filter(Files.isRegularFile(_)).map(ckpt.relativize(_).toString)
+          .toSeq finally w.close()
+      }
+      Seq("offsets/", "commits/", "sources/0/", "state/0/").foreach(d =>
+        assert(files.exists(_.startsWith(d)), s"no $d files in $files"))
+      // Hadoop's local checksums are hidden `.<name>.crc` files; the
+      // state store's own `<n>.delta.crc` checksums are Spark's and stay
+      val stray = files.filter { f =>
+        val name = f.substring(f.lastIndexOf('/') + 1)
+        name.startsWith(".") && (name.endsWith(".crc") || name.endsWith(".tmp"))
+      }
+      assert(stray.isEmpty, s"checkpoint holds Hadoop .crc or temp files: $stray")
+
+      // throws mid-run: the width was unset, the manager set
+      spark.conf.unset("spark.sql.shuffle.partitions")
+      spark.conf.set(StreamQueries.CheckpointManagerConf,
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
+      val before2 = explicit()
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        StreamQueries.runAvailableNow(spark, "scope_spec_fail", 2)(
+          counts(root.resolve("ckpt_fail"), "k < 0"))
+      }
+      assert(explicit() == before2)
+    } finally keys.foreach(k => prior.get(k) match {
+      case Some(v) => spark.conf.set(k, v)
+      case None => spark.conf.unset(k)
+    })
+  }
+
+  test("a stream_ewma replay starts no process for its checkpoint files") {
+    // Hadoop's local FileSystem without its native library forks a
+    // chmod or readlink per checkpoint file; the java.nio writer forks
+    // none. jdk.ProcessStart records every process this JVM starts.
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val rs = new jdk.jfr.consumer.RecordingStream()
+    try {
+      rs.enable("jdk.ProcessStart")
+      rs.onEvent("jdk.ProcessStart", e => started.add(e.getString("command")))
+      rs.startAsync()
+      val out = graft.queries.StreamQueries.queries("stream_ewma")(spark, sf)
+      assert(graft.queries.StreamQueries.replayBatches("stream_ewma_sink") > 1)
+      // a sentinel process started after the replay: once its event is
+      // delivered, every earlier one has been, and the recording works
+      val marker = s"graft-jfr-sentinel-${System.nanoTime()}"
+      new ProcessBuilder("true", marker).start().waitFor()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!started.asScala.exists(_.contains(marker)) &&
+             System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(started.asScala.exists(_.contains(marker)), "the recording saw no sentinel")
+      assert(out.count() > 0)
+    } finally rs.close()
+    val replay = started.asScala.filter(_.contains("graft_replay_stream_ewma_sink")).toSeq
+    val ckpt = replay.filter(_.contains("/ckpt"))
+    assert(ckpt.size == 0, s"process starts for checkpoint files, e.g. ${ckpt.take(3)}")
+    info(s"process starts during the replay: ${replay.size} (sink data files only)")
   }
 
   test("candlestickStats in batch mode equals the batch candlestick operator") {
