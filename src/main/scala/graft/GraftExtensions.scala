@@ -16,10 +16,11 @@ import graft.functions.{AlphaWordCount, Arity, ArrayOverlapCount, BinarySignatur
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // hidden time partitioning: day-partition predicates derived from
-    // event-time predicates (the per-session form is installed by
-    // Tables.events via experimental.extraOptimizations)
+    // graft's session plan rules — hidden time partitioning (day
+    // predicates derived from event-time predicates) and sampling-free
+    // small global sorts; graft.plans.install is the per-session form
     ext.injectOptimizerRule(_ => graft.plans.EventTimeDayPruning)
+    ext.injectPlannerStrategy(_ => graft.plans.SmallSortPlanning)
     // tenant/user/role/grant DCL through plain spark.sql(...) — the
     // statements Spark has no grammar for; Spark-owned DDL (CREATE
     // DATABASE/TABLE, SHOW DATABASES, ...) falls through untouched

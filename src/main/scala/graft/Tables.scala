@@ -76,18 +76,27 @@ object Tables {
   def eventsNanos(spark: SparkSession, dir: String): DataFrame = {
     if (sys.env.get("SPARK_GRAFT_EVENTS_LAYOUT").contains("flat"))
       return rawEventsNanos(spark, dir) // measurement bypass, not a mode
-    plans.EventTimeDayPruning.install(spark)
+    eventsDayLake(spark, dir).drop("day")
+  }
+
+  /** The day-partitioned primary events layout ([[eventsLakeRoot]]) as
+    * one relation, `day` partition column kept — what a lane that
+    * filters on `day` itself reads, and whose schema a lane that copies
+    * the layout reads the copy with (no schema-inference job).
+    */
+  def eventsDayLake(spark: SparkSession, dir: String): DataFrame = {
+    plans.install(spark)
     val root = eventsLakeRoot(spark, dir)
     // Memoize the scan relation per (session, root): building a fresh
-    // DataFrame re-lists every day directory and re-infers partitions —
-    // at 3000 day dirs that listing costs ~20× the one-day read it
-    // precedes (measured: 5.9 s vs 0.3 s at span100). A catalog-backed
-    // table shares its FileIndex across queries; this is the path-based
-    // equivalent. The Lake staging key already fingerprints the SOURCE
-    // lake, and a regenerated source yields a new root, so a stale memo
-    // entry can only describe a root that no longer receives reads.
-    eventsFrames.getOrElseUpdate((spark, root),
-      spark.read.parquet(root).drop("day"))
+    // DataFrame re-lists every day directory and re-infers the schema
+    // in a job of its own — at 3000 day dirs that listing costs ~20× the
+    // one-day read it precedes (measured: 5.9 s vs 0.3 s at span100). A
+    // catalog-backed table shares its FileIndex across queries; this is
+    // the path-based equivalent. The Lake staging key already
+    // fingerprints the SOURCE lake, and a regenerated source yields a
+    // new root, so a stale memo entry can only describe a root that no
+    // longer receives reads.
+    eventsFrames.getOrElseUpdate((spark, root), spark.read.parquet(root))
   }
 
   private val eventsFrames =
@@ -204,7 +213,7 @@ object Tables {
   }
 
   def eventsUnifiedTable(spark: SparkSession, dir: String): String = {
-    plans.EventTimeDayPruning.install(spark)
+    plans.install(spark)
     val root = Lake.staged(s"unified_lake_v2|$dir|$bucketTargetBytes",
         Seq(s"$dir/events.parquet")) { p =>
       import org.apache.spark.sql.functions._
@@ -322,7 +331,7 @@ object Tables {
     */
   def eventsMultiTagDayTable(spark: SparkSession, dir: String): String = {
     import org.apache.spark.sql.functions._
-    plans.EventTimeDayPruning.install(spark)
+    plans.install(spark)
     val root = Lake.staged(s"multitag_day_lake_v2|$dir|$bucketTargetBytes",
         Seq(s"$dir/events.parquet")) { p =>
       val width = math.max(spark.sparkContext.defaultParallelism,

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** DML semantics over an immutable lake (reference: dml/delete.slt,
   * dml/update_field.slt, dml/update_tag.slt, data_tests/data_ttl.slt).
@@ -76,10 +77,12 @@ object Dml {
     *
     * The lake at `root` must be the floor-day layout
     * ([[graft.Tables.dayOfNsSql]]): `day=YYYY-MM-DD/` directories whose
-    * files hold `ts` as BIGINT nanos.
+    * files hold `ts` as BIGINT nanos. A caller that knows the schema of
+    * those files (a copy of a layout it already read) passes it as
+    * `fileSchema`, and the boundary read runs no schema-inference job.
     */
   def expireDays(spark: org.apache.spark.sql.SparkSession, root: String,
-                 cutoffNs: Long): ExpireStats = {
+                 cutoffNs: Long, fileSchema: Option[StructType] = None): ExpireStats = {
     import org.apache.hadoop.fs.Path
     val nsPerDay = graft.Tables.NsPerDay
     val cutDay = Math.floorDiv(cutoffNs, nsPerDay)
@@ -117,7 +120,7 @@ object Dml {
         // the kept-row count rides the write as an observed metric
         // instead of a second job re-reading the rewrite
         val kept = Observation()
-        spark.read.parquet(dir.toString).filter(col("ts") >= cutoffNs)
+        readParquet(spark, dir.toString, fileSchema).filter(col("ts") >= cutoffNs)
           .observe(kept, count(lit(1)).as("rows"))
           .write.mode("overwrite").parquet(tmp.toString)
         boundaryKept = kept.get("rows").asInstanceOf[Long]
@@ -171,18 +174,20 @@ object Dml {
     *   - without, round-robin `repartition` for pure size leveling.
     * Returns the target file count. At 100 TB this runs per partition
     * directory (compact only partitions whose file count or avg size
-    * crossed a threshold), never the whole table at once.
+    * crossed a threshold), never the whole table at once. `fileSchema`,
+    * when the caller knows it, spares the schema-inference job.
     */
   def compact(spark: org.apache.spark.sql.SparkSession, inDir: String,
               outDir: String, targetBytesPerFile: Long = 128L << 20,
-              sortCols: Seq[String] = Seq.empty): Int = {
+              sortCols: Seq[String] = Seq.empty,
+              fileSchema: Option[StructType] = None): Int = {
     require(targetBytesPerFile > 0, "targetBytesPerFile must be positive")
     val path = new org.apache.hadoop.fs.Path(inDir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = fs.listStatus(path).filter(_.isFile)
       .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetBytesPerFile).toInt)
-    val df = spark.read.parquet(inDir)
+    val df = readParquet(spark, inDir, fileSchema)
     val out =
       if (sortCols.nonEmpty)
         df.repartitionByRange(nFiles, sortCols.map(col): _*)
@@ -191,6 +196,11 @@ object Dml {
     out.write.mode("overwrite").parquet(outDir)
     nFiles
   }
+
+  /** A parquet read with the schema the caller knows, else inferred. */
+  private def readParquet(spark: org.apache.spark.sql.SparkSession, path: String,
+                          schema: Option[StructType]): DataFrame =
+    schema.foldLeft(spark.read)(_.schema(_)).parquet(path)
 
   /** TTL retention on the UNIFIED catalog table (day-partitioned +
     * tag-bucketed + series-sorted — [[graft.Tables.eventsUnifiedTable]]):

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -57,10 +56,10 @@ import org.apache.spark.sql.types.{DateType, IntegerType, LongType, StringType, 
   * rather than an always-false filter, so an arithmetic corner can only
   * cost pruning, never rows.
   *
-  * Registered through `spark.experimental.extraOptimizations` (installed
-  * by [[graft.Tables]] on first events read — the per-session form) and
-  * via `GraftExtensions.injectOptimizerRule` (the cluster deployment
-  * form). Negative control: excluding the rule (ContractSpec) makes the
+  * Registered through `spark.experimental.extraOptimizations` by
+  * [[graft.plans.install]] (the per-session form, run on every events
+  * read and lane entry) and via `GraftExtensions.injectOptimizerRule`
+  * (the cluster deployment form). Negative control: excluding the rule (ContractSpec) makes the
   * same one-day query list every partition again.
   */
 object EventTimeDayPruning extends Rule[LogicalPlan] with PredicateHelper {
@@ -68,12 +67,6 @@ object EventTimeDayPruning extends Rule[LogicalPlan] with PredicateHelper {
   private val UsPerDay = 86400000000L
   private val MaxUs = (Long.MaxValue - 999L) / 1000L // µs whose ns image fits a Long
   private val MaxRanges = 32
-
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-  }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan transform {
     case f @ Filter(cond, lr: LogicalRelation) =>

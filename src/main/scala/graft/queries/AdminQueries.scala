@@ -213,7 +213,8 @@ object AdminQueries {
         require(stats.droppedDays == days.count(_ < mid) && stats.boundaryRewritten,
           s"TTL-policy expiry wrong: $stats for cutoff $mid+12h over ${days.size} days")
       } finally deleteTree(eroot)
-      s.read.parquet(root.toString)
+      // the copy has the primary layout's schema: no inference job
+      s.read.schema(Tables.eventsDayLake(s, dir).schema).parquet(root.toString)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           (sum(round(col("value") * 100).cast("long")).cast("double") / 100.0)

@@ -10,6 +10,22 @@ import graft.sources.LineProtocol
   * is validated as a full round-trip — events rows are rendered to line
   * protocol, parsed back by graft.sources.LineProtocol, and the oracle
   * recomputes the original values directly.
+  *
+  * `localCheckpoint` policy (the seven wire round-trip lanes whose
+  * global sort sits directly on the decode). Each decode is a Dataset
+  * `flatMap` (or, for OpenTSDB JSON, an `explode`), so no size estimate
+  * survives it: [[graft.plans.SmallSortPlanning]] declines there, and
+  * the sort keeps Spark's range exchange at every scale. That exchange
+  * first runs a boundary-sampling job over its whole input, which would
+  * run the render+encode+decode chain a second time. A lazy
+  * `localCheckpoint(false)` between the decode and the sort makes the
+  * sampling job the one decode pass; the sort's map stage reads its
+  * blocks. The trade: lineage stops at the checkpoint, and the blocks
+  * live only on the executor that computed them, so an executor lost
+  * after the sampling job fails the action instead of recomputing the
+  * decode. The exposure is that one action (the checkpoint is built and
+  * read inside it). A deployment that must survive executor loss swaps
+  * each site for `persist(DISK_ONLY)`, which keeps the single decode.
   */
 object IngestQueries {
 
@@ -31,11 +47,7 @@ object IngestQueries {
           col("fields")("value").cast("double").as("value"),
           expr("cast(substring(fields['n'], 1, length(fields['n']) - 1) AS BIGINT)").as("n"),
           col("ts").as("ts_us"))
-        // one parse per action: the global sort's range-boundary sample
-        // otherwise re-executes the whole render+parse chain (same fix
-        // as ts_otlp_traces below, applied to every wire round-trip
-        // lane whose sort sits directly on the decode — guide §2.4)
-        .localCheckpoint(false)
+        .localCheckpoint(false) // one parse per action: the policy above
         .orderBy("event_id")
     }),
 
@@ -53,7 +65,7 @@ object IngestQueries {
         .select(col("tags")("event_id").cast("long").as("event_id"),
           col("metric"), col("ts").as("ts_us"), col("value"),
           col("tags")("user_id").cast("long").as("user_id"))
-        .localCheckpoint(false) // one parse per action (see ts_ingest_lp)
+        .localCheckpoint(false) // one parse per action: the policy above
         .orderBy("event_id")
     }),
 
@@ -70,7 +82,7 @@ object IngestQueries {
         .select(col("tags")("event_id").cast("long").as("event_id"),
           col("metric"), col("ts").as("ts_us"), col("value"),
           col("tags")("user_id").cast("long").as("user_id"))
-        .localCheckpoint(false) // one parse per action (see ts_ingest_lp)
+        .localCheckpoint(false) // one parse per action: the policy above
         .orderBy("event_id")
     }),
 
@@ -101,7 +113,7 @@ object IngestQueries {
           col("numFields")("value").as("value"),
           col("numFields")("u.id").as("user_id_f"),
           col("boolFields")("ok").as("ok"))
-        .localCheckpoint(false) // one parse per action (see ts_ingest_lp)
+        .localCheckpoint(false) // one parse per action: the policy above
         .orderBy("event_id")
     }),
 
@@ -126,7 +138,7 @@ object IngestQueries {
           col("numFields")("value").as("value"),
           col("numFields")("n.chars").as("chars_f"),
           col("strFields")("lvl").as("lvl"))
-        .localCheckpoint(false) // one parse per action (see ts_ingest_lp)
+        .localCheckpoint(false) // one parse per action: the policy above
         .orderBy("event_id")
     }),
 
@@ -205,7 +217,7 @@ object IngestQueries {
           col("labels"), col("ts_ns"),
           regexp_extract(col("msg"), "value=(.+)$", 1).cast("double")
             .as("value"))
-        .localCheckpoint(false) // one decode per action (see ts_ingest_lp)
+        .localCheckpoint(false) // one decode per action: the policy above
         .orderBy("event_id")
     }),
 
@@ -249,11 +261,8 @@ object IngestQueries {
           col("kind"), col("start_ns"), col("end_ns"),
           regexp_extract(col("attrs"), "user_id=(\\d+)", 1).cast("long")
             .as("user_id"))
-        // materialize the decoded spans before the global sort: the
-        // range exchange's boundary-sampling pass otherwise re-executes
-        // the whole encode+decode chain (no exchange below it to reuse)
-        // — wire codec ran twice per action (guide §2.4 / r14 manifest
-        // discipline; QBench showed two equal ~0.42 s jobs).
+        // one encode+decode per action: the policy above (QBench showed
+        // two equal ~0.42 s jobs before the checkpoint)
         .localCheckpoint(false)
         .orderBy("event_id")
     }),

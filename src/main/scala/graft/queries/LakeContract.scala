@@ -210,8 +210,7 @@ object LakeContract {
       import org.apache.spark.sql.functions._
       val days = Tables.eventsLakeDays(s, dir) // O(days) directory listing
       val day0 = days.head
-      val lake = s.read.parquet(Tables.eventsLakeRoot(s, dir))
-      val q = lake.filter(col("day") === day0)
+      val q = Tables.eventsDayLake(s, dir).filter(col("day") === day0)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           (sum(round(col("value") * 100).cast("long")).cast("double") / 100.0)
@@ -524,7 +523,12 @@ object LakeContract {
       val mid = days(days.size / 2)
       val cutoffNs = java.time.LocalDate.parse(mid).toEpochDay * Tables.NsPerDay +
         Tables.NsPerDay / 2
-      val stats = graft.operators.Dml.expireDays(s, root.toString, cutoffNs)
+      // the copy has the primary layout's schema: every read of it below
+      // takes that schema instead of inferring it in a job of its own
+      // (`day` is in the directory names, not in the files)
+      val lakeSchema = Tables.eventsDayLake(s, dir).schema
+      val stats = graft.operators.Dml.expireDays(s, root.toString, cutoffNs,
+        fileSchema = Some(Tables.eventsNanos(s, dir).schema))
       val remaining = Option(root.toFile.listFiles()).getOrElse(Array.empty)
         .filter(f => f.isDirectory && f.getName.startsWith("day="))
         .map(_.getName.stripPrefix("day=")).sorted.toSeq
@@ -532,7 +536,7 @@ object LakeContract {
         s"TTL listing wrong: expected days >= $mid, lake has ${remaining.mkString(",")}")
       require(stats.droppedDays == days.count(_ < mid) && stats.boundaryRewritten,
         s"TTL stats wrong: $stats for cutoff $mid+12h over ${days.size} days")
-      s.read.parquet(root.toString)
+      s.read.schema(lakeSchema).parquet(root.toString)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           (sum(round(col("value") * 100).cast("long")).cast("double") / 100.0)
@@ -565,11 +569,15 @@ object LakeContract {
       val dayDir = root.resolve(s"day=$d1")
       def partFiles() = Option(dayDir.toFile.listFiles()).getOrElse(Array.empty)
         .count(_.getName.startsWith("part-"))
+      // every read of the copy takes the primary layout's known schema
+      // (`day` is in the directory names, not in the files)
+      val lakeSchema = Tables.eventsDayLake(s, dir).schema
+      val fileSchema = Tables.eventsNanos(s, dir).schema
       // fragment: one day re-written as 16 micro-batch-sized files,
       // written beside the dir (a dir cannot be overwritten from a scan
       // of itself) and swapped in
       val frag = java.nio.file.Files.createTempDirectory("graft_compact_frag")
-      s.read.parquet(dayDir.toString).repartition(16)
+      s.read.schema(fileSchema).parquet(dayDir.toString).repartition(16)
         .write.mode("overwrite").parquet(frag.toString)
       swapFilesIn(frag, dayDir)
       val fragmented = partFiles()
@@ -577,13 +585,13 @@ object LakeContract {
       // compact THAT directory back, series-key sorted
       val out = java.nio.file.Files.createTempDirectory("graft_compact_out")
       val target = graft.operators.Dml.compact(s, dayDir.toString, out.toString,
-        sortCols = Seq("event_type", "ts"))
+        sortCols = Seq("event_type", "ts"), fileSchema = Some(fileSchema))
       swapFilesIn(out, dayDir)
       val after = partFiles()
       require(after == target && after < fragmented,
         s"compaction did not level the day: $fragmented -> $after files (target $target)")
       // the compacted lake must still answer and prune like the primary
-      val q = s.read.parquet(root.toString)
+      val q = s.read.schema(lakeSchema).parquet(root.toString)
         .filter(col("day") === d1)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),

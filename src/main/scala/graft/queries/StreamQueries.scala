@@ -913,7 +913,7 @@ object StreamQueries {
     // (e.g. OVERWRITE of batch-scoped sub-partitions or a batch_id
     // dedup column); the replay here runs each batch exactly once.
     "stream_sink_unified" -> ((s, dir) => {
-      graft.plans.EventTimeDayPruning.install(s)
+      graft.plans.install(s)
       val root = Files.createTempDirectory("graft_stream_unified")
       val tbl = s"graft_stream_unified_${System.nanoTime()}"
       // same input-derived capacity rule as the batch-staged unified
