@@ -21,10 +21,9 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    // ERROR, not WARN: the per-query function re-registration WARNs land
-    // on stderr DURING the run; if the harness merges streams they could
-    // interleave after the final stdout JSON line. Nothing bench-relevant
-    // logs below ERROR.
+    // ERROR, not WARN: WARNs land on stderr DURING the run; if the
+    // harness merges streams they could interleave after the final
+    // stdout JSON line. Nothing bench-relevant logs below ERROR.
     spark.sparkContext.setLogLevel("ERROR")
     // Full materialization without a collect: the noop sink executes the
     // whole plan (count() would let the optimizer prune projected
@@ -42,7 +41,6 @@ object Bench {
     // kernel-backed query isn't charged JVM warm-up it didn't cause
     try {
       import spark.implicits._
-      graft.functions.TextExpressions.register(spark)
       (1 to 5000).map(i => s"warm up the native text kernels pass $i").toDF("text")
         .selectExpr("minhash_sig(text, 8) AS a", "char_ngram_set(text, 4) AS b",
           "simhash60(text) AS c", "word_shingle_set(text) AS d")

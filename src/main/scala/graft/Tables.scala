@@ -73,11 +73,8 @@ object Tables {
     * predicates still prune because [[graft.plans.EventTimeDayPruning]]
     * re-derives the partition filter below the projection.
     */
-  def eventsNanos(spark: SparkSession, dir: String): DataFrame = {
-    if (sys.env.get("SPARK_GRAFT_EVENTS_LAYOUT").contains("flat"))
-      return rawEventsNanos(spark, dir) // measurement bypass, not a mode
+  def eventsNanos(spark: SparkSession, dir: String): DataFrame =
     eventsDayLake(spark, dir).drop("day")
-  }
 
   /** The day-partitioned primary events layout ([[eventsLakeRoot]]) as
     * one relation, `day` partition column kept — what a lane that

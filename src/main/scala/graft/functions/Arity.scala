@@ -21,13 +21,17 @@ object Arity {
         "docroot" -> "https://spark.apache.org/docs/latest"),
       None)
 
-  def unary(name: String)(f: Expression => Expression): Seq[Expression] => Expression = {
-    case Seq(a) => f(a)
-    case other  => throw wrongArgs(name, 1, other.length)
-  }
+  /** `unary(f)(name)`: the builder of the one-argument function `name`. */
+  def unary(f: Expression => Expression): String => Seq[Expression] => Expression =
+    name => {
+      case Seq(a) => f(a)
+      case other  => throw wrongArgs(name, 1, other.length)
+    }
 
-  def binary(name: String)(f: (Expression, Expression) => Expression): Seq[Expression] => Expression = {
-    case Seq(a, b) => f(a, b)
-    case other     => throw wrongArgs(name, 2, other.length)
-  }
+  /** `binary(f)(name)`: the builder of the two-argument function `name`. */
+  def binary(f: (Expression, Expression) => Expression): String => Seq[Expression] => Expression =
+    name => {
+      case Seq(a, b) => f(a, b)
+      case other     => throw wrongArgs(name, 2, other.length)
+    }
 }

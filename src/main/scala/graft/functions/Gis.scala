@@ -3,7 +3,6 @@ package graft.functions
 import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 
 /** Minimal planar GIS support — cnosdb's st_* surface (reference
   * query_server/query/src/extension/expr/scalar_function/gis/:
@@ -14,8 +13,8 @@ import org.apache.spark.sql.functions._
   * Geometries: POINT, LINESTRING, POLYGON (planar, Euclidean, like the
   * reference's geo-crate usage). Parsing/predicates run as native
   * Catalyst expressions (GisExpressions) inside whole-stage codegen —
-  * matching the text/vector kernels — built directly into Columns via
-  * the graftshim bridge (no registry side effect, no active-session
+  * matching the text/vector kernels — built directly into Columns by
+  * [[Native.call]] (no registry side effect, no active-session
   * dependency). Null WKT yields null, per nullSafeEval.
   */
 object Gis {
@@ -334,42 +333,19 @@ object Gis {
 
   // ---- Column API (st_* functions) ----
   // Native Catalyst expressions (GisExpressions — codegen'd static
-  // calls, same geometry semantics), wrapped into public Columns via
-  // the org.apache.spark.sql.graftshim bridge. Built DIRECTLY from the
-  // expression tree: no function-registry side effect and no dependence
-  // on which SparkSession is active on the constructing thread — the
-  // Column is valid in whatever session later executes the plan.
+  // calls, same geometry semantics) built through the Native catalog,
+  // straight from the expression tree: no function-registry side
+  // effect and no dependence on which SparkSession is active on the
+  // constructing thread.
 
-  import org.apache.spark.sql.graftshim.ColumnBridge.{column => exprColumn, expression => exprOf}
-  import org.apache.spark.sql.catalyst.expressions.Not
-
-  val stDistance: (Column, Column) => Column =
-    (c1, c2) => exprColumn(StDistance(exprOf(c1), exprOf(c2)))
-
-  val stArea: Column => Column =
-    c => exprColumn(StArea(exprOf(c)))
-
-  val stIntersects: (Column, Column) => Column =
-    (c1, c2) => exprColumn(StIntersects(exprOf(c1), exprOf(c2)))
-
-  val stDisjoint: (Column, Column) => Column =
-    (c1, c2) => exprColumn(Not(StIntersects(exprOf(c1), exprOf(c2))))
-
-  val stWithin: (Column, Column) => Column =
-    (c1, c2) => exprColumn(StWithin(exprOf(c1), exprOf(c2)))
-
-  val stContains: (Column, Column) => Column =
-    (c1, c2) => exprColumn(StWithin(exprOf(c2), exprOf(c1)))
-
-  val stEquals: (Column, Column) => Column =
-    (c1, c2) => exprColumn(StEquals(exprOf(c1), exprOf(c2)))
-
-  val stAsBinary: Column => Column =
-    c => exprColumn(StAsBinary(exprOf(c)))
-
-  val stGeomFromWkb: Column => Column =
-    c => exprColumn(StGeomFromWkb(exprOf(c)))
-
-  val stGeomFromWkt: Column => Column =
-    c => exprColumn(StGeomFromWkt(exprOf(c)))
+  val stDistance: (Column, Column) => Column = Native.call("st_distance", _, _)
+  val stArea: Column => Column = Native.call("st_area", _)
+  val stIntersects: (Column, Column) => Column = Native.call("st_intersects", _, _)
+  val stDisjoint: (Column, Column) => Column = Native.call("st_disjoint", _, _)
+  val stWithin: (Column, Column) => Column = Native.call("st_within", _, _)
+  val stContains: (Column, Column) => Column = Native.call("st_contains", _, _)
+  val stEquals: (Column, Column) => Column = Native.call("st_equals", _, _)
+  val stAsBinary: Column => Column = Native.call("st_asbinary", _)
+  val stGeomFromWkb: Column => Column = Native.call("st_geomfromwkb", _)
+  val stGeomFromWkt: Column => Column = Native.call("st_geomfromwkt", _)
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -150,36 +149,4 @@ case class StGeomFromWkb(child: Expression) extends UnaryExpression {
     defineCodeGen(ctx, ev, a => s"graft.functions.GisKernels.wkbToWkt($a)")
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "st_geomfromwkb"
-}
-
-object GisExpressions {
-  /** Idempotent per-session registration so `call_function("st_*")`
-    * resolves — same temp-function pattern as VectorExpressions.
-    */
-  def register(spark: SparkSession): Unit = {
-    val r = spark.sessionState.functionRegistry
-    r.createOrReplaceTempFunction("st_distance",
-      Arity.binary("st_distance")(StDistance), "built-in")
-    r.createOrReplaceTempFunction("st_intersects",
-      Arity.binary("st_intersects")(StIntersects), "built-in")
-    r.createOrReplaceTempFunction("st_within",
-      Arity.binary("st_within")(StWithin), "built-in")
-    r.createOrReplaceTempFunction("st_equals",
-      Arity.binary("st_equals")(StEquals), "built-in")
-    r.createOrReplaceTempFunction("st_area",
-      Arity.unary("st_area")(StArea), "built-in")
-    r.createOrReplaceTempFunction("st_asbinary",
-      Arity.unary("st_asbinary")(StAsBinary), "built-in")
-    r.createOrReplaceTempFunction("st_geomfromwkb",
-      Arity.unary("st_geomfromwkb")(StGeomFromWkb), "built-in")
-    r.createOrReplaceTempFunction("st_geomfromwkt",
-      Arity.unary("st_geomfromwkt")(StGeomFromWkt), "built-in")
-    // derived predicates (reference gis/mod.rs exposes them as first-class
-    // SQL names): contains = within with flipped args, disjoint = NOT intersects
-    r.createOrReplaceTempFunction("st_contains",
-      Arity.binary("st_contains")((a, b) => StWithin(b, a)), "built-in")
-    r.createOrReplaceTempFunction("st_disjoint",
-      Arity.binary("st_disjoint")((a, b) =>
-        org.apache.spark.sql.catalyst.expressions.Not(StIntersects(a, b))), "built-in")
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -160,16 +159,4 @@ case class ZorderKey(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
   override def prettyName: String = "zorder_key"
-}
-
-object ScalarExpressions {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("num_gcd",
-      Arity.binary("num_gcd")(NumGcd), "built-in")
-    reg.createOrReplaceTempFunction("num_lcm",
-      Arity.binary("num_lcm")(NumLcm), "built-in")
-    reg.createOrReplaceTempFunction("zorder_key",
-      Arity.binary("zorder_key")(ZorderKey), "built-in")
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StringType
@@ -49,10 +48,4 @@ object SessionFunctions {
 
   def currentRole(args: Seq[Expression]): Expression =
     zeroArg("current_role", () => confLiteral(RoleKey, null))(args)
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("current_tenant", currentTenant, "built-in")
-    reg.createOrReplaceTempFunction("current_role", currentRole, "built-in")
-  }
 }

@@ -857,40 +857,6 @@ case class WinnowSet(child: Expression)
 }
 
 object TextExpressions {
-  /** Idempotent per-session registration (same pattern as
-    * VectorExpressions.register).
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("char_ngram_set",
-      Arity.binary("char_ngram_set")(CharNgramSet), "built-in")
-    reg.createOrReplaceTempFunction("array_overlap_count",
-      Arity.binary("array_overlap_count")(ArrayOverlapCount), "built-in")
-    reg.createOrReplaceTempFunction("minhash_sig",
-      Arity.binary("minhash_sig")(MinhashSig), "built-in")
-    reg.createOrReplaceTempFunction("word_shingle_set",
-      Arity.unary("word_shingle_set")(WordShingleSet), "built-in")
-    reg.createOrReplaceTempFunction("simhash60",
-      Arity.unary("simhash60")(SimHash60), "built-in")
-    reg.createOrReplaceTempFunction("word_set_count",
-      Arity.binary("word_set_count")(WordSetCount), "built-in")
-    reg.createOrReplaceTempFunction("char_set_count",
-      Arity.binary("char_set_count")(CharSetCount), "built-in")
-    reg.createOrReplaceTempFunction("non_alnum_space_count",
-      Arity.unary("non_alnum_space_count")(NonAlnumSpaceCount), "built-in")
-    reg.createOrReplaceTempFunction("bpe_token_count",
-      Arity.unary("bpe_token_count")(BpeTokenCount), "built-in")
-    reg.createOrReplaceTempFunction("rep_stats",
-      Arity.unary("rep_stats")(RepStats), "built-in")
-    reg.createOrReplaceTempFunction("ws_normalize",
-      Arity.unary("ws_normalize")(WsNormalize), "built-in")
-    reg.createOrReplaceTempFunction("winnow_set",
-      Arity.unary("winnow_set")(WinnowSet), "built-in")
-    reg.createOrReplaceTempFunction("dsir_score",
-      Arity.binary("dsir_score")(DsirScore), "built-in")
-    reg.createOrReplaceTempFunction("alpha_word_count",
-      Arity.unary("alpha_word_count")(AlphaWordCount), "built-in")
-    reg.createOrReplaceTempFunction("bpe_seg_count",
-      Arity.binary("bpe_seg_count")(BpeSegCount), "built-in")
-  }
+  /** [[Native.register]], kept under this name for its existing callers. */
+  def register(spark: SparkSession): Unit = Native.register(spark)
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -647,27 +646,4 @@ case class NearestCellCoarse(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
   override def prettyName: String = "nearest_cell_2l"
-}
-
-object VectorExpressions {
-  /** Idempotent per-session registration so `call_function("vec_dot")`
-    * resolves. Temp-function scope keeps the engine a library — no
-    * SparkSessionExtensions wiring required of the caller.
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", Arity.binary("vec_dot")(VecDot), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot_i8", Arity.binary("vec_dot_i8")(VecDotI8), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_encode", Arity.binary("pq_encode")(PqEncodeCodes), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bin_sig", Arity.unary("bin_sig")(BinarySignature), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nearest_cell", Arity.binary("nearest_cell")(NearestCell), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nearest_cell_2l", Arity.binary("nearest_cell_2l")(NearestCellCoarse), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nearest_cell_pruned", Arity.binary("nearest_cell_pruned")(NearestCellPruned), "built-in")
-  }
 }

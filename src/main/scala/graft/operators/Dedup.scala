@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Native
+
 /** Deduplication operators for LLM training-data pipelines (SURVEY.md
   * §2.4): exact (hash), MinHash+LSH banding, SimHash, char-n-gram
   * Jaccard.
@@ -65,7 +67,6 @@ object Dedup {
     */
   def minhashSignature(df: DataFrame, idCol: String, textCol: String,
                        numHashes: Int): DataFrame = {
-    graft.functions.TextExpressions.register(df.sparkSession)
     // Pre-filter on the kernel's EXACT null condition (< 3 space-split
     // tokens → no shingles) instead of filtering the kernel output for
     // null: Catalyst pushes an output-null filter below the projection
@@ -77,7 +78,7 @@ object Dedup {
     df.filter(col(textCol).isNotNull &&
         size(split(col(textCol), " ", -1)) >= 3)
       .select(col(idCol),
-        call_function("minhash_sig", col(textCol), lit(numHashes)).as("__sig"))
+        Native.call("minhash_sig", col(textCol), lit(numHashes)).as("__sig"))
       .select(col(idCol) +:
         (0 until numHashes).map(i => element_at(col("__sig"), i + 1).as(s"mh$i")): _*)
   }
@@ -214,7 +215,6 @@ object Dedup {
                               idCol: String, textCol: String,
                               numHashes: Int = 8, bands: Int = 2,
                               threshold: Double = 0.5): DataFrame = {
-    graft.functions.TextExpressions.register(existing.sparkSession)
     val bhE = lshBandHashes(minhashSignature(existing, idCol, textCol, numHashes),
       idCol, numHashes, bands).withColumnRenamed(idCol, "__eid")
     val bhI = lshBandHashes(minhashSignature(incoming, idCol, textCol, numHashes),
@@ -222,13 +222,13 @@ object Dedup {
     val cand = bhI.join(bhE, Seq("band", "band_hash"))
       .select(col("__iid"), col("__eid")).distinct()
     val shE = existing.select(col(idCol).as("__eid"),
-      call_function("word_shingle_set", col(textCol)).as("__she"))
+      Native.call("word_shingle_set", col(textCol)).as("__she"))
     val shI = incoming.select(col(idCol).as("__iid"),
-      call_function("word_shingle_set", col(textCol)).as("__shi"))
+      Native.call("word_shingle_set", col(textCol)).as("__shi"))
     val conf = shI.join(broadcast(cand), Seq("__iid"))
       .join(shE.join(broadcast(cand.select("__eid").distinct()), Seq("__eid")), Seq("__eid"))
       .withColumn("__inter",
-        call_function("array_overlap_count", col("__shi"), col("__she")))
+        Native.call("array_overlap_count", col("__shi"), col("__she")))
       .withColumn("__j",
         col("__inter") / (size(col("__shi")) + size(col("__she")) - col("__inter")))
       .filter(col("__j") >= threshold)
@@ -250,7 +250,6 @@ object Dedup {
                                  numHashes: Int, bands: Int,
                                  threshold: Double,
                                  maxBucketSize: Int): DataFrame = {
-    graft.functions.TextExpressions.register(df.sparkSession)
     val sig = minhashSignature(df, idCol, textCol, numHashes)
     val cands =
       lshCandidates(lshBandHashes(sig, idCol, numHashes, bands), idCol, maxBucketSize)
@@ -269,14 +268,14 @@ object Dedup {
     val slim = df.select(col(idCol), col(textCol))
     val withA = slim.join(broadcast(cands), col(idCol) === col("id_a"))
       .select(col("id_a"), col("id_b"),
-        call_function("word_shingle_set", col(textCol)).as("__sh_a"))
+        Native.call("word_shingle_set", col(textCol)).as("__sh_a"))
     val withB = slim.join(broadcast(cands), col(idCol) === col("id_b"))
       .select(col("id_a").as("__ja"), col("id_b").as("__jb"),
-        call_function("word_shingle_set", col(textCol)).as("__sh_b"))
+        Native.call("word_shingle_set", col(textCol)).as("__sh_b"))
     val pairs = withA.join(withB,
         col("id_a") === col("__ja") && col("id_b") === col("__jb"))
       .withColumn("__inter",
-        call_function("array_overlap_count", col("__sh_a"), col("__sh_b")))
+        Native.call("array_overlap_count", col("__sh_a"), col("__sh_b")))
       .withColumn("jaccard",
         col("__inter") / (size(col("__sh_a")) + size(col("__sh_b")) - col("__inter")))
     pairs
@@ -655,9 +654,8 @@ object Dedup {
     * into the scan projection.
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    graft.functions.TextExpressions.register(df.sparkSession)
     val g = df.select(col(idCol).as("id"),
-      call_function("char_ngram_set", col(textCol), lit(n)).as("g"))
+      Native.call("char_ngram_set", col(textCol), lit(n)).as("g"))
     val a = g.select(col("id").as("doc_a"), col("g").as("ga"))
     val b = g.select((col("id") - 1).as("doc_a"), col("g").as("gb"))
     // Contract: a pair where BOTH docs are shorter than n chars (two
@@ -666,7 +664,7 @@ object Dedup {
     // the same under spark.sql.ansi.enabled=true.
     val denom = size(col("ga")) + size(col("gb")) - col("inter")
     a.join(b, Seq("doc_a"))
-      .withColumn("inter", call_function("array_overlap_count", col("ga"), col("gb")))
+      .withColumn("inter", Native.call("array_overlap_count", col("ga"), col("gb")))
       .select(col("doc_a"), (col("doc_a") + 1).as("doc_b"),
         when(denom === 0, lit(null).cast("double"))
           .otherwise(round(col("inter") / denom, 6))
@@ -710,13 +708,12 @@ object Dedup {
     */
   def shingleContainment(df: DataFrame, idCol: String, textCol: String,
                          offset: Long): DataFrame = {
-    graft.functions.TextExpressions.register(df.sparkSession)
     val g = df.select(col(idCol).as("__id"),
-      call_function("word_shingle_set", col(textCol)).as("__sh"))
+      Native.call("word_shingle_set", col(textCol)).as("__sh"))
     val a = g.select(col("__id").as("doc_a"), col("__sh").as("sa"))
     val b = g.select((col("__id") - offset).as("doc_a"), col("__sh").as("sb"))
     a.join(b, Seq("doc_a"))
-      .withColumn("inter", call_function("array_overlap_count", col("sa"), col("sb")))
+      .withColumn("inter", Native.call("array_overlap_count", col("sa"), col("sb")))
       .select(col("doc_a"), (col("doc_a") + offset).as("doc_b"),
         when(size(col("sa")) === 0, lit(null).cast("double"))
           .otherwise(round(col("inter") / size(col("sa")), 6)).as("containment_a"),
@@ -732,9 +729,8 @@ object Dedup {
     * DuckDB oracle and the equivalence spec.
     */
   def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.TextExpressions.register(df.sparkSession)
     df.select(col(idCol),
-      call_function("simhash60", col(textCol)).as("simhash"))
+      Native.call("simhash60", col(textCol)).as("simhash"))
   }
 
   /** SimHash near-dup pairs by Hamming distance — the Google-style
@@ -757,14 +753,13 @@ object Dedup {
   def simhashNearDups(df: DataFrame, idCol: String, textCol: String,
                       maxHamming: Int = 3,
                       maxBucketSize: Int = 1000): DataFrame = {
-    graft.functions.TextExpressions.register(df.sparkSession)
     // pre-filter on the only null source (null text): an output-null
     // filter is pushed below the projection by substitution and would
     // evaluate the simhash kernel twice per row (the minhashSignature
     // lesson); simhash60 never returns null for non-null input
     val sigs = df.filter(col(textCol).isNotNull)
       .select(col(idCol),
-        conv(call_function("simhash60", col(textCol)), 16, 10).cast("long").as("__sig"))
+        conv(Native.call("simhash60", col(textCol)), 16, 10).cast("long").as("__sig"))
     sigHammingPairs(sigs, idCol, "__sig", 60, maxHamming, maxBucketSize)
   }
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Native
+
 /** Similarity search over embedding columns (SURVEY.md §2.4).
   *
   * Brute-force top-k is the broadcast(query-set) × scan baseline — no
@@ -17,19 +19,8 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Σ xᵢyᵢ — native Catalyst expression (VecDot, whole-stage codegen)
-    * when a session is active; lambda-HOF fallback otherwise. The HOF
-    * form is interpreted and allocates per row, so the native path is
-    * what runs in every query.
-    */
-  def dot(x: Column, y: Column): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) =>
-        graft.functions.VectorExpressions.register(s)
-        call_function("vec_dot", x, y)
-      case None =>
-        aggregate(zip_with(x, y, (p, q) => p * q), lit(0.0), (acc, v) => acc + v)
-    }
+  /** Σ xᵢyᵢ — native Catalyst expression (VecDot, whole-stage codegen). */
+  def dot(x: Column, y: Column): Column = Native.call("vec_dot", x, y)
 
   /** √(v·v) — precompute once per vector, never per pair. */
   def norm(v: Column): Column = sqrt(dot(v, v))
@@ -147,26 +138,17 @@ object Similarity {
     * shuffle — the 100 TB signature pass is embarrassingly parallel,
     * and downstream distance is XOR+popcount on one machine word.
     *
-    * Native `bin_sig` kernel when a session is active (one primitive
-    * pass, no array cast); the composed 64-term fallback exists for
-    * sessionless use but measured 13 µs/PAIR at sf10 — Catalyst
-    * collapses the projection above the broadcast join and re-evaluates
-    * it per (query, row) pair, the PqEncodeCodes lesson again.
+    * Native `bin_sig` kernel: one primitive pass, no array cast (a
+    * composed 64-term `when` chain measured 13 µs/PAIR at sf10 —
+    * Catalyst collapses the projection above the broadcast join and
+    * re-evaluates it per (query, row) pair, the PqEncodeCodes lesson
+    * again).
     */
   def binarySig(vec: Column, dims: Int): Column = {
     require(dims > 0 && dims <= 64, s"binarySig packs into one 64-bit word, got dims=$dims")
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) =>
-        graft.functions.VectorExpressions.register(s)
-        // Slice to `dims` BEFORE the kernel so the native and composed
-        // paths agree when dims < vector length (and a >64-dim vector
-        // with dims <= 64 packs its prefix instead of throwing).
-        call_function("bin_sig", slice(vec, 1, dims))
-      case None =>
-        (0 until dims).map { i =>
-          when(element_at(vec, i + 1) > 0, lit(1L << i)).otherwise(lit(0L))
-        }.reduce(_.bitwiseOR(_))
-    }
+    // Slice to `dims` BEFORE the kernel so a vector longer than `dims`
+    // (even past 64 dims) packs its prefix instead of throwing.
+    Native.call("bin_sig", slice(vec, 1, dims))
   }
 
   /** Hamming-distance ANN over sign-bit signatures: for each query, the
@@ -684,14 +666,12 @@ object Similarity {
       // object) computes the identical exact-integer (d, cell)
       // tie-broken assignment as a pure projection — no join, no
       // aggregate, no shuffle, ~2 s for the same input.
-      val spark = corpus.sparkSession
-      graft.functions.VectorExpressions.register(spark)
       val dims = centroids.head.length
       require(centroids.forall(_.length == dims),
         "assignExactCells: ragged centroid table")
       val spec = lit(s"${centroids.length};$dims;" +
         centroids.flatten.mkString(","))
-      base.withColumn("cell", call_function("nearest_cell", col("v"), spec))
+      base.withColumn("cell", Native.call("nearest_cell", col("v"), spec))
         .drop("vq", "sd")
     } else {
       // Large k (the cell-count rules k ∝ n make flat assignment n·k —
@@ -709,9 +689,7 @@ object Similarity {
       // data. The explicitly-approximate coarse assignment remains
       // available as [[assignCellsCoarse]].
       val (spec, _) = coarseSpec(centroids)
-      val spark = corpus.sparkSession
-      graft.functions.VectorExpressions.register(spark)
-      base.withColumn("cell", call_function("nearest_cell_pruned", col("v"), spec))
+      base.withColumn("cell", Native.call("nearest_cell_pruned", col("v"), spec))
         .select(col(idCol), col("v"), col("cell"))
     }
   }
@@ -723,7 +701,7 @@ object Similarity {
     * without) — the pruned (exact) kernel consumes the first, the
     * coarse (approximate) kernel the second.
     */
-  private def coarseSpec(centroids: Array[Array[Long]]): (Column, Column) = {
+  private[graft] def coarseSpec(centroids: Array[Array[Long]]): (Column, Column) = {
     val dims = centroids.head.length
     require(centroids.forall(_.length == dims),
       "assignExactCells: ragged centroid table")
@@ -770,11 +748,9 @@ object Similarity {
     */
   def assignCellsCoarse(corpus: DataFrame, idCol: String, vecCol: String,
                         centroids: Array[Array[Long]]): DataFrame = {
-    val spark = corpus.sparkSession
-    graft.functions.VectorExpressions.register(spark)
     val (_, spec) = coarseSpec(centroids)
     corpus.select(col(idCol), col(vecCol).cast("array<double>").as("v"))
-      .withColumn("cell", call_function("nearest_cell_2l", col("v"), spec))
+      .withColumn("cell", Native.call("nearest_cell_2l", col("v"), spec))
       .select(col(idCol), col("v"), col("cell"))
   }
 
@@ -1139,18 +1115,8 @@ object Similarity {
       .select(col("blk"), col("id_a"), col("id_b"), (floor(col("cos") * 1e4) / 1e4).as("cos"))
   }
 
-  /** Σ qaᵢ·qbᵢ over int8 arrays — native exact-integer kernel
-    * (VecDotI8); lambda-HOF fallback for sessionless use.
-    */
-  private[graft] def dotI8(x: Column, y: Column): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) =>
-        graft.functions.VectorExpressions.register(s)
-        call_function("vec_dot_i8", x, y)
-      case None =>
-        aggregate(zip_with(x.cast("array<long>"), y.cast("array<long>"),
-          (p, q) => p * q), lit(0L), (acc, v) => acc + v)
-    }
+  /** Σ qaᵢ·qbᵢ over int8 arrays — native exact-integer kernel (VecDotI8). */
+  private[graft] def dotI8(x: Column, y: Column): Column = Native.call("vec_dot_i8", x, y)
 
   /** Product-quantization codebooks (Jégou et al., "Product
     * Quantization for Nearest Neighbor Search", TPAMI 2011): the vector
@@ -1217,11 +1183,10 @@ object Similarity {
           s"pqEncode: centroid $i has |cq|² past the 2^50 exact-integer budget")
       }
     }
-    graft.functions.VectorExpressions.register(corpus.sparkSession)
     val spec = lit(s"$m;$k;$sub;" + codebooks.flatten.flatten.mkString(","))
     corpus
       .select(col(idCol),
-        call_function("pq_encode", col(vecCol).cast("array<double>"), spec).as("__pq"))
+        Native.call("pq_encode", col(vecCol).cast("array<double>"), spec).as("__pq"))
       .select(
         col(idCol) +:
           ((0 until m).map(j => element_at(col("__pq"), j + 1).as(s"code_$j")) :+

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Native
+
 /** Text analysis for training-data curation (SURVEY.md §2.4): language
   * ID, quality scoring, token counting, fingerprinting. Everything is
   * codegen'd column arithmetic/regex — these run in the 100 TB ingest
@@ -26,11 +28,11 @@ object TextAnalysis {
     * pass per language.
     */
   private val langWordSets: Seq[(String, Column => Column)] = Seq(
-    "en" -> (t => call_function("word_set_count", t, lit("the,and,of,to,a,in,is,it"))),
-    "de" -> (t => call_function("word_set_count", t, lit("der,die,und,das,ein,ist,zu,den"))),
-    "es" -> (t => call_function("word_set_count", t, lit("el,la,de,que,y,los,es,en"))),
-    "fr" -> (t => call_function("word_set_count", t, lit("le,la,les,des,et,un,une,est"))),
-    "zh" -> (t => call_function("char_set_count", t, lit("的了是在我有"))))
+    "en" -> (t => Native.call("word_set_count", t, lit("the,and,of,to,a,in,is,it"))),
+    "de" -> (t => Native.call("word_set_count", t, lit("der,die,und,das,ein,ist,zu,den"))),
+    "es" -> (t => Native.call("word_set_count", t, lit("el,la,de,que,y,los,es,en"))),
+    "fr" -> (t => Native.call("word_set_count", t, lit("le,la,les,des,et,un,une,est"))),
+    "zh" -> (t => Native.call("char_set_count", t, lit("的了是在我有"))))
 
   /** n-gram/stopword heuristic language ID with a fixed priority order
     * for ties (en > de > es > fr > zh). Returns score columns + the
@@ -38,7 +40,6 @@ object TextAnalysis {
     * identical to the regex formulation (equivalence-spec-pinned).
     */
   def langId(df: DataFrame, textCol: String): DataFrame = {
-    graft.functions.TextExpressions.register(df.sparkSession)
     val scored = langWordSets.foldLeft(df) { case (d, (lang, f)) =>
       d.withColumn(s"s_$lang", f(col(textCol)).cast("long"))
     }
@@ -55,16 +56,15 @@ object TextAnalysis {
     * the native kernels, not the regex engine.
     */
   def qualityScore(df: DataFrame, textCol: String): DataFrame = {
-    graft.functions.TextExpressions.register(df.sparkSession)
     val t = col(textCol)
     df.withColumn("n_chars", length(t).cast("long"))
       .withColumn("n_tokens", size(split(t, " ")).cast("long"))
       .withColumn("mean_token_len",
         length(regexp_replace(t, " ", "")).cast("double") / col("n_tokens"))
       .withColumn("punct_ratio",
-        call_function("non_alnum_space_count", t).cast("double") / col("n_chars"))
+        Native.call("non_alnum_space_count", t).cast("double") / col("n_chars"))
       .withColumn("stopword_ratio",
-        call_function("word_set_count", t, lit("the,and,of,to,a,in,is,it")).cast("double")
+        Native.call("word_set_count", t, lit("the,and,of,to,a,in,is,it")).cast("double")
           / col("n_tokens"))
       // floor-quantized output: the score's inputs are deterministic
       // on any engine (exact-int divisions), but round() IMPLEMENTATIONS
@@ -82,25 +82,21 @@ object TextAnalysis {
     * class pattern).
     */
   def tokenCounts(df: DataFrame, textCol: String): DataFrame = {
-    graft.functions.TextExpressions.register(df.sparkSession)
     df.withColumn("n_ws_tokens", size(split(col(textCol), " ")).cast("long"))
       .withColumn("n_bpe_tokens",
-        call_function("bpe_token_count", col(textCol)).cast("long"))
+        Native.call("bpe_token_count", col(textCol)).cast("long"))
   }
 
   /** Whitespace-normalized md5 content fingerprint (first 16 hex).
     * Normalization runs in the single-pass `ws_normalize` kernel (the
     * regex-engine formulation it replaces is pinned equivalent in
-    * PipelineSpec and remains the DuckDB oracle's spelling); callers
-    * get kernel registration via [[fingerprintOf]] or their own
-    * `TextExpressions.register`.
+    * PipelineSpec and remains the DuckDB oracle's spelling).
     */
   def fingerprint(textCol: Column): Column =
-    substring(md5(call_function("ws_normalize", lower(textCol))), 1, 16)
+    substring(md5(Native.call("ws_normalize", lower(textCol))), 1, 16)
 
-  /** [[fingerprint]] with per-session kernel registration handled. */
+  /** `idCol` with the [[fingerprint]] of `textCol`. */
   def fingerprintOf(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.TextExpressions.register(df.sparkSession)
     df.select(col(idCol), fingerprint(col(textCol)).as("fingerprint"))
   }
 
@@ -118,12 +114,11 @@ object TextAnalysis {
     */
   def flagContaminated(corpus: DataFrame, idCol: String, textCol: String,
                        benchmark: DataFrame): DataFrame = {
-    graft.functions.TextExpressions.register(corpus.sparkSession)
     val bShingles = broadcast(benchmark
-      .select(explode(call_function("word_shingle_set", col(textCol))).as("sh"))
+      .select(explode(Native.call("word_shingle_set", col(textCol))).as("sh"))
       .distinct())
     val contaminated = corpus
-      .select(col(idCol), explode(call_function("word_shingle_set", col(textCol))).as("sh"))
+      .select(col(idCol), explode(Native.call("word_shingle_set", col(textCol))).as("sh"))
       .join(bShingles, Seq("sh"), "left_semi")
       .select(idCol).distinct()
       .withColumn("__c", lit(true))
@@ -150,9 +145,8 @@ object TextAnalysis {
     */
   def flagContaminatedBloom(corpus: DataFrame, idCol: String, textCol: String,
                             benchmark: DataFrame, fpp: Double = 0.01): DataFrame = {
-    graft.functions.TextExpressions.register(corpus.sparkSession)
     val bsh = benchmark
-      .select(explode(call_function("word_shingle_set", col(textCol))).as("sh"))
+      .select(explode(Native.call("word_shingle_set", col(textCol))).as("sh"))
       .distinct()
     val nShingles = math.max(1L, bsh.count())
     val bloom = bsh.stat.bloomFilter("sh", nShingles, fpp)
@@ -167,7 +161,7 @@ object TextAnalysis {
       shs != null && shs.exists(bloomB.value.mightContainString))
       .asNondeterministic()
     val cand = corpus
-      .select(col(idCol), call_function("word_shingle_set", col(textCol)).as("__shs"))
+      .select(col(idCol), Native.call("word_shingle_set", col(textCol)).as("__shs"))
       .filter(mightHit(col("__shs")))
     val contaminated = cand
       .select(col(idCol), explode(col("__shs")).as("sh"))
@@ -243,8 +237,7 @@ object TextAnalysis {
     * when the doc has no bigrams.
     */
   def repetitionStats(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.TextExpressions.register(df.sparkSession)
-    df.select(col(idCol), call_function("rep_stats", col(textCol)).as("st"))
+    df.select(col(idCol), Native.call("rep_stats", col(textCol)).as("st"))
       .select(col(idCol),
         col("st").getItem(0).as("total_bigrams"),
         col("st").getItem(1).as("dup_occurrences"),
@@ -471,11 +464,10 @@ object TextAnalysis {
     */
   def tokenizerFertility(df: DataFrame, textCol: String,
                          groupCols: Seq[String]): DataFrame = {
-    graft.functions.TextExpressions.register(df.sparkSession)
     df.groupBy(groupCols.map(col): _*)
       .agg(count(lit(1)).as("n_docs"),
         sum(size(split(col(textCol), " ")).cast("long")).as("total_words"),
-        sum(call_function("bpe_token_count", col(textCol)).cast("long"))
+        sum(Native.call("bpe_token_count", col(textCol)).cast("long"))
           .as("total_subword_tokens"),
         sum(octet_length(col(textCol)).cast("long")).as("total_bytes"))
       .withColumn("fertility",
@@ -671,7 +663,6 @@ object TextAnalysis {
     */
   def gopherFilter(df: DataFrame, idCol: String, textCol: String,
                    minWords: Int = 25, maxWords: Int = 100000): DataFrame = {
-    graft.functions.TextExpressions.register(df.sparkSession)
     val t = col(textCol)
     val base = df.select(
       col(idCol),
@@ -681,8 +672,8 @@ object TextAnalysis {
       (length(t) - length(regexp_replace(t, "#", ""))).cast("long").as("n_hash"),
       size(filter(split(t, "\n"), l => l.endsWith("..."))).cast("long").as("n_ellipsis"),
       size(filter(split(t, "\n"), l => l.startsWith("- "))).cast("long").as("n_bullet"),
-      call_function("alpha_word_count", t).as("n_alpha"),
-      call_function("word_set_count", t, lit("the,and,of,to,a,in,is,it"))
+      Native.call("alpha_word_count", t).as("n_alpha"),
+      Native.call("word_set_count", t, lit("the,and,of,to,a,in,is,it"))
         .cast("long").as("n_stop"))
     val rules = base
       .withColumn("r_word_count",
@@ -785,26 +776,22 @@ object TextAnalysis {
     * embarrassingly parallel pass it should be, no shuffle, no state.
     */
   def bpeApply(corpus: DataFrame, idCol: String, textCol: String,
-               merges: Seq[String]): DataFrame =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) =>
-        // native kernel: one pass per word, merge table parsed once —
-        // the composed HOF chain below is interpreted and measured 6×
-        // slower at sf10 (58.8 s vs the kernel)
-        graft.functions.TextExpressions.register(s)
-        require(merges.forall(m => !m.contains(";")),
-          s"bpeApply: merge tokens must not contain the ';' spec separator")
-        val spec = lit(merges.mkString(";"))
-        corpus.select(col(idCol),
-          element_at(call_function("bpe_seg_count", col(textCol), spec), 1)
-            .as("n_tokens_bpe"),
-          element_at(call_function("bpe_seg_count", col(textCol), spec), 2)
-            .as("n_words"))
-      case None => bpeApplyComposed(corpus, idCol, textCol, merges)
-    }
+               merges: Seq[String]): DataFrame = {
+    // native kernel: one pass per word, merge table parsed once — the
+    // composed HOF chain ([[bpeApplyComposed]]) is interpreted and
+    // measured 6× slower at sf10 (58.8 s vs the kernel)
+    require(merges.forall(m => !m.contains(";")),
+      s"bpeApply: merge tokens must not contain the ';' spec separator")
+    val spec = lit(merges.mkString(";"))
+    corpus.select(col(idCol),
+      element_at(Native.call("bpe_seg_count", col(textCol), spec), 1)
+        .as("n_tokens_bpe"),
+      element_at(Native.call("bpe_seg_count", col(textCol), spec), 2)
+        .as("n_words"))
+  }
 
-  /** Sessionless fallback for [[bpeApply]] — the pure-functions
-    * formulation the kernel must agree with (pinned by spec).
+  /** The pure-functions formulation of [[bpeApply]] — the spec the
+    * kernel must agree with (pinned by PipelineSpec).
     */
   private[graft] def bpeApplyComposed(corpus: DataFrame, idCol: String, textCol: String,
                                       merges: Seq[String]): DataFrame = {
@@ -838,10 +825,9 @@ object TextAnalysis {
     * guarded, no divide-by-zero under ANSI).
     */
   def ngramNovelty(corpus: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.TextExpressions.register(corpus.sparkSession)
     val sh = corpus
       .select(col(idCol),
-        explode(call_function("word_shingle_set", col(textCol))).as("sh"))
+        explode(Native.call("word_shingle_set", col(textCol))).as("sh"))
       // 8-byte shuffle key (narrower AND cheaper than md5's 32-hex);
       // a cross-gram collision (p ≈ pairs/2⁶⁴) would merge two
       // claimants — the same documented tradeoff as the stream lanes'
@@ -910,7 +896,6 @@ object TextAnalysis {
     */
   def dsirWeights(corpus: DataFrame, idCol: String, textCol: String,
                   target: DataFrame): DataFrame = {
-    graft.functions.TextExpressions.register(corpus.sparkSession)
     def bucket(tok: Column): Column =
       conv(substring(md5(tok), 1, 2), 16, 10).cast("long")
     val toks = corpus.select(explode(split(col(textCol), " ")).as("tok"))
@@ -926,7 +911,7 @@ object TextAnalysis {
       .foreach(r => weights(r.getAs[Long]("b").toInt) = r.getAs[Long]("w"))
     val csv = lit(weights.mkString(","))
     corpus
-      .withColumn("__s", call_function("dsir_score", col(textCol), csv))
+      .withColumn("__s", Native.call("dsir_score", col(textCol), csv))
       .select(col(idCol),
         element_at(col("__s"), 1).as("n_tokens"),
         element_at(col("__s"), 2).as("score"))
@@ -943,8 +928,7 @@ object TextAnalysis {
     * no char 8-gram are dropped (no fingerprint exists).
     */
   def winnowFingerprints(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.TextExpressions.register(df.sparkSession)
-    df.select(col(idCol), call_function("winnow_set", col(textCol)).as("fps"))
+    df.select(col(idCol), Native.call("winnow_set", col(textCol)).as("fps"))
       .filter(size(col("fps")) > 0)
       .select(col(idCol), size(col("fps")).cast("long").as("n_fp"),
         md5(concat_ws(",", transform(col("fps"), v => v.cast("string")))).as("fp_digest"))

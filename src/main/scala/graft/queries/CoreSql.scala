@@ -183,7 +183,6 @@ object CoreSql {
     * builtin) and inverse hyperbolics.
     */
   def qMathFuncs(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.ScalarExpressions.register(spark)
     t(spark, dir, "part").createOrReplaceTempView("part")
     spark.sql(
       """SELECT p_partkey,

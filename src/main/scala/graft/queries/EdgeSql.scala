@@ -396,7 +396,6 @@ object EdgeSql {
     */
   private def qSessionFuncs(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    graft.functions.SessionFunctions.register(s)
     def snap(state: String) =
       s.sql("SELECT current_tenant() AS tenant, current_role() AS role")
         .select(lit(state).as("state"), col("tenant"), col("role"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.functions.Native
 
 /** Lake schema contract, checked as a first-class driver entry.
   *
@@ -146,13 +147,12 @@ object LakeContract {
     // raw lake, so the skipping scan provably loses no rows.
     "ts_zone_skip" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      graft.functions.ScalarExpressions.register(s)
       def cols(df: DataFrame) = df.select(col("event_id"), col("user_id"),
         expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
       val blockOpts = Map("parquet.block.size" -> "16384")
       val zRoot = graft.Lake.staged(s"zorder_lake|$dir", Seq(s"$dir/events.parquet")) { p =>
         cols(Tables.eventsNanos(s, dir))
-          .withColumn("zkey", call_function("zorder_key",
+          .withColumn("zkey", Native.call("zorder_key",
             pmod(col("user_id"), lit(65536)).cast("long"),
             pmod(col("cents"), lit(65536)).cast("long")))
           .repartitionByRange(4, col("zkey")).sortWithinPartitions("zkey")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.Native
 import graft.operators.{Dedup, Multimodal, Sampling, Similarity, TextAnalysis}
 
 /** LLM training-data pipeline queries over documents/embeddings
@@ -133,9 +134,8 @@ object PipelineQueries {
     // replays masses, shares, thresholds, and the window prefix.
     "doc_token_budget_mix" -> ((s, dir) => {
       val docs = Tables(s, dir, "documents")
-      graft.functions.TextExpressions.register(s)
       val withTok = docs.select(col("doc_id"), col("lang"),
-        call_function("bpe_token_count", col("text")).cast("long").as("n_tok"))
+        Native.call("bpe_token_count", col("text")).cast("long").as("n_tok"))
       Sampling.tokenBudgetMix(withTok, "doc_id", "lang", "n_tok", budget = 20000L)
         .orderBy("doc_id")
     }),
@@ -190,9 +190,8 @@ object PipelineQueries {
     // bounded pair — the corpus is scanned once for fingerprints, only
     // (id, fp-set) rows join.
     "doc_winnow_pairs" -> ((s, dir) => {
-      graft.functions.TextExpressions.register(s)
       val c = corpus(s, dir)
-        .withColumn("fp", call_function("winnow_set", col("text")))
+        .withColumn("fp", Native.call("winnow_set", col("text")))
       val a = c.select(col("doc_id").as("doc_a"), col("fp").as("fpa"))
       val b = c.select(col("doc_id").as("doc_b"), col("fp").as("fpb"))
       val p1 = a.join(b.withColumn("doc_a", col("doc_b") - 1000000L), Seq("doc_a"))
@@ -481,15 +480,14 @@ object PipelineQueries {
     // docs of ~460 on this corpus, vs 402 under the fraction rule with
     // every benchmark copy still dropped).
     "doc_e2e_pipeline" -> ((s, dir) => {
-      graft.functions.TextExpressions.register(s)
       val raw = corpus(s, dir)
       val bench = Tables(s, dir, "documents").filter(col("doc_id") < 50)
       val quality = raw.filter(size(split(col("text"), " ")) >= 30)
       val bsh = broadcast(bench.select(
-        explode(call_function("word_shingle_set", col("text"))).as("sh")).distinct())
+        explode(Native.call("word_shingle_set", col("text"))).as("sh")).distinct())
       val contaminated = quality
         .select(col("doc_id"),
-          call_function("word_shingle_set", col("text")).as("__shs"))
+          Native.call("word_shingle_set", col("text")).as("__shs"))
         .select(col("doc_id"), size(col("__shs")).as("nsh"),
           explode(col("__shs")).as("sh"))
         .join(bsh, Seq("sh"), "left_semi")

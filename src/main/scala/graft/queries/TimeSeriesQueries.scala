@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TimeSeries
+import graft.functions.Native
 
 /** Driver-facing query entries for the time-series operator wave
   * (SURVEY.md §2.2). Every DuckDB oracle starts from the same
@@ -574,10 +575,9 @@ object TimeSeriesQueries {
     // oracle's bit arithmetic stays overflow-free; the full 32-bit lane
     // is spec-pinned.
     "ts_zorder_key" -> ((s, dir) => {
-      graft.functions.ScalarExpressions.register(s)
       Tables.events(s, dir)
         .select(col("event_id"),
-          call_function("zorder_key",
+          Native.call("zorder_key",
             pmod(col("user_id"), lit(65536)).cast("long"),
             pmod(col("event_id"), lit(65536)).cast("long")).as("zkey"))
         .orderBy("event_id").limit(5000)

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
+import graft.functions.Native
+
 /** Structured-Streaming ingestion — cnosdb's stream tables / continuous
   * queries re-expressed (reference: the stream .slt suites and
   * query_server/query/src/stream).
@@ -467,7 +469,6 @@ object StreamIngest {
                             numHashes: Int = 8, bands: Int = 2): Dataset[BandCollision] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.TextExpressions.register(spark)
     val sig = graft.operators.Dedup.minhashSignature(
       docs.select(col(idCol), col(textCol)), idCol, textCol, numHashes)
     val bandHashes = graft.operators.Dedup.lshBandHashes(sig, idCol, numHashes, bands)
@@ -505,7 +506,6 @@ object StreamIngest {
                                    numHashes: Int = 8, bands: Int = 2): Dataset[BandCollision] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.TextExpressions.register(spark)
     val rows = numHashes / bands
     // the signature + band hashes inline (same kernels as the batch
     // Dedup pipeline) so the watermarked event-time column rides along
@@ -518,7 +518,7 @@ object StreamIngest {
       // the kernel twice per row (the minhashSignature lesson)
       .filter(col("__text").isNotNull &&
         size(split(col("__text"), " ", -1)) >= 3)
-      .withColumn("__sig", call_function("minhash_sig", col("__text"), lit(numHashes)))
+      .withColumn("__sig", Native.call("minhash_sig", col("__text"), lit(numHashes)))
     val bandCols = (0 until bands).map { b =>
       struct(lit(b).as("band"),
         md5(concat_ws("|",

@@ -1,32 +1,42 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** GraftExtensions wires vec_dot/num_gcd/num_lcm into a session via
-  * spark.sql.extensions — the cluster-deployment registration path.
+/** GraftExtensions wires graft's functions, rules and DCL parser into a
+  * session — the cluster-deployment registration path.
   */
-class ExtensionsSpec extends AnyFunSuite {
+class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private val (priorDefault, priorActive) =
+    (SparkSession.getDefaultSession, SparkSession.getActiveSession)
 
   lazy val spark: SparkSession = {
     // The spark.sql.extensions CONFIG is only consulted when the
-    // SparkContext itself is created; in the shared test JVM another
-    // suite usually owns the context already, so getOrCreate would
-    // silently hand back a session without graft's functions. The
-    // public Builder.withExtensions hook runs the SAME GraftExtensions
-    // entry point on a fresh session over the existing context —
-    // which is exactly what this spec pins: the class works as a
-    // SparkSessionExtensions injector.
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
+    // SparkContext itself is created, and a context started with it
+    // hands graft's extensions to every later session in the test JVM.
+    // The public Builder.withExtensions hook runs the SAME
+    // GraftExtensions entry point on a fresh session over the shared
+    // context — which is exactly what this spec pins: the class works
+    // as a SparkSessionExtensions injector. create() makes the session
+    // the JVM's default and active one only when none is set; afterAll
+    // undoes that, so no later suite inherits it.
     SparkSession.builder()
       .master("local[2]")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       .withExtensions(new GraftExtensions()(_))
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .create()
+  }
+
+  override def afterAll(): Unit = {
+    SparkSession.clearDefaultSession()
+    SparkSession.clearActiveSession()
+    priorDefault.foreach(SparkSession.setDefaultSession)
+    priorActive.foreach(SparkSession.setActiveSession)
+    super.afterAll()
   }
 
   test("tenant/user/role DCL runs through plain spark.sql; Spark-owned DDL untouched") {
@@ -130,26 +140,32 @@ class ExtensionsSpec extends AnyFunSuite {
 
   test("extensions registry is in lockstep with every temp-function registry") {
     // r9: the extensions path had drifted 10 functions behind the
-    // library's per-session registries — a cluster deploying via
-    // spark.sql.extensions would silently lack kernels the library's
-    // own entry points use. The temp registrations in the source files
-    // are the ground truth (a newSession inherits the injected
-    // registry, so a runtime diff can't see them): scrape every
-    // createOrReplaceTempFunction name and require it to resolve in
-    // the extensions-built session.
+    // library's per-session registries. Both paths now register the one
+    // Native catalog; this pins that every native expression in the
+    // source (scraped by its prettyName) has a catalog entry, that each
+    // entry resolves in the extensions-built session to the catalog's
+    // own builder, and that no other source file registers a function.
     import org.apache.spark.sql.catalyst.FunctionIdentifier
-    val srcDir = java.nio.file.Paths.get("src/main/scala/graft/functions")
     import scala.jdk.CollectionConverters._
-    val rx = """createOrReplaceTempFunction\(\s*"([a-z0-9_]+)"""".r
-    val kernels = java.nio.file.Files.list(srcDir).iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .flatMap(p => rx.findAllMatchIn(java.nio.file.Files.readString(p))
-        .map(_.group(1)))
-      .toSet
+    def scrape(dir: String, rx: scala.util.matching.Regex): Seq[(String, String)] =
+      java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
+        .filter(_.toString.endsWith(".scala")).toSeq
+        .flatMap(p => rx.findAllMatchIn(java.nio.file.Files.readString(p))
+          .map(m => p.getFileName.toString -> m.group(1)))
+    val catalog = functions.Native.catalog.toMap
+    val kernels = scrape("src/main/scala/graft/functions",
+      """prettyName: String = "([a-z0-9_]+)"""".r).map(_._2).toSet
     assert(kernels.size >= 30, s"source scrape implausibly small: $kernels")
-    val missing = kernels.filterNot(n => spark.sessionState.functionRegistry
-      .functionExists(FunctionIdentifier(n)))
-    assert(missing.isEmpty, s"functions missing from GraftExtensions: $missing")
+    assert(kernels.diff(catalog.keySet).isEmpty,
+      s"native expressions without a catalog entry: ${kernels.diff(catalog.keySet)}")
+    val wrong = catalog.filterNot { case (n, b) =>
+      spark.sessionState.functionRegistry.lookupFunctionBuilder(FunctionIdentifier(n))
+        .contains(b) }
+    assert(wrong.isEmpty, s"catalog functions missing from GraftExtensions: ${wrong.keySet}")
+    val registrars = scrape("src/main/scala",
+      """(createOrReplaceTempFunction|injectFunction|registerFunction)\(""".r)
+    assert(registrars.map(_._1).toSet == Set("Native.scala", "GraftExtensions.scala"),
+      s"function registration outside the catalog: $registrars")
   }
 
   test("zorder_key interleaves bits: x at even positions, y at odd") {

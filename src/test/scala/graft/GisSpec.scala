@@ -123,7 +123,7 @@ class GisSpec extends AnyFunSuite {
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    graft.functions.GisExpressions.register(spark)
+    graft.plans.install(spark)
     import spark.implicits._
     Seq(("POINT(2 2)", "POLYGON((0 0, 4 0, 4 4, 0 4, 0 0))", "POLYGON((10 10, 11 10, 11 11, 10 11, 10 10))"))
       .toDF("pt", "box", "far").createOrReplaceTempView("gis_sql_probe")

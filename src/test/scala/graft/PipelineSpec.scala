@@ -115,7 +115,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val df = Seq((Array(1.0, 2.0, 3.0), Array(1.0, 2.0))).toDF("a", "b")
-    graft.functions.VectorExpressions.register(spark)
+    graft.plans.install(spark)
     val native = df.select(call_function("vec_dot", col("a"), col("b"))).head.isNullAt(0)
     val hof = df.select(aggregate(zip_with(col("a"), col("b"), (p, q) => p * q),
       lit(0.0), (acc, v) => acc + v)).head.isNullAt(0)
@@ -191,7 +191,7 @@ class PipelineSpec extends AnyFunSuite {
   test("vec_dot_i8 kernel: exact integer dot, length mismatch is NULL") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExpressions.register(spark)
+    graft.plans.install(spark)
     val df = Seq((Seq(127, -128, 3), Seq(127, 127, -2)),
         (Seq(1, 2, 3), Seq(1, 2))) // mismatch
       .toDF("a", "b")

@@ -14,10 +14,20 @@ with --run to invoke it). For each <outdir>/<name> parquet dir, runs the
 matching SQL from oracle_sql.json in DuckDB over views named after the
 parquet tables in sfdir, sorts columns by name, sorts rows, compares
 values (floats to 1e-9 rel tol).
+
+Each oracle query runs in a child process of its own, one at a time, so
+a query that exhausts memory (DuckDB's "Out of Memory" error, or the
+kernel killing the process) costs only its lane: it prints
+`UNAVAILABLE <lane>: ...`, counts as unavailable, never as PASS, and the
+sweep goes on. GRAFT_DUCKDB_THREADS and GRAFT_DUCKDB_MEMLIMIT bound each
+child; with GRAFT_DUCKDB_MEMLIMIT set, a child whose resident memory
+passes twice that limit is stopped and its lane is unavailable. Exits 0
+only when every checked lane passed.
 """
-import json, math, sys, glob, os, subprocess
+import json, math, sys, glob, os, re, subprocess, multiprocessing, tempfile, time
 
 import duckdb
+import pyarrow as pa
 import pyarrow.parquet as pq
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -47,15 +57,8 @@ def sortkey(row):
     return tuple((x is None, str(x)) for x in row)
 
 
-def main():
-    args = [a for a in sys.argv[1:] if a != "--run"]
-    sfdir = args[0] if len(args) > 0 else "/root/testdata/sf0.01"
-    outdir = args[1] if len(args) > 1 else "/tmp/graft_verify"
-    only = set(args[2].split(",")) if len(args) > 2 else None
-    if "--run" in sys.argv:
-        subprocess.run(["sbt", f'runMain graft.Verify {sfdir} {outdir}'],
-                       cwd="/root/repo", check=True)
-
+def connect(sfdir):
+    """A DuckDB connection with a view per lake table."""
     con = duckdb.connect()
     # cap the oracle's thread fan-out so a long background sweep can
     # share the box with engine measurements (unset = duckdb default)
@@ -72,10 +75,94 @@ def main():
         p = f"{sfdir}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+
+def memlimit_bytes():
+    """GRAFT_DUCKDB_MEMLIMIT (e.g. "3GB", "512MiB") in bytes, or None."""
+    m = re.fullmatch(r"\s*([\d.]+)\s*([KMGT]?)(i?)B?\s*",
+                     os.environ.get("GRAFT_DUCKDB_MEMLIMIT", ""), re.IGNORECASE)
+    if not m:
+        return None
+    power = "KMGT".find(m.group(2).upper()) + 1 if m.group(2) else 0
+    return float(m.group(1)) * (1024 if m.group(3) else 1000) ** power
+
+
+def rss_bytes(pid):
+    """Resident set size of process `pid`, 0 once it is gone."""
+    try:
+        with open(f"/proc/{pid}/status") as f:
+            for line in f:
+                if line.startswith("VmRSS:"):
+                    return int(line.split()[1]) * 1024
+    except OSError:
+        pass
+    return 0
+
+
+def oracle_child(sfdir, sql, result_path):
+    """Runs one oracle query and writes its result as an Arrow IPC file,
+    or its DuckDB error as `result_path + ".error"`."""
+    try:
+        table = connect(sfdir).execute(sql).arrow()
+    except Exception as e:  # noqa: BLE001 - the parent classifies it
+        kind = "oom" if isinstance(e, duckdb.OutOfMemoryException) else "error"
+        with open(result_path + ".error", "w") as f:
+            json.dump([kind, str(e)], f)
+        return
+    with pa.ipc.new_file(result_path, table.schema) as w:
+        w.write_table(table)
+
+
+def run_oracle(sfdir, sql, tmpdir):
+    """Runs one oracle query in a child process of its own.
+
+    Returns ("ok", table), ("unavailable", reason) when the child ran out
+    of memory or died, or ("error", message) for any other DuckDB error.
+    A child the kernel kills takes only its own lane with it.
+    """
+    result_path = os.path.join(tmpdir, "oracle.arrow")
+    child = multiprocessing.get_context("spawn").Process(
+        target=oracle_child, args=(sfdir, sql, result_path))
+    child.start()
+    # DuckDB's memory_limit bounds its buffer pool, not every allocation
+    # (ts_value_fill_ar's recursive CTE grew past it for hours until the
+    # kernel killed it), so a child past twice the limit is stopped here
+    rss_cap = 2 * memlimit_bytes() if memlimit_bytes() else None
+    try:
+        while child.is_alive():
+            child.join(1.0)
+            if rss_cap and child.is_alive() and rss_bytes(child.pid) > rss_cap:
+                child.kill()
+                child.join()
+                return "unavailable", (f"oracle process passed twice GRAFT_DUCKDB_MEMLIMIT "
+                                       f"({rss_cap / 2**30:.1f} GiB RSS)")
+        if os.path.exists(result_path + ".error"):
+            with open(result_path + ".error") as f:
+                kind, message = json.load(f)
+            return ("unavailable" if kind == "oom" else "error"), message
+        if child.exitcode != 0 or not os.path.exists(result_path):
+            return "unavailable", f"oracle process died (exit code {child.exitcode})"
+        with pa.OSFile(result_path) as source:
+            return "ok", pa.ipc.open_file(source).read_all()
+    finally:
+        for p in (result_path, result_path + ".error"):
+            if os.path.exists(p):
+                os.remove(p)
+
+
+def main():
+    args = [a for a in sys.argv[1:] if a != "--run"]
+    sfdir = args[0] if len(args) > 0 else "/root/testdata/sf0.01"
+    outdir = args[1] if len(args) > 1 else "/tmp/graft_verify"
+    only = set(args[2].split(",")) if len(args) > 2 else None
+    if "--run" in sys.argv:
+        subprocess.run(["sbt", f'runMain graft.Verify {sfdir} {outdir}'],
+                       cwd="/root/repo", check=True)
 
     oracles = json.load(open(f"{outdir}/oracle_sql.json"))
-    n_pass = n_fail = 0
-    import time
+    n_pass = n_fail = n_unavailable = 0
+    tmpdir = tempfile.mkdtemp(prefix="graft_oracle_")
     for name in sorted(os.listdir(outdir)):
         d = os.path.join(outdir, name)
         if not os.path.isdir(d):
@@ -94,10 +181,13 @@ def main():
         if name not in oracles:
             print(f"ROWS-ONLY {name}: rows={got.num_rows}")
             continue
-        try:
-            exp = con.execute(oracles[name]).arrow()
-        except Exception as e:
-            print(f"FAIL {name}: duckdb error: {e}")
+        status, exp = run_oracle(sfdir, oracles[name], tmpdir)
+        if status == "unavailable":
+            print(f"UNAVAILABLE {name}: {exp}", flush=True)
+            n_unavailable += 1
+            continue
+        if status == "error":
+            print(f"FAIL {name}: duckdb error: {exp}")
             n_fail += 1
             continue
         gcols, ecols = sorted(got.column_names), sorted(exp.column_names)
@@ -125,8 +215,9 @@ def main():
         else:
             print(f"PASS {name}: {len(grows)} rows ({time.time() - t0:.1f}s)", flush=True)
             n_pass += 1
-    print(f"== {n_pass} pass, {n_fail} fail ==")
-    sys.exit(1 if n_fail else 0)
+    os.rmdir(tmpdir)
+    print(f"== {n_pass} pass, {n_fail} fail, {n_unavailable} unavailable ==")
+    sys.exit(1 if n_fail or n_unavailable else 0)
 
 
 if __name__ == "__main__":
