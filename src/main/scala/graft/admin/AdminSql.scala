@@ -2110,13 +2110,15 @@ final class AdminEngine(
     * cutoff = now − ttl, expiry via the O(expired-days) Hadoop-FS
     * directory lifecycle. The admin surface supplies the POLICY
     * (catalog TTL); [[graft.operators.Dml.expireDays]] supplies the
-    * 100 TB MECHANISM. No-op for TTL-less databases.
+    * 100 TB MECHANISM. No-op for TTL-less databases. A caller that
+    * knows the layout's file schema passes it as `fileSchema`, so the
+    * boundary day is read without a schema-inference job.
     */
-  def enforceTtl(db: String, lakeRoot: String,
-                 asOfNs: Long): Option[graft.operators.Dml.ExpireStats] = {
+  def enforceTtl(db: String, lakeRoot: String, asOfNs: Long,
+                 fileSchema: Option[StructType] = None): Option[graft.operators.Dml.ExpireStats] = {
     requireOnDb(session.tenant, db, "Write")
     val d = catalog.database(session.tenant, db)
-    d.ttlNs.map(ttl => graft.operators.Dml.expireDays(spark, lakeRoot, asOfNs - ttl))
+    d.ttlNs.map(ttl => graft.operators.Dml.expireDays(spark, lakeRoot, asOfNs - ttl, fileSchema))
   }
 
   // ------------------------------------------------------------------

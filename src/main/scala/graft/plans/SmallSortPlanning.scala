@@ -2,10 +2,14 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
-import org.apache.spark.sql.execution.{SortExec, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.execution.adaptive.LogicalQueryStage
-import org.apache.spark.sql.execution.datasources.LogicalRelation
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.{CoalesceExec, SortExec, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.adaptive.{BroadcastQueryStageExec, LogicalQueryStage,
+  ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS,
+  REBALANCE_PARTITIONS_BY_COL, REBALANCE_PARTITIONS_BY_NONE, REPARTITION_BY_COL,
+  ShuffleExchangeExec, ShuffleOrigin}
 import org.apache.spark.sql.internal.SQLConf
 
 /** Sampling-free small global sorts.
@@ -17,12 +21,23 @@ import org.apache.spark.sql.internal.SQLConf
   * scan). When the input is small AQE then coalesces the sorted output
   * into one partition anyway, so the sampling job bought nothing.
   *
-  * This strategy plans such a sort as `SortExec(global) <- Exchange
-  * SinglePartition` instead: one shuffle, no sampling job, the same
-  * rows in the same order. "Small" is exactly the size below which
-  * AQE's own coalescing collapses a shuffle into one partition
-  * ([[onePartitionBytes]]); with AQE or coalescing off it never fires,
-  * and no conf of its own exists.
+  * This strategy plans such a sort in one partition instead, with no
+  * sampling job and the same rows in the same order. "Small" is exactly
+  * the size below which AQE's own coalescing collapses a shuffle into
+  * one partition ([[onePartitionBytes]]); with AQE or coalescing off it
+  * never fires, and no conf of its own exists. The plan picks one of
+  * two forms:
+  *
+  *  - `SortExec(global) <- CoalesceExec(1)` when the input is already
+  *    one partition wide ([[oneStagePartition]], [[oneSplit]]): every
+  *    leaf is a materialized AQE stage that AQE reads as one partition,
+  *    or the only leaf is a one-file scan that plans to one split under
+  *    operators that keep partitions. The sort then runs in the task
+  *    that computes its input (the final aggregate above the stage, or
+  *    the per-row kernel above the scan), with no stage of its own.
+  *  - `SortExec(global) <- Exchange SinglePartition` otherwise: a small
+  *    input spread over several splits or partitions keeps its
+  *    parallelism below one shuffle.
   *
   * It trusts a size estimate only through operators that cannot
   * multiply rows ([[measured]]): a `Generate`, a Dataset `flatMap` /
@@ -32,7 +47,7 @@ import org.apache.spark.sql.internal.SQLConf
   * plan's estimate. A materialized AQE stage is measured: when an
   * aggregate stage finishes, AQE re-plans the sort above it with the
   * stage's runtime size, and that is where aggregate→sort queries get
-  * the one-partition exchange. Scan→project→sort queries get it at the
+  * the one-stage form. Scan→project→sort queries get their form at the
   * first plan, from file sizes.
   *
   * `ORDER BY … LIMIT n` never reaches here: SpecialLimits plans it as
@@ -41,9 +56,15 @@ import org.apache.spark.sql.internal.SQLConf
 object SmallSortPlanning extends SparkStrategy {
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case Sort(order, true, child, _) if fitsOnePartition(child) =>
-      SortExec(order, global = true,
-        ShuffleExchangeExec(SinglePartition, planLater(child))) :: Nil
+    case Sort(order, true, child, _)
+        if !child.isStreaming && !alreadyOnePartition(child) && measured(child) =>
+      val conf = SQLConf.get
+      onePartitionBytes(conf).filter(child.stats.sizeInBytes <= _).map { bytes =>
+        val input = planLater(child)
+        SortExec(order, global = true,
+          if (oneStagePartition(child, bytes) || oneSplit(child, conf)) CoalesceExec(1, input)
+          else ShuffleExchangeExec(SinglePartition, input))
+      }.toSeq
     case _ => Nil
   }
 
@@ -58,10 +79,6 @@ object SmallSortPlanning extends SparkStrategy {
     else if (conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST))
       Some(conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE))
     else Some(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
-
-  private def fitsOnePartition(child: LogicalPlan): Boolean =
-    !child.isStreaming && !alreadyOnePartition(child) && measured(child) &&
-      onePartitionBytes(SQLConf.get).exists(child.stats.sizeInBytes <= _)
 
   /** Whether every path from `p` down to its leaves keeps the size
     * estimate an upper bound on the rows that flow: each operator is one
@@ -91,6 +108,55 @@ object SmallSortPlanning extends SparkStrategy {
     case a: Aggregate => a.groupingExpressions.isEmpty
     case w: Window => w.partitionSpec.isEmpty
     case _: GlobalLimit => true
+    case _ => false
+  }
+
+  /** The shuffle origins AQE's CoalesceShufflePartitions coalesces. */
+  private val coalescedOrigins: Set[ShuffleOrigin] =
+    Set(ENSURE_REQUIREMENTS, REPARTITION_BY_COL, REBALANCE_PARTITIONS_BY_NONE,
+      REBALANCE_PARTITIONS_BY_COL)
+
+  /** Whether AQE reads all of `p`'s input as one partition: every leaf is
+    * a materialized AQE stage (a `LogicalQueryStage` holds the physical
+    * operators above its stages too, such as a final aggregate), each
+    * stage is a broadcast or a shuffle AQE coalesces, and the shuffles
+    * together measure at most `bytes`. AQE coalesces the shuffles under
+    * one stage only when all of that stage's leaves are stages, which is
+    * why no other leaf may appear.
+    */
+  private def oneStagePartition(p: LogicalPlan, bytes: Long): Boolean = {
+    val leaves = p.collectLeaves()
+    val stages = leaves.flatMap {
+      case q: LogicalQueryStage => q.physicalPlan.collectLeaves()
+      case _ => Nil
+    }
+    leaves.forall(_.isInstanceOf[LogicalQueryStage]) && stages.forall {
+      case s: ShuffleQueryStageExec => s.isMaterialized && coalescedOrigins(s.shuffle.shuffleOrigin)
+      case b: BroadcastQueryStageExec => b.isMaterialized
+      case _ => false
+    } && stages.collect { case s: ShuffleQueryStageExec => s.getRuntimeStatistics.sizeInBytes }
+      .sum <= bytes
+  }
+
+  /** Whether `p` is operators that keep partitions over one unbucketed
+    * file no longer than both `maxPartitionBytes` and `openCostInBytes`:
+    * Spark never splits such a file (its split size is at least the
+    * smaller of the two), so the scan is one task. Several small files
+    * are several splits at the default open cost, which fills a split
+    * per file.
+    */
+  private def oneSplit(p: LogicalPlan, conf: SQLConf): Boolean = p match {
+    case _: Project | _: Filter | _: SerializeFromObject | _: DeserializeToObject |
+         _: MapElements | _: TypedFilter => oneSplit(p.children.head, conf)
+    case l: LogicalRelation => l.relation match {
+      case HadoopFsRelation(files: PartitioningAwareFileIndex, _, _, None, _, _) =>
+        files.allFiles() match {
+          case Seq(f) =>
+            f.getLen <= math.min(conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes)
+          case _ => false
+        }
+      case _ => false
+    }
     case _ => false
   }
 }

@@ -209,7 +209,10 @@ object AdminQueries {
       val (e, eroot) = freshEngine(s)
       try {
         e.execute("CREATE DATABASE evts WITH TTL '30d'")
-        val stats = e.enforceTtl("evts", root.toString, cutoffNs + ttlNs).get
+        // the copy's files have the primary layout's file schema: the
+        // boundary-day rewrite reads it without an inference job
+        val stats = e.enforceTtl("evts", root.toString, cutoffNs + ttlNs,
+          fileSchema = Some(Tables.eventsNanos(s, dir).schema)).get
         require(stats.droppedDays == days.count(_ < mid) && stats.boundaryRewritten,
           s"TTL-policy expiry wrong: $stats for cutoff $mid+12h over ${days.size} days")
       } finally deleteTree(eroot)

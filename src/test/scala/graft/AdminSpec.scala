@@ -596,6 +596,36 @@ class AdminSpec extends AnyFunSuite {
     assert(e.enforceTtl("nottl", lake, asOf).isEmpty)
   }
 
+  test("enforceTtl with the layout's file schema rewrites the boundary day without an inference job") {
+    import org.apache.spark.sql.functions._
+    val days = (0 until 3).map(d => java.time.LocalDate.of(2024, 3, 10).plusDays(d))
+    def lake(): String = {
+      val root = java.nio.file.Files.createTempDirectory("graft_admin_ttl_schema").toString
+      days.foreach { day =>
+        spark.range(24).select(
+          (lit(day.toEpochDay * Tables.NsPerDay) + col("id") * 3600L * 1000000000L).as("ts"),
+          col("id").cast("double").as("value"))
+          .coalesce(1).write.parquet(s"$root/day=$day")
+      }
+      root
+    }
+    val e = freshEngine()
+    e.execute("CREATE DATABASE evts WITH TTL '2d'")
+    // cutoff = noon of the middle day: one day drops, the middle one is rewritten
+    val asOf = days(1).toEpochDay * Tables.NsPerDay + Tables.NsPerDay / 2 + 2L * Tables.NsPerDay
+    val (inferLake, knownLake) = (lake(), lake())
+    val schema = spark.read.parquet(s"$knownLake/day=${days.head}").schema
+    val (inferred, inferJobs) = org.apache.spark.graftspec.Bus.countingJobs(spark.sparkContext)(
+      e.enforceTtl("evts", inferLake, asOf).get)
+    val (known, knownJobs) = org.apache.spark.graftspec.Bus.countingJobs(spark.sparkContext)(
+      e.enforceTtl("evts", knownLake, asOf, fileSchema = Some(schema)).get)
+    assert(inferred == known && known.droppedDays == 1 && known.boundaryRewritten &&
+      known.boundaryRowsKept == 12L, known.toString)
+    assert(knownJobs == inferJobs - 1, s"the schema-inference job only: $inferJobs -> $knownJobs")
+    def day1(root: String) = spark.read.parquet(s"$root/day=${days(1)}").orderBy("ts").collect().toSeq
+    assert(day1(knownLake) == day1(inferLake))
+  }
+
   // ---- persistence vs the deferred-drop queue ------------------------
 
   test("restore re-derives composite resource keys: RECOVER sticks after a save/load round-trip") {

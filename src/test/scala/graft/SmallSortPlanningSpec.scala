@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -13,9 +11,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.plans.SmallSortPlanning
 
 /** Pins [[graft.plans.SmallSortPlanning]]: a global sort whose measured
-  * input fits the size AQE would coalesce into one partition plans one
-  * SinglePartition exchange and no range-sampling job; anything it
-  * cannot measure, or a larger input, keeps Spark's range exchange.
+  * input fits the size AQE would coalesce into one partition runs no
+  * range-sampling job. An input already one partition wide (a one-file
+  * scan, or materialized stages AQE reads as one partition) is sorted
+  * under `Coalesce 1` in the stage that holds it; a small input over
+  * several splits keeps one SinglePartition exchange; anything it cannot
+  * measure, or a larger input, keeps Spark's range exchange.
   */
 class SmallSortPlanningSpec extends AnyFunSuite {
 
@@ -69,57 +70,89 @@ class SmallSortPlanningSpec extends AnyFunSuite {
   private def shape(p: SparkPlan): String =
     p.toString.replaceAll("#\\d+", "#").replaceAll("plan_id=\\d+", "plan_id=")
 
-  private def onePartitionSort(p: SparkPlan): Boolean =
-    p.toString.contains("Exchange SinglePartition") && !p.toString.contains("rangepartitioning")
+  /** Sorted under `Coalesce 1`, in the stage that computes its input. */
+  private def oneStageSort(p: SparkPlan): Boolean = {
+    val t = p.toString
+    t.contains("Coalesce 1") && !t.contains("SinglePartition") && !t.contains("rangepartitioning")
+  }
+
+  /** Sorted behind one SinglePartition exchange of its own. */
+  private def exchangeSort(p: SparkPlan): Boolean = {
+    val t = p.toString
+    t.contains("Exchange SinglePartition") && !t.contains("Coalesce 1") &&
+      !t.contains("rangepartitioning")
+  }
+
+  /** The same 2,000 rows as [[smallParquet]], in three files. */
+  private lazy val threeFileParquet: String = {
+    val dir = Files.createTempDirectory("graft_small_sort3").resolve("t").toString
+    spark.read.parquet(smallParquet).repartition(3).write.parquet(dir)
+    dir
+  }
 
   private def rangeSort(p: SparkPlan): Boolean =
     p.toString.contains("rangepartitioning") && !p.toString.contains("Exchange SinglePartition")
 
-  /** Runs `df.collect()` and returns its rows with the jobs it started,
-    * counted by a SparkListener on a job group of its own. */
-  private def collectCountingJobs(df: DataFrame): (Seq[Row], Int) = {
-    val sc = df.sparkSession.sparkContext
-    val group = s"small-sort-${System.nanoTime()}"
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "SmallSortPlanningSpec")
-      val rows = try df.collect().toSeq finally sc.clearJobGroup()
-      org.apache.spark.graftspec.Bus.drain(sc)
-      (rows, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
+  /** Runs `df.collect()` and returns its rows with the jobs it started. */
+  private def collectCountingJobs(df: DataFrame): (Seq[Row], Int) =
+    org.apache.spark.graftspec.Bus.countingJobs(df.sparkSession.sparkContext)(df.collect().toSeq)
 
-  test("a small scan→project→ORDER BY plans Exchange SinglePartition and runs one job fewer") {
+  test("a one-file scan→ORDER BY sorts in the scan's task, in one job") {
     def q(s: SparkSession) = s.read.parquet(smallParquet)
       .select(col("k"), (col("id") * 3).as("x"), col("s"))
       .orderBy(col("k"), col("x"))
     val (plain, installed) = (q(session(installed = false)), q(session(installed = true)))
     assert(rangeSort(initialPlan(plain)), initialPlan(plain).toString)
-    assert(onePartitionSort(initialPlan(installed)), initialPlan(installed).toString)
+    assert(oneStageSort(initialPlan(installed)), initialPlan(installed).toString)
+    assert(!initialPlan(installed).toString.contains("Exchange"), initialPlan(installed).toString)
     val (rowsPlain, jobsPlain) = collectCountingJobs(plain)
     val (rowsInstalled, jobsInstalled) = collectCountingJobs(installed)
     assert(rowsInstalled.size == 2000 && rowsInstalled == rowsPlain,
       "same rows in the same order with and without the strategy")
-    assert(jobsInstalled == jobsPlain - 1,
-      s"the range-sampling job should be the only job saved: $jobsPlain -> $jobsInstalled")
+    assert(jobsInstalled == 1 && jobsPlain == 3,
+      s"one job, where the range sort runs a sampler, a map stage and a result: " +
+        s"$jobsPlain -> $jobsInstalled")
   }
 
-  test("an aggregate→ORDER BY gets the one-partition exchange when AQE re-plans") {
+  test("an aggregate→ORDER BY sorts in the final aggregate's stage at re-plan") {
     // 200,000 range rows estimate 1.6 MB before the aggregate runs — above
     // the 1 MB one-partition size — so the first plan keeps the range
     // exchange; the aggregate stage then measures a few hundred bytes
+    def q(s: SparkSession) =
+      s.range(0, 200000).groupBy((col("id") % 7).as("g")).count().orderBy(col("g"))
+    val (plain, installed) = (q(session(installed = false)), q(session(installed = true)))
+    assert(rangeSort(initialPlan(installed)), initialPlan(installed).toString)
+    val (rowsPlain, jobsPlain) = collectCountingJobs(plain)
+    val (rowsInstalled, jobsInstalled) = collectCountingJobs(installed)
+    assert(rowsInstalled.map(_.getLong(0)) == (0L until 7L) && rowsInstalled == rowsPlain)
+    val p = finalPlan(installed).toString
+    assert(oneStageSort(finalPlan(installed)), p)
+    assert("Exchange".r.findAllIn(p).size == 1, s"only the aggregate's own exchange:\n$p")
+    assert(jobsInstalled == jobsPlain - 2,
+      s"no sampler and no sort stage: $jobsPlain -> $jobsInstalled")
+  }
+
+  test("a small input over several splits keeps Exchange SinglePartition") {
+    // three small files are three splits (each file's open cost fills a
+    // split), and a repartition(3) stage is three partitions AQE does not
+    // coalesce: sorting either under Coalesce 1 would run its input in one
+    // task, so both keep one SinglePartition exchange
+    def files(s: SparkSession) =
+      s.read.parquet(threeFileParquet).select("k", "id", "s").orderBy("k")
+    def repartitioned(s: SparkSession) =
+      s.read.parquet(smallParquet).repartition(3).select("k", "id", "s").orderBy("k")
     val s = session(installed = true)
-    val df = s.range(0, 200000).groupBy((col("id") % 7).as("g")).count().orderBy(col("g"))
-    assert(rangeSort(initialPlan(df)), initialPlan(df).toString)
-    val (rows, _) = collectCountingJobs(df)
-    assert(rows.map(_.getLong(0)) == (0L until 7L))
-    assert(onePartitionSort(finalPlan(df)), finalPlan(df).toString)
+    assert(s.read.parquet(threeFileParquet).inputFiles.length == 3)
+    for ((name, q) <- Seq("three files" -> files _, "repartition(3)" -> repartitioned _)) {
+      val (plain, installed) = (q(session(installed = false)), q(s))
+      assert(exchangeSort(initialPlan(installed)), s"$name:\n${initialPlan(installed)}")
+      val (rowsPlain, jobsPlain) = collectCountingJobs(plain)
+      val (rowsInstalled, jobsInstalled) = collectCountingJobs(installed)
+      assert(exchangeSort(finalPlan(installed)), s"$name:\n${finalPlan(installed)}")
+      assert(rowsInstalled.size == 2000 && rowsInstalled == rowsPlain, name)
+      assert(jobsInstalled == jobsPlain - 1,
+        s"$name: only the sampler is saved: $jobsPlain -> $jobsInstalled")
+    }
   }
 
   test("the one-partition size follows AQE's coalescing confs; a larger input keeps rangepartitioning") {
@@ -130,7 +163,7 @@ class SmallSortPlanningSpec extends AnyFunSuite {
     // without parallelismFirst AQE coalesces up to the advisory size
     s.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
     assert(SmallSortPlanning.onePartitionBytes(s.sessionState.conf).contains(64L << 20))
-    assert(onePartitionSort(initialPlan(q)), initialPlan(q).toString)
+    assert(exchangeSort(initialPlan(q)), initialPlan(q).toString)
     s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     assert(SmallSortPlanning.onePartitionBytes(s.sessionState.conf).isEmpty)
     assert(rangeSort(initialPlan(q)), "no coalescing, no one-partition plan")
@@ -150,7 +183,7 @@ class SmallSortPlanningSpec extends AnyFunSuite {
     val s = session(installed = true)
     import s.implicits._
     val base = s.read.parquet(smallParquet)
-    assert(onePartitionSort(initialPlan(base.select("k", "s").orderBy("k"))), "control")
+    assert(oneStageSort(initialPlan(base.select("k", "s").orderBy("k"))), "control")
     val exploded = base.select(col("k"), explode(array(col("s"), col("s"))).as("e")).orderBy("k")
     val flatMapped = base.select("s").as[String].flatMap(x => Seq(x, x)).toDF("s").orderBy("s")
     val checkpointed = base.select("k", "s").localCheckpoint(false).orderBy("k")
@@ -170,7 +203,8 @@ class SmallSortPlanningSpec extends AnyFunSuite {
     val limited = base.limit(100).orderBy("k")
     for ((name, df) <- Seq("window" -> windowed, "limit" -> limited)) {
       val p = initialPlan(df).toString
-      assert("Exchange".r.findAllIn(p).size == 1 && !p.contains("rangepartitioning"), s"$name:\n$p")
+      assert("Exchange".r.findAllIn(p).size == 1 && !p.contains("rangepartitioning") &&
+        !p.contains("Coalesce 1"), s"$name:\n$p")
     }
     assert(windowed.collect().map(_.getLong(1)).toSeq == (0L until 2000L))
   }
@@ -200,7 +234,7 @@ class SmallSortPlanningSpec extends AnyFunSuite {
     def plan(s: SparkSession) =
       initialPlan(s.read.parquet(smallParquet).select("k", "id").orderBy("k"))
     val viaInstall = session(installed = true)
-    assert(onePartitionSort(plan(viaExtensions)), plan(viaExtensions).toString)
+    assert(oneStageSort(plan(viaExtensions)), plan(viaExtensions).toString)
     assert(shape(plan(viaExtensions)) == shape(plan(viaInstall)))
     // install is idempotent, also on a session that has the extensions
     plans.install(viaInstall); plans.install(viaInstall)
