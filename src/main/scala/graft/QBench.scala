@@ -43,7 +43,7 @@ object QBench {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         val props = Option(js.properties)
         val desc = props.flatMap(p => Option(p.getProperty("spark.job.description")))
-          .filter(_.nonEmpty)
+          .filter(_.nonEmpty).map(oneLine)
           .orElse(props.flatMap(p => Option(p.getProperty("callSite.short"))))
           .orElse(js.stageInfos.sortBy(_.stageId).lastOption.map(_.name))
           .getOrElse("?")
@@ -87,5 +87,16 @@ object QBench {
       }
     }
     spark.stop()
+  }
+
+  /** A micro-batch job's description is Spark's multi-line
+    * `<name>\nid = …\nrunId = …\nbatch = N`; it prints as
+    * `stream batch N`. Any other description prints with its line
+    * breaks folded.
+    */
+  private val MicroBatch = """(?s).*\nrunId = [^\n]*\nbatch = (\S+).*""".r
+  private def oneLine(desc: String): String = desc match {
+    case MicroBatch(batch) => s"stream batch $batch"
+    case _ => desc.trim.replaceAll("\\s*\n\\s*", " / ")
   }
 }

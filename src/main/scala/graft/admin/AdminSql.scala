@@ -1562,10 +1562,10 @@ final class AdminEngine(
         // lifetime — a job created against an empty/young table keeps
         // the floor width even if the table grows; recreate the job (or
         // set spark.graft.stream.shufflePartitions) after bulk growth.
-        // spark.graft.stream.shufflePartitions / SPARK_GRAFT_STREAM_PARTS
-        // stay as explicit overrides.
+        // spark.graft.stream.shufflePartitions stays as the explicit
+        // override.
         val streamParts = spark.conf.getOption("spark.graft.stream.shufflePartitions")
-          .orElse(sys.env.get("SPARK_GRAFT_STREAM_PARTS")).getOrElse {
+          .getOrElse {
             val src = tablePath(st.db, st.table)
             val filesPerTrigger = spark.conf
               .get("spark.graft.stream.maxFilesPerTrigger", "1").toInt
@@ -1575,16 +1575,16 @@ final class AdminEngine(
             graft.Sizing.streamReplayParts(src,
               math.max(1, srcFiles / math.max(1, filesPerTrigger))).toString
           }
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        try {
-          spark.conf.set("spark.sql.shuffle.partitions", streamParts)
-          q.writeStream
-            .foreachBatch((batch: DataFrame, _: Long) =>
+        // started the way a replay starts: scoped confs (an unset conf
+        // stays unset), shared compiled code, one stage per micro-batch
+        // at width 1
+        graft.queries.StreamQueries.streamScope(spark, streamParts.toInt, q) {
+          _.foreachBatch((batch: DataFrame, _: Long) =>
               appendWrite(projectForStorage(targets, batch), sinkPath))
             .outputMode("append")
             .option("checkpointLocation", ckpt)
             .start()
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+        }
       } finally registered.foreach(v => spark.catalog.dropTempView(v))
       streamJobs += job
       mkDf(Seq("job"), Seq(Row(job.id.toString)), Seq(StringType))

@@ -31,7 +31,7 @@ import org.apache.spark.sql.internal.SQLConf
   *  - `SortExec(global) <- CoalesceExec(1)` when the input is already
   *    one partition wide ([[oneStagePartition]], [[oneSplit]]): every
   *    leaf is a materialized AQE stage that AQE reads as one partition,
-  *    or the only leaf is a one-file scan that plans to one split under
+  *    or the only leaf is a one-file scan or a local relation under
   *    operators that keep partitions. The sort then runs in the task
   *    that computes its input (the final aggregate above the stage, or
   *    the per-row kernel above the scan), with no stage of its own.
@@ -138,16 +138,21 @@ object SmallSortPlanning extends SparkStrategy {
       .sum <= bytes
   }
 
-  /** Whether `p` is operators that keep partitions over one unbucketed
-    * file no longer than both `maxPartitionBytes` and `openCostInBytes`:
-    * Spark never splits such a file (its split size is at least the
-    * smaller of the two), so the scan is one task. Several small files
-    * are several splits at the default open cost, which fills a split
-    * per file.
+  /** Whether `p` is operators that keep partitions over one leaf that a
+    * single task reads whole:
+    *  - one unbucketed file no longer than both `maxPartitionBytes` and
+    *    `openCostInBytes`. Spark never splits such a file (its split size
+    *    is at least the smaller of the two), so the scan is one task.
+    *    Several small files are several splits at the default open cost,
+    *    which fills a split per file.
+    *  - a `LocalRelation`. Its rows are on the driver and the caller has
+    *    measured them at or below the one-partition size, so reading
+    *    them in one task costs nothing a spread over several would save.
     */
   private def oneSplit(p: LogicalPlan, conf: SQLConf): Boolean = p match {
     case _: Project | _: Filter | _: SerializeFromObject | _: DeserializeToObject |
          _: MapElements | _: TypedFilter => oneSplit(p.children.head, conf)
+    case _: LocalRelation => true
     case l: LogicalRelation => l.relation match {
       case HadoopFsRelation(files: PartitioningAwareFileIndex, _, _, None, _, _) =>
         files.allFiles() match {

@@ -5,9 +5,12 @@ import java.nio.file.attribute.FileTime
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, Repartition}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.graftshim.SessionBridge
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.Tables
@@ -31,6 +34,14 @@ import graft.streaming.{LocalCheckpointFileManager, StreamIngest}
   * temp-dir pattern Verify uses), so the replay holds no corpus-sized
   * data on the driver; the returned frame is a distributed scan of the
   * sink files.
+  *
+  * Every replay starts through [[streamScope]], which keeps each
+  * trigger's fixed cost down in two ways. The stream's cloned session
+  * shares the executor's default classloader, so a replay reuses the
+  * classes an earlier replay compiled instead of recompiling them in
+  * its first micro-batch. And when the derived width is 1, the input is
+  * read as one partition below the stateful operators, so a micro-batch
+  * runs as one stage with no exchange.
   *
   * Determinism across the batch boundary is BY CONSTRUCTION, not luck:
   * the staging range-partitions on the lane's event-order column (ts
@@ -87,8 +98,8 @@ object StreamQueries {
     * Lanes that never stage (the kafka source reads the broker log)
     * fall back to the lake-dir derivation. Every stateful operator
     * here is key-deterministic, so the partition count cannot change
-    * any result. SPARK_GRAFT_STREAM_PARTS stays as the explicit
-    * override.
+    * any result. This derivation is the only width a lane's replay
+    * gets; [[streamScope]] reads it to pick the one-stage plan.
     */
   private val stagedTriggerBytes = new ThreadLocal[Long] {
     override def initialValue(): Long = -1L
@@ -99,13 +110,9 @@ object StreamQueries {
     // bytes can never leak into the next lane's width
     val staged = stagedTriggerBytes.get()
     stagedTriggerBytes.remove()
-    sys.env.get("SPARK_GRAFT_STREAM_PARTS").map(_.toInt)
-      .getOrElse {
-        if (staged >= 0L)
-          math.min(8192, math.max(1,
-            math.ceil(staged.toDouble / (8L << 20)).toInt))
-        else graft.Sizing.streamReplayParts(lakeDir, StageFiles)
-      }
+    if (staged >= 0L)
+      math.min(8192, math.max(1, math.ceil(staged.toDouble / (8L << 20)).toInt))
+    else graft.Sizing.streamReplayParts(lakeDir, StageFiles)
   }
 
   /** The conf Spark reads to pick its checkpoint file manager. A replay
@@ -113,31 +120,77 @@ object StreamQueries {
     */
   private[graft] val CheckpointManagerConf = "spark.sql.streaming.checkpointFileManagerClass"
 
-  /** The one place an AvailableNow replay starts. It pins the replay's
-    * shuffle width (above) and the java.nio checkpoint writer, starts
-    * `writer` under `Trigger.AvailableNow`, waits for it to drain, and
-    * restores both confs in `finally` (unset stays unset, so nothing
-    * leaks into the next lane). The confs stay set until the query has
-    * terminated, so every checkpoint writer it creates sees them.
-    * Records the data-bearing micro-batches under `name` in
-    * [[replayBatches]].
+  /** The conf that gives each session its own executor classloader. */
+  private[graft] val ArtifactIsolationConf = SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key
+
+  /** Where the stream lanes' replays ([[runAvailableNow]]) and the
+    * CREATE STREAM jobs start. `run` gets a writer over `stream` and
+    * starts the query. While it runs, three confs are set on `s` and
+    * then restored in `finally` (unset stays unset, so nothing leaks
+    * into the next lane or statement):
+    *  - `spark.sql.shuffle.partitions` is `parts`, the stream's state
+    *    and shuffle width;
+    *  - the checkpoint file manager is the java.nio
+    *    [[LocalCheckpointFileManager]];
+    *  - artifact isolation is off, unless `s` holds added artifacts
+    *    (those stay visible only through an isolated classloader). The
+    *    stream's cloned session is created inside `start()` and copies
+    *    the setting, so its tasks run in the executor's default
+    *    classloader, where Spark's codegen cache keeps the classes an
+    *    earlier replay compiled. An isolated clone gets a classloader of
+    *    its own, and its first micro-batch recompiles every class.
+    *
+    * At width 1 the writer's input is [[singlePartitionInput]], so each
+    * micro-batch runs as one stage. The scope is per call, on a shared
+    * session: an action another thread runs on `s` meanwhile sees the
+    * same confs.
     */
-  private[graft] def runAvailableNow(s: SparkSession, name: String, parts: Int)(
-      writer: DataStreamWriter[_]): Unit = {
+  private[graft] def streamScope[T](s: SparkSession, parts: Int, stream: DataFrame)(
+      run: DataStreamWriter[Row] => T): T = {
     val scoped = Seq("spark.sql.shuffle.partitions" -> parts.toString,
-      CheckpointManagerConf -> classOf[LocalCheckpointFileManager].getName)
+      CheckpointManagerConf -> classOf[LocalCheckpointFileManager].getName) ++
+      (if (SessionBridge.holdsArtifacts(s)) Nil else Seq(ArtifactIsolationConf -> "false"))
     val explicit = s.conf.getAll
     val prior = scoped.map { case (k, _) => k -> explicit.get(k) }
-    val q = try {
+    try {
       scoped.foreach { case (k, v) => s.conf.set(k, v) }
-      val q0 = writer.trigger(Trigger.AvailableNow()).start()
-      q0.awaitTermination()
-      q0
+      run((if (parts == 1) singlePartitionInput(stream) else stream).writeStream)
     } finally prior.foreach {
       case (k, Some(v)) => s.conf.set(k, v)
       case (k, None) => s.conf.unset(k)
     }
+  }
+
+  /** `stream` with every streaming leaf read as one partition: a
+    * `Repartition(1, shuffle = false)` above the leaf plans as
+    * `CoalesceExec(1)`, whose output is `SinglePartition`. At width 1
+    * the stateful operators require `StatefulOpClusteredDistribution(
+    * keys, 1)`, which `SinglePartition` satisfies, so the micro-batch
+    * plans no exchange: scan, state update and sink write share one
+    * task. Coalescing never moves a row between keys, so the answer is
+    * the one the exchange gives.
+    */
+  private def singlePartitionInput(stream: DataFrame): DataFrame =
+    SessionBridge.ofRows(stream.sparkSession, stream.queryExecution.analyzed.transformUp {
+      case leaf: LeafNode if leaf.isStreaming => Repartition(1, shuffle = false, leaf)
+    })
+
+  /** An AvailableNow replay: starts `stream` into the sink `sink`
+    * configures, inside [[streamScope]], and waits for it to drain. The
+    * scoped confs stay set until the query has terminated, so every
+    * checkpoint writer it creates sees them. Records the data-bearing
+    * micro-batches under `name` in [[replayBatches]] and returns the
+    * terminated query.
+    */
+  private[graft] def runAvailableNow(s: SparkSession, name: String, parts: Int,
+      stream: DataFrame)(sink: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery = {
+    val q = streamScope(s, parts, stream) { w =>
+      val q0 = sink(w).trigger(Trigger.AvailableNow()).start()
+      q0.awaitTermination()
+      q0
+    }
     replayBatches(name) = q.recentProgress.count(_.numInputRows > 0)
+    q
   }
 
   /** Run a streaming frame to completion through a parquet sink and
@@ -146,15 +199,15 @@ object StreamQueries {
     * memory sink (which collected the whole sink table into driver
     * memory — corpus-sized for the dedup/neardup/anomaly lanes), the
     * parquet sink keeps every row on the executors; the driver only
-    * brokers file paths.
+    * brokers file paths. The replay is warm and, at width 1, one stage
+    * per micro-batch ([[streamScope]]).
     */
   private def replay(s: SparkSession, out: DataFrame, name: String,
                      lakeDir: String): DataFrame = {
     val root = Files.createTempDirectory(s"graft_replay_$name").toString
     // replayParts consumes this lane's staging record
-    runAvailableNow(s, name, replayParts(lakeDir)) {
-      out.writeStream
-        .format("parquet")
+    runAvailableNow(s, name, replayParts(lakeDir), out) {
+      _.format("parquet")
         .option("path", s"$root/data")
         .option("checkpointLocation", s"$root/ckpt")
         .outputMode("append")
@@ -861,8 +914,8 @@ object StreamQueries {
       // width derivation so replayParts sees THIS lane's staged bytes.
       val src = eventsStream(s, dir)
         .withColumn("day", expr(graft.Tables.dayOfNsSql("ts")))
-      runAvailableNow(s, "stream_sink_partitioned", replayParts(dir)) {
-        src.writeStream.format("parquet")
+      runAvailableNow(s, "stream_sink_partitioned", replayParts(dir), src) {
+        _.format("parquet")
           .option("path", s"$root/data")
           .option("checkpointLocation", s"$root/ckpt")
           .partitionBy("day")
@@ -932,9 +985,8 @@ object StreamQueries {
       val dataCols = Seq("event_id", "ts", "user_id", "event_type", "value", "props")
       // staged before the width derivation (see stream_sink_partitioned)
       val srcStream = eventsStream(s, dir)
-      runAvailableNow(s, "stream_sink_unified", replayParts(dir)) {
-        srcStream.writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      runAvailableNow(s, "stream_sink_unified", replayParts(dir), srcStream) {
+        _.foreachBatch { (batch: DataFrame, batchId: Long) =>
             val v = s"graft_stream_uni_b${batchId}_${System.nanoTime()}"
             batch.withColumn("day", expr(graft.Tables.dayOfNsSql("ts")))
               .createOrReplaceTempView(v)

@@ -35,7 +35,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * inherited FileSystem path unchanged.
   *
   * Installed per query through `spark.sql.streaming.checkpointFileManagerClass`
-  * (see `StreamQueries.runAvailableNow`).
+  * (see `StreamQueries.streamScope`).
   */
 class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
     extends FileSystemBasedCheckpointFileManager(path, hadoopConf) {

@@ -764,6 +764,35 @@ class AdminSpec extends AnyFunSuite {
     } finally e.stopStreams()
   }
 
+  test("starting a stream job leaves an unset shuffle width unset and leaks no stream conf") {
+    import graft.queries.StreamQueries
+    val e = streamFixture()
+    e.execute("INSERT INTO readings_kv (TIME, name, elevation) VALUES (1640995200000000000, 'n', 1)")
+    e.execute("CREATE TABLE leak_sink(elevation DOUBLE, TAGS(name))")
+    e.execute("CREATE STREAM TABLE leakstream (time TIMESTAMP, name STRING, elevation DOUBLE)" +
+      " WITH (db='sdb', table='readings_kv', event_time_column='time') engine = tskv")
+    val keys = Seq("spark.sql.shuffle.partitions", StreamQueries.CheckpointManagerConf,
+      StreamQueries.ArtifactIsolationConf)
+    def explicit() = { val all = spark.conf.getAll; keys.map(all.get) }
+    val prior = spark.conf.getAll
+    try {
+      spark.conf.unset("spark.sql.shuffle.partitions")
+      val before = explicit()
+      assert(before.forall(_.isEmpty), before)
+      e.execute("INSERT INTO leak_sink SELECT time, name, elevation FROM leakstream")
+      assert(explicit() == before)
+      e.awaitStreams()
+      assert(e.streamBatchesDelivered == 1)
+      assert(rows(e, "SELECT name, elevation FROM leak_sink") == Seq(Seq("n", 1.0)))
+    } finally {
+      e.stopStreams()
+      keys.foreach(k => prior.get(k) match {
+        case Some(v) => spark.conf.set(k, v)
+        case None => spark.conf.unset(k)
+      })
+    }
+  }
+
   // ---- SHOW SERIES / SHOW TAG VALUES (dql/show_series.slt,
   // dql/show_tag_values.slt) -------------------------------------------
 

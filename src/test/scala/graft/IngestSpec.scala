@@ -2,8 +2,9 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.LineProtocol
@@ -435,15 +436,16 @@ class IngestSpec extends AnyFunSuite {
   test("an AvailableNow replay leaks no conf and leaves a checkpoint without .crc or temp files") {
     import graft.queries.StreamQueries
     import java.nio.file.{Files, Path}
-    val keys = Seq("spark.sql.shuffle.partitions", StreamQueries.CheckpointManagerConf)
+    val keys = Seq("spark.sql.shuffle.partitions", StreamQueries.CheckpointManagerConf,
+      StreamQueries.ArtifactIsolationConf)
     def explicit() = { val all = spark.conf.getAll; keys.map(all.get) }
     val root = Files.createTempDirectory("graft_replay_scope")
     spark.range(60).selectExpr("id % 7 AS k").repartition(3)
       .write.json(root.resolve("src").toString)
-    def counts(ckpt: Path, check: String) = spark.readStream.schema("k LONG")
+    def counts(check: String) = spark.readStream.schema("k LONG")
       .option("maxFilesPerTrigger", "1").json(root.resolve("src").toString)
       .where(s"assert_true($check) IS NULL").groupBy("k").count()
-      .writeStream.format("noop").outputMode("update")
+    def noop(ckpt: Path)(w: DataStreamWriter[Row]) = w.format("noop").outputMode("update")
       .option("checkpointLocation", ckpt.toString)
     val prior = spark.conf.getAll
     try {
@@ -451,7 +453,7 @@ class IngestSpec extends AnyFunSuite {
       spark.conf.unset(StreamQueries.CheckpointManagerConf)
       val before = explicit()
       val ckpt = root.resolve("ckpt")
-      StreamQueries.runAvailableNow(spark, "scope_spec", 2)(counts(ckpt, "k >= 0"))
+      StreamQueries.runAvailableNow(spark, "scope_spec", 2, counts("k >= 0"))(noop(ckpt))
       assert(explicit() == before)
       assert(StreamQueries.replayBatches("scope_spec") == 3)
       val files = {
@@ -469,20 +471,81 @@ class IngestSpec extends AnyFunSuite {
       }
       assert(stray.isEmpty, s"checkpoint holds Hadoop .crc or temp files: $stray")
 
-      // throws mid-run: the width was unset, the manager set
+      // throws mid-run: the width was unset, the manager and the
+      // isolation set
       spark.conf.unset("spark.sql.shuffle.partitions")
+      spark.conf.set(StreamQueries.ArtifactIsolationConf, "true")
       spark.conf.set(StreamQueries.CheckpointManagerConf,
         "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
       val before2 = explicit()
       intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        StreamQueries.runAvailableNow(spark, "scope_spec_fail", 2)(
-          counts(root.resolve("ckpt_fail"), "k < 0"))
+        StreamQueries.runAvailableNow(spark, "scope_spec_fail", 2, counts("k < 0"))(
+          noop(root.resolve("ckpt_fail")))
       }
       assert(explicit() == before2)
     } finally keys.foreach(k => prior.get(k) match {
       case Some(v) => spark.conf.set(k, v)
       case None => spark.conf.unset(k)
     })
+  }
+
+  test("a warm replay compiles nothing, and at width 1 a micro-batch plans no exchange") {
+    import graft.queries.StreamQueries
+    import java.nio.file.Files
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.streaming.operators.stateful.StateStoreSaveExec
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    val root = Files.createTempDirectory("graft_replay_warm")
+    val src = root.resolve("src").toString
+    spark.range(600).selectExpr("id % 13 AS k", "id AS v").repartition(3).write.json(src)
+    def sums(s: SparkSession) = s.readStream.schema("k LONG, v LONG")
+      .option("maxFilesPerTrigger", "1").json(src)
+      .groupBy("k").agg(count(lit(1)).as("n"), sum("v").as("s"))
+    /** Replays into a memory table; returns its rows, the last
+      * micro-batch's plan and the classes the replay compiled. */
+    def replay(s: SparkSession, name: String, parts: Int): (Set[Row], SparkPlan, Long) = {
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val q = StreamQueries.runAvailableNow(s, name, parts, sums(s))(
+        _.format("memory").queryName(name).outputMode("complete")
+          .option("checkpointLocation", root.resolve(name).toString))
+      val added = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
+      assert(StreamQueries.replayBatches(name) == 3)
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      (s.table(name).collect().toSet, plan, added)
+    }
+    def exchangeBelowState(p: SparkPlan): Boolean =
+      p.collect { case st: StateStoreSaveExec => st }
+        .exists(_.exists(_.isInstanceOf[ShuffleExchangeExec]))
+
+    val (rows1, plan1, _) = replay(spark, "warm_spec_1", 1)
+    val (rows1b, _, compiled) = replay(spark, "warm_spec_1b", 1)
+    assert(compiled == 0, s"the second replay compiled $compiled classes")
+    assert(!exchangeBelowState(plan1), s"width 1 planned an exchange:\n$plan1")
+    val (rows2, plan2, _) = replay(spark, "warm_spec_2", 2)
+    assert(exchangeBelowState(plan2), s"width 2 planned no exchange:\n$plan2")
+    val expected = spark.read.schema("k LONG, v LONG").json(src)
+      .groupBy("k").agg(count(lit(1)).as("n"), sum("v").as("s")).collect().toSet
+    assert(rows1.size == 13 && rows1 == expected && rows1b == expected && rows2 == expected)
+
+    // a session with an added class keeps isolation in its replay: the
+    // class stays visible only through its own classloader
+    def isolation(s: SparkSession, name: String): Set[String] = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      StreamQueries.runAvailableNow(s, name, 1, sums(s))(
+        _.foreachBatch { (b: DataFrame, _: Long) =>
+          seen.add(b.sparkSession.conf.get(StreamQueries.ArtifactIsolationConf))
+          b.collect() // the batch's state stores commit only when it runs
+          ()
+        }.outputMode("update").option("checkpointLocation", root.resolve(name).toString))
+      seen.asScala.toSet
+    }
+    val withClass = spark.newSession()
+    withClass.addArtifact(Array[Byte](0xCA.toByte, 0xFE.toByte, 0xBA.toByte, 0xBE.toByte),
+      "classes/GraftIsolationProbe.class")
+    assert(isolation(withClass, "isolated_spec") == Set("true"))
+    assert(isolation(spark, "shared_spec") == Set("false"))
   }
 
   test("a stream_ewma replay starts no process for its checkpoint files") {

@@ -114,6 +114,27 @@ class SmallSortPlanningSpec extends AnyFunSuite {
         s"$jobsPlain -> $jobsInstalled")
   }
 
+  test("a local relation→ORDER BY sorts in one task, in one job") {
+    // the rows are on the driver and measured below the one-partition
+    // size, so no SinglePartition exchange stage is planned for them
+    def q(s: SparkSession) = {
+      import s.implicits._
+      (0 until 500).map(i => ((i * 7919) % 500, s"r$i")).toDF("k", "s").orderBy("k")
+    }
+    val (plain, installed) = (q(session(installed = false)), q(session(installed = true)))
+    assert(rangeSort(initialPlan(plain)), initialPlan(plain).toString)
+    assert(initialPlan(installed).toString.contains("LocalTableScan"), initialPlan(installed).toString)
+    assert(oneStageSort(initialPlan(installed)), initialPlan(installed).toString)
+    assert(!initialPlan(installed).toString.contains("Exchange"), initialPlan(installed).toString)
+    val (rowsPlain, jobsPlain) = collectCountingJobs(plain)
+    val (rowsInstalled, jobsInstalled) = collectCountingJobs(installed)
+    assert(rowsInstalled.size == 500 && rowsInstalled == rowsPlain,
+      "same rows in the same order with and without the strategy")
+    assert(jobsInstalled == 1 && jobsPlain == 3,
+      s"one job, where the range sort runs a sampler, a map stage and a result: " +
+        s"$jobsPlain -> $jobsInstalled")
+  }
+
   test("an aggregate→ORDER BY sorts in the final aggregate's stage at re-plan") {
     // 200,000 range rows estimate 1.6 MB before the aggregate runs — above
     // the 1 MB one-partition size — so the first plan keeps the range
