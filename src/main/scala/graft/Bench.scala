@@ -3,24 +3,11 @@ import org.apache.spark.sql.SparkSession
 
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle width tracks data volume (SURVEY §5 spill-aware rule):
-    // derived from the lake's on-disk bytes so sfN scaling runs are
-    // un-spilled with NO env override — the r8 sf100 spill diagnosis
-    // (600M edge rows through shuffle=8) was a harness sizing error a
-    // user could reproduce. At the driver's sf0.1 the 17 MB lake floors
-    // to shuffle=cpus, so round-over-round comparability is unaffected.
-    // SPARK_GRAFT_SHUFFLE remains an explicit override for probes.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      Sizing.shufflePartitions(sfDir, cpus.toInt).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val sfDir = Session.envLake
+    // the shuffle width tracks the lake's bytes (SURVEY §5 spill-aware
+    // rule); at the driver's sf0.1 the 17 MB lake floors it to cpus
+    val cpus = Session.cpus
+    val spark = Session.local(sfDir, cpus)
     // ERROR, not WARN: WARNs land on stderr DURING the run; if the
     // harness merges streams they could interleave after the final
     // stdout JSON line. Nothing bench-relevant logs below ERROR.
@@ -187,7 +174,7 @@ object Bench {
       (sec, if (s0 < 0 || s1 < 0) 0.0 else (s1 - s0) / 100.0)
     }
     def poisoned(sec: Double, stealSec: Double): Boolean =
-      sec >= 0 && stealSec > math.max(2.0, 0.25 * sec * cpus.toInt)
+      sec >= 0 && stealSec > math.max(2.0, 0.25 * sec * cpus)
 
     def runSuite(): Attempt = {
       val stealA = stealJiffies()
@@ -223,7 +210,7 @@ object Bench {
         else reads.zip(reads.tail).map { case (a, b) => (b - a) / 100.0 }
       val walls = Seq((wall1 - wall0) / 1e9, (wall2 - wall1) / 1e9, (wall3 - wall2) / 1e9)
       val stealNoisy = steals.zip(walls).exists {
-        case (s, w) => s > 0.10 * w * cpus.toInt
+        case (s, w) => s > 0.10 * w * cpus
       }
       val all = res1 ++ res2
       val laneNoisy = all.exists { case (_, ((r1, s1), (r2, s2))) =>

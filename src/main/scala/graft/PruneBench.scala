@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Flat-cost witness for the day-partitioned lake (VERDICT r10 #1's
@@ -24,17 +24,8 @@ import org.apache.spark.sql.functions._
   */
 object PruneBench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      Sizing.shufflePartitions(sfDir, cpus.toInt).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val sfDir = Session.envLake
+    val spark = Session.local(sfDir)
     spark.sparkContext.setLogLevel("ERROR")
 
     val days = Tables.eventsLakeDays(spark, sfDir)

@@ -8,9 +8,10 @@ package graft
   * as a HARNESS sizing error: 600 M derived edge rows pushed through
   * shuffle=8 is 75 M rows per external-sort partition — spill-bound on
   * any box, while a real cluster at that volume runs thousands of
-  * shuffle partitions. The env-var fix (`SPARK_GRAFT_SHUFFLE=64`) was a
-  * knob a user has to know about; this derives the same answer from the
-  * lake itself so sfN runs are un-spilled with no override.
+  * shuffle partitions. An env-var width override was a knob a user had
+  * to know about; this derives the answer from the lake itself, so sfN
+  * runs are un-spilled with no override, and [[Session]] sets it for
+  * every main and spec.
   *
   * Rule: one shuffle partition per `bytesPerPartition` of on-disk
   * parquet (default 8 MB), floored at `cores` and capped at 2048. The

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,17 +7,14 @@ object Verify {
     // optional 3rd arg: comma-separated name substrings to run a subset
     // locally (the driver always passes exactly two args)
     val (sfDir, outDir, only) = args match {
-      case Array(s, o) => (s, o, Seq.empty[String])
-      case Array(s, o, rest @ _*) => (s, o, rest.flatMap(_.split(',')).toSeq)
+      case Array(s, o, rest @ _*) => (s, o, rest.flatMap(_.split(',')))
+      case _ =>
+        System.err.println("usage: graft.Verify <sfDir> <outDir> [name,name,...]")
+        sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(sfDir)
+    System.err.println(
+      s"[verify] shuffle.partitions=${spark.conf.get("spark.sql.shuffle.partitions")}")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // machine-readable failure record: r6's 63-query mass-crash was only

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
@@ -12,14 +11,7 @@ import graft.admin._
   * table → DROP through the tokenizer's quoting rules, and
   * parse/format must be mutually inverse on every exact-unit duration.
   */
-class AdminPropertySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AdminPropertySpec extends AnyFunSuite with TestSpark {
 
   private def check(name: String, prop: Prop, n: Int = 200): Unit = {
     val res = SCTest.check(

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.admin._
@@ -16,14 +15,7 @@ import graft.admin._
   * magnitude bounds loose enough to never flake (10× headroom over
   * measured).
   */
-class AdminScaleSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AdminScaleSpec extends AnyFunSuite with TestSpark {
 
   test("a 2,000-database catalog: build, persist, reload, list — driver-side and sub-second") {
     val root = java.nio.file.Files.createTempDirectory("graft_admin_scale").toString

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.admin._
@@ -11,14 +10,7 @@ import graft.admin._
   * ddl/alter_database, ddl/describe_table, ddl/drop_and_recover_*,
   * sys_table/..., variable/system).
   */
-class AdminSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AdminSpec extends AnyFunSuite with TestSpark {
 
   private def freshEngine(nowNs: Long = 1700000000000000000L): AdminEngine = {
     val root = java.nio.file.Files.createTempDirectory("graft_admin_spec").toString

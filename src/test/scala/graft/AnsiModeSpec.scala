@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** ANSI-mode smoke (VERDICT r8 #8 asked which lanes survive strict
@@ -15,15 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * no mode-dependent coercion semantics in either direction, so a
   * cluster pinned to legacy mode gets the same answers.
   */
-class AnsiModeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AnsiModeSpec extends AnyFunSuite with TestSpark {
 
   private val sf = "/root/testdata/sf0.001"
 

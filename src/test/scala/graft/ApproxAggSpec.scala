@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,15 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * explicit error bounds, on the same lineitem slice the driver query
   * reads.
   */
-class ApproxAggSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ApproxAggSpec extends AnyFunSuite with TestSpark {
 
   private val sf = "/root/testdata/sf0.001"
 

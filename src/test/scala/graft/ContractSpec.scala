@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,15 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * mapper-only pass, or orphans an oracle key, fails here instead of
   * in the next round's correctness report.
   */
-class ContractSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ContractSpec extends AnyFunSuite with TestSpark {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -303,11 +294,10 @@ class ContractSpec extends AnyFunSuite {
     assert(scan.partitionFilters.nonEmpty,
       "derived day predicate must be a PartitionFilter, not a post-scan Filter")
     // negative control: same query with the rule EXCLUDED lists every
-    // day again. excludedRules covers both injection paths (the
-    // session may carry GraftExtensions' injected copy when the full
-    // suite shares one SparkSession, where stripping
-    // extraOptimizations alone would not disable it); optimization is
-    // lazy, so flipping the conf before first plan access is enough.
+    // day again. excludedRules covers both injection paths
+    // (extraOptimizations and a GraftExtensions-injected copy, which
+    // stripping extraOptimizations alone would not disable); optimization
+    // is lazy, so flipping the conf before first plan access is enough.
     val q2 = Tables.events(spark, sf)
       .filter(col("ts_ns") >= lit(loNs) && col("ts_ns") < lit(loNs + 2 * Tables.NsPerDay))
       .groupBy("event_type").count()

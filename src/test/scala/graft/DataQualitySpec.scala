@@ -9,7 +9,7 @@ import graft.functions.DataQuality
   * 15 samples incl. one NaN (acos(12345)), expected metric values
   * printed by cnosdb itself.
   */
-class DataQualitySpec extends AnyFunSuite {
+class DataQualitySpec extends AnyFunSuite with TestSpark {
 
   private val times = Array[Double](1, 3, 4, 6, 10, 13, 14, 16, 18, 19, 22, 24, 26, 31, 33)
   private val values = Array[Double](12.34, 34.54, 1.43, 14.03, 12.30, 11.54, 112.20,
@@ -58,12 +58,6 @@ class DataQualitySpec extends AnyFunSuite {
   }
 
   test("madOutliersCompact equals the three-pass variant on real data") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("event_type", "user_id").collect()
@@ -75,12 +69,6 @@ class DataQualitySpec extends AnyFunSuite {
   }
 
   test("validityStats matches the sequential aggregate's validity on the slt fixture") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val df = times.zip(values).toSeq.map { case (t, v) => ("s1", t, v) }
@@ -95,12 +83,6 @@ class DataQualitySpec extends AnyFunSuite {
   }
 
   test("validityStats equals the whole-series aggregate per group on real data") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     import org.apache.spark.sql.functions._
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
       .filter(col("user_id") < 30)

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Dml
@@ -11,16 +9,7 @@ import graft.operators.Dml
   * dml/update_field.slt, data_tests/data_ttl.slt): NULL predicates
   * neither delete nor update a row, TTL keeps the boundary row.
   */
-class DmlSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class DmlSpec extends AnyFunSuite with TestSpark {
 
   private def df = {
     import spark.implicits._

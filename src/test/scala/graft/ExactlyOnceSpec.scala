@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.FileTime
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,14 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (not batch 0) and the committed sink must contain every input row
   * exactly once — no duplicates from any re-attempted batch, no holes.
   */
-class ExactlyOnceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ExactlyOnceSpec extends AnyFunSuite with TestSpark {
 
   private val NioManager = classOf[graft.streaming.LocalCheckpointFileManager].getName
 

@@ -1,43 +1,19 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** GraftExtensions wires graft's functions, rules and DCL parser into a
   * session — the cluster-deployment registration path.
   */
-class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ExtensionsSpec extends AnyFunSuite {
 
-  private val (priorDefault, priorActive) =
-    (SparkSession.getDefaultSession, SparkSession.getActiveSession)
-
-  lazy val spark: SparkSession = {
-    // The spark.sql.extensions CONFIG is only consulted when the
-    // SparkContext itself is created, and a context started with it
-    // hands graft's extensions to every later session in the test JVM.
-    // The public Builder.withExtensions hook runs the SAME
-    // GraftExtensions entry point on a fresh session over the shared
-    // context — which is exactly what this spec pins: the class works
-    // as a SparkSessionExtensions injector. create() makes the session
-    // the JVM's default and active one only when none is set; afterAll
-    // undoes that, so no later suite inherits it.
-    SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.shuffle.partitions", "2")
-      .withExtensions(new GraftExtensions()(_))
-      .config("spark.ui.enabled", "false")
-      .create()
-  }
-
-  override def afterAll(): Unit = {
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    priorDefault.foreach(SparkSession.setDefaultSession)
-    priorActive.foreach(SparkSession.setActiveSession)
-    super.afterAll()
-  }
+  /** The public Builder.withExtensions hook runs the same GraftExtensions
+    * entry point a cluster reaches through spark.sql.extensions, on a
+    * fresh session over the shared context: this spec pins that the class
+    * works as a SparkSessionExtensions injector. The session is isolated,
+    * so no later suite inherits graft's extensions. */
+  lazy val spark: SparkSession = TestSpark.isolated(extensions = true)
 
   test("tenant/user/role DCL runs through plain spark.sql; Spark-owned DDL untouched") {
     import graft.functions.SessionFunctions

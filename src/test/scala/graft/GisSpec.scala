@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.Gis
 import graft.functions.Gis._
 
-class GisSpec extends AnyFunSuite {
+class GisSpec extends AnyFunSuite with TestSpark {
 
   test("WKT point round-trips through WKB") {
     val g = parseWkt("POINT(1.5 -2.25)")
@@ -118,11 +118,6 @@ class GisSpec extends AnyFunSuite {
   }
 
   test("all 10 st_* functions resolve at the SQL level (reference gis/mod.rs surface)") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     graft.plans.install(spark)
     import spark.implicits._
     Seq(("POINT(2 2)", "POLYGON((0 0, 4 0, 4 4, 0 4, 0 0))", "POLYGON((10 10, 11 10, 11 11, 10 11, 10 10))"))
@@ -174,11 +169,6 @@ class GisSpec extends AnyFunSuite {
   }
 
   test("st_* column lane runs as codegen'd kernels, no ScalaUDF in the plan") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val df = Seq(

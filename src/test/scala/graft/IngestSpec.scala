@@ -10,15 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.LineProtocol
 import graft.streaming.StreamIngest
 
-class IngestSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IngestSpec extends AnyFunSuite with TestSpark {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Honesty gate for the Kafka-transport descope (SURVEY §2.5, VERDICT
@@ -18,14 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * accept a Kafka-shaped frame unchanged (reference stream tables are
   * Kafka-like: query_server/query/src/stream/, ddl/create_stream_table.slt).
   */
-class KafkaTransportSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class KafkaTransportSpec extends AnyFunSuite with TestSpark {
 
   private def connectorPresent: Boolean =
     try {

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,14 +17,7 @@ import graft.sources.{KafkaMiniBroker, KafkaWire}
   * slicing under AvailableNow, and checkpointed offset resume
   * delivering exactly once.
   */
-class KafkaWireSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class KafkaWireSpec extends AnyFunSuite with TestSpark {
 
   private def bytes(s: String): Array[Byte] =
     if (s == null) null else s.getBytes("UTF-8")

@@ -17,26 +17,8 @@ import graft.operators.{Similarity, TextAnalysis}
   */
 class NativeCatalogSpec extends AnyFunSuite {
 
-  /** A new session over the shared context, left neither default nor
-    * active for later suites. */
-  private def create(withExtensions: Boolean): SparkSession = {
-    val (prevDefault, prevActive) = (SparkSession.getDefaultSession, SparkSession.getActiveSession)
-    try {
-      val b = SparkSession.builder()
-        .master("local[2]")
-        .config("spark.sql.shuffle.partitions", "2")
-        .config("spark.ui.enabled", "false")
-      (if (withExtensions) b.withExtensions(new GraftExtensions()(_)) else b).create()
-    } finally {
-      SparkSession.clearDefaultSession()
-      SparkSession.clearActiveSession()
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
-    }
-  }
-
   private lazy val spark: SparkSession = {
-    val s = create(withExtensions = false)
+    val s = TestSpark.isolated(extensions = false)
     plans.install(s)
     s
   }
@@ -50,9 +32,9 @@ class NativeCatalogSpec extends AnyFunSuite {
   test("a GraftExtensions session and an install-only session expose exactly the catalog's 37 names") {
     val names = Native.catalog.map(_._1)
     assert(names.size == 37 && names.distinct == names, names)
-    val bare = create(withExtensions = false)
+    val bare = TestSpark.isolated(extensions = false)
     assert(exposed(bare).isEmpty, "a session without GraftExtensions or install has none")
-    val viaExtensions = create(withExtensions = true)
+    val viaExtensions = TestSpark.isolated(extensions = true)
     plans.install(bare)
     assert(exposed(viaExtensions) == names.toSet)
     assert(exposed(bare) == names.toSet)
@@ -165,7 +147,7 @@ class NativeCatalogSpec extends AnyFunSuite {
   }
 
   test("a second install leaves the function registry unchanged") {
-    val s = create(withExtensions = false)
+    val s = TestSpark.isolated(extensions = false)
     plans.install(s)
     val reg = s.sessionState.functionRegistry
     def snapshot = reg.listFunction().map(id =>

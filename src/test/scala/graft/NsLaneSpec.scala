@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,15 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * contract (whatever the encoding, ts must be exactly ts_ns div 1000)
   * and by the dual-encoding equivalence test.
   */
-class NsLaneSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class NsLaneSpec extends AnyFunSuite with TestSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -1,19 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Multimodal, Sampling, Similarity, TextAnalysis}
 
-class PipelineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PipelineSpec extends AnyFunSuite with TestSpark {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -18,24 +18,7 @@ import graft.plans.SmallSortPlanning
   * several splits keeps one SinglePartition exchange; anything it cannot
   * measure, or a larger input, keeps Spark's range exchange.
   */
-class SmallSortPlanningSpec extends AnyFunSuite {
-
-  /** A session without graft's strategy. The default session may carry
-    * GraftExtensions (which newSession() inherits), so this one is
-    * created, not reused; a context started with spark.sql.extensions
-    * hands them to every session, so such a context is replaced. */
-  private lazy val spark: SparkSession = {
-    def create() = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .create()
-    val s = create()
-    if (!s.sessionState.planner.strategies.contains(SmallSortPlanning)) s
-    else { s.stop(); create() }
-  }
+class SmallSortPlanningSpec extends AnyFunSuite with TestSpark {
 
   /** A fresh session over the shared context, with graft's plan rules
     * installed or not. */
@@ -239,17 +222,7 @@ class SmallSortPlanningSpec extends AnyFunSuite {
   }
 
   test("a GraftExtensions session and an install-only session plan a small ORDER BY the same way") {
-    val (prevDefault, prevActive) = (SparkSession.getDefaultSession, SparkSession.getActiveSession)
-    val viaExtensions = try {
-      SparkSession.builder()
-        .config("spark.sql.extensions", "graft.GraftExtensions")
-        .withExtensions(new GraftExtensions()(_))
-        .create()
-    } finally {
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
-    }
-    viaExtensions.conf.set("spark.sql.shuffle.partitions", "4")
+    val viaExtensions = TestSpark.isolated(extensions = true)
     assert(!viaExtensions.experimental.extraStrategies.contains(SmallSortPlanning),
       "the extension session must get the strategy from GraftExtensions alone")
     def plan(s: SparkSession) =

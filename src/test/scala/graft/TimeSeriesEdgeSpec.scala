@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,15 +9,7 @@ import graft.functions.TimeSeries
   * from the reference slt edge rows: empty inputs, single-sample
   * series, null values, all-equal timestamps.
   */
-class TimeSeriesEdgeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TimeSeriesEdgeSpec extends AnyFunSuite with TestSpark {
 
   import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,14 +12,7 @@ import graft.sources.{LokiPush, OtlpTrace, PromRemote, WireHttp}
   * route semantics — main/src/http/http_service.rs:484,691,1149,1259,
   * 1524,1673).
   */
-class WireHttpSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WireHttpSpec extends AnyFunSuite with TestSpark {
 
   private def tmpSpool(): String =
     java.nio.file.Files.createTempDirectory("graft_wirehttp_spec").toString
