@@ -11,10 +11,11 @@ import scala.collection.concurrent.TrieMap
   * A staged layout is written ONCE per (logical key, source fingerprint)
   * and reused across sessions — the local stand-in for the one-time
   * layout job a production lake runs at write time. The fingerprint
-  * (total bytes + file count + max mtime of the source paths) is folded
-  * into the cache key so a REGENERATED lake at the same path restages
+  * (total bytes + file count + max mtime of the source paths) names the
+  * staged directory, so a REGENERATED lake at the same path restages
   * instead of silently answering from the stale copy and surfacing as a
-  * confusing oracle hash mismatch (ADVICE r10).
+  * confusing oracle hash mismatch (ADVICE r10). Within one JVM the root
+  * is looked up through [[Memo]], under its one validity rule.
   *
   * Writes are crash- and race-safe (ADVICE r11): the layout is written
   * to a writer-private temp directory and atomically renamed into place
@@ -41,29 +42,24 @@ object Lake {
     s"$bytes:$files:$mtime"
   }
 
-  private val stagedDirs = TrieMap.empty[String, String]
-
   /** Stage a derived dataset once per (logical key, source fingerprint)
     * under the JVM tmpdir and return its root. `write` must leave a
     * `_SUCCESS` marker (every Spark parquet/text write does) — it is
     * REQUIRED before the staged directory is published, so a crashed
     * partial write is retried on the next call, never reused.
     */
-  def staged(logicalKey: String, srcPaths: Seq[String])(write: Path => Unit): String = {
-    val key = logicalKey + "|" + srcPaths.map(fingerprint).mkString(",")
-    // getOrElseUpdate may evaluate the thunk more than once under
-    // same-key contention (TrieMap semantics); the body below is
+  def staged(logicalKey: String, srcPaths: Seq[String])(write: Path => Unit): String =
+    // two threads that miss together both run the body; it is
     // idempotent — every evaluation converges on the same published dir
     // through the file lock — so double evaluation is waste, not a race.
-    stagedDirs.getOrElseUpdate(key, {
+    Memo.withToken(s"staged|$logicalKey", srcPaths) { tok =>
       val hash = java.security.MessageDigest.getInstance("MD5")
-        .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
+        .digest(s"$logicalKey|$tok".getBytes("UTF-8")).map("%02x".format(_)).mkString
       val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft_stage")
       val dir = base.resolve(hash)
       if (!Files.exists(dir.resolve("_SUCCESS"))) stageLocked(base, hash, dir, write)
       dir.toString
-    })
-  }
+    }
 
   // JDK file locks are held per-JVM: a second lock() on the same file
   // from THIS process throws OverlappingFileLockException instead of

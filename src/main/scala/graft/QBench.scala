@@ -5,7 +5,10 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
+  SparkListenerJobStart}
+import org.apache.spark.sql.execution.{SQLExecution, SparkPlanInfo}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 
 /** Single-query bench/explain harness for iterating:
@@ -46,14 +49,25 @@ object QBench {
     // (jobId, run tag, description, wall ms)
     val jobLog = new ConcurrentLinkedQueue[(Int, String, String, Long)]()
     val starts = new ConcurrentHashMap[Int, (Long, String, String)]()
+    // SQL execution id → the root operator of its plan; the bus delivers
+    // an execution's start before the start of any job it runs
+    val planRoots = new ConcurrentHashMap[Long, String]()
     spark.sparkContext.addSparkListener(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => planRoots.put(x.executionId, planRoot(x.sparkPlanInfo))
+        case _ =>
+      }
       override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val desc = Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .filter(_.nonEmpty).map(oneLine)
-          .orElse(js.stageInfos.sortBy(_.stageId).lastOption.map(operator))
+        def prop(k: String) = Option(js.properties).flatMap(p => Option(p.getProperty(k)))
+        // a final stage built by an RDD method (`mapPartitionsInternal`)
+        // names no operator; its SQL execution's plan does
+        def byPlan(op: String) = if (!op.head.isLower) op else
+          prop(SQLExecution.EXECUTION_ID_KEY).flatMap(id => Option(planRoots.get(id.toLong)))
+            .getOrElse(op)
+        val desc = prop("spark.job.description").filter(_.nonEmpty).map(oneLine)
+          .orElse(js.stageInfos.sortBy(_.stageId).lastOption.map(operator).map(byPlan))
           .getOrElse("?")
-        val tag = Option(js.properties).flatMap(p => Option(p.getProperty(RunTag))).getOrElse("")
-        starts.put(js.jobId, (js.time, tag, desc))
+        starts.put(js.jobId, (js.time, prop(RunTag).getOrElse(""), desc))
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit =
         Option(starts.remove(je.jobId)).foreach { case (t0, tag, desc) =>
@@ -126,10 +140,18 @@ object QBench {
   /** A job without a description is named by the operator whose scope
     * built its final stage's RDD, e.g. `Exchange` or
     * `WholeStageCodegen (3)`; the call site names only the pool thread
-    * that AQE ran the action on.
+    * that AQE ran the action on. A scope that is an RDD method gives
+    * way to the root operator of the job's SQL execution ([[planRoot]]).
     */
   private def operator(stage: org.apache.spark.scheduler.StageInfo): String =
     stage.rddInfos.flatMap(_.scope).headOption.map(_.name).getOrElse(stage.name)
+
+  /** The root operator of a SQL execution's plan, below the
+    * `AdaptiveSparkPlan` wrapper, e.g. `Execute InsertIntoHadoopFsRelationCommand`.
+    */
+  private def planRoot(plan: SparkPlanInfo): String =
+    if (plan.nodeName == "AdaptiveSparkPlan") plan.children.headOption.fold(plan.nodeName)(planRoot)
+    else plan.nodeName
 
   /** A micro-batch job's description is Spark's multi-line
     * `<name>\nid = …\nrunId = …\nbatch = N`; it prints as

@@ -37,10 +37,15 @@ package graft
   * from executor count anyway.
   */
 object Sizing {
-  def parquetBytes(dir: String): Long = {
+  def parquetBytes(dir: String): Long = bytesUnder(dir, _.getName.endsWith(".parquet"))
+
+  /** Bytes of every file under `dir`, whatever its format. */
+  def fileBytes(dir: String): Long = bytesUnder(dir, _ => true)
+
+  private def bytesUnder(dir: String, keep: java.io.File => Boolean): Long = {
     def walk(f: java.io.File): Long =
       if (f.isDirectory) Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-      else if (f.getName.endsWith(".parquet")) f.length()
+      else if (keep(f)) f.length()
       else 0L
     walk(new java.io.File(dir))
   }
@@ -83,28 +88,31 @@ object Sizing {
 
   /** State/shuffle width for ONE stream-replay micro-batch — the
     * [[shufflePartitions]] 8 MB/partition rule applied to the bytes a
-    * single trigger carries (lake bytes ÷ staged files), because a
-    * stateful micro-batch pays a state-store open/commit plus one sink
-    * file per partition per TRIGGER: r14 measured the K=4 sf0.1 replay
-    * (≈4 MB/trigger) at 5.3 s with 8 partitions vs 3.2 s with the
-    * derived 1 — the fixed per-partition costs dwarfed the rows. Floor
-    * 1 (a micro-batch is per-definition small; no core-count floor —
-    * that would re-introduce the constant this replaces), cap shared
-    * with the batch rule. At sf10 the events stage (~170 MB) derives 6
-    * — BENCH_SCALING's measured derivation — and on a real cluster
+    * single trigger carries, because a stateful micro-batch pays a
+    * state-store open/commit plus one sink file per partition per
+    * TRIGGER: r14 measured the K=4 sf0.1 replay (≈4 MB/trigger) at 5.3 s
+    * with 8 partitions vs 3.2 s with the derived 1 — the fixed
+    * per-partition costs dwarfed the rows. Floor 1 (a micro-batch is
+    * per-definition small; no core-count floor — that would
+    * re-introduce the constant this replaces), cap shared with the
+    * batch rule. At sf10 the events stage (~170 MB) derives 6 —
+    * BENCH_SCALING's measured derivation — and on a real cluster
     * maxOffsetsPerTrigger fixes bytes/trigger, so the width tracks
-    * ration size, not corpus size. r15 (ADVICE r14): this lake-dir
-    * form is now only the FALLBACK for lanes that never stage a dir
-    * (kafka reads the broker log); staged lanes derive from their own
-    * staged bytes in StreamQueries.stageDir, since a lane stages one —
-    * often projected — table, not the whole lake.
+    * ration size, not corpus size. This is the one stream width rule:
+    * the replays take the bytes from the staged files their stream
+    * reads (StreamQueries.replayWidth), CREATE STREAM from its source
+    * table.
     */
-  def streamReplayParts(lakeDir: String, stageFiles: Int,
-                        bytesPerPartition: Long = 8L << 20,
-                        cap: Int = 8192): Int = {
-    val perTrigger = parquetBytes(lakeDir).toDouble / math.max(1, stageFiles)
-    math.min(cap, math.max(1, math.ceil(perTrigger / bytesPerPartition).toInt))
-  }
+  def streamReplayParts(bytesPerTrigger: Double): Int =
+    math.min(8192, math.max(1, math.ceil(bytesPerTrigger / (8L << 20)).toInt))
+
+  /** [[streamReplayParts]] for a trigger that carries 1/`stageFiles` of
+    * the parquet bytes under `lakeDir`: the rule for a stream that reads
+    * no staged files (the Kafka replay reads the broker log), and for a
+    * CREATE STREAM job over its source table.
+    */
+  def streamReplayParts(lakeDir: String, stageFiles: Int): Int =
+    streamReplayParts(parquetBytes(lakeDir).toDouble / math.max(1, stageFiles))
 
   // NOTE (r11, negative result worth keeping): scaling
   // spark.sql.files.maxPartitionBytes DOWN for the small day-partitioned

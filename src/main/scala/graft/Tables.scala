@@ -17,6 +17,14 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * predicates from event-time predicates so a one-day query is O(day),
   * not O(lake), at FILE LISTING time — everywhere, not just in the
   * prune-assert lane (VERDICT r10 #1).
+  *
+  * A raw table and the day layout are read once per (path, session)
+  * through [[Memo]]: a fresh `spark.read.parquet` re-reads footers for
+  * schema inference and rebuilds the FileIndex, and the lanes call this
+  * hundreds of times per run for the same static paths. Memo's one rule
+  * keeps them valid while the source parquet's fingerprint is unchanged,
+  * so a lake regenerated at the same path is read fresh, never through a
+  * stale FileIndex.
   */
 object Tables {
   /** 86 400 s in nanoseconds: the day-partition granule. */
@@ -26,23 +34,10 @@ object Tables {
     if (name == "events") events(spark, dir) else read(spark, dir, name)
   }
 
-  // Memoized like eventsFrames below and for the same reason scaled
-  // down: a fresh spark.read.parquet re-reads footers for schema
-  // inference and rebuilds the FileIndex on every call, and the suite
-  // calls this hundreds of times per run for the same static paths. A
-  // catalog table would share the relation across queries; this is the
-  // path-based equivalent. The key rides the same source fingerprint
-  // (bytes:files:mtime) as Lake.staged (ADVICE r14): a lake regenerated
-  // at the same path within one JVM rebuilds the relation instead of
-  // serving a stale FileIndex (FileNotFoundException / stale rows).
   private def read(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    rawFrames.getOrElseUpdate((spark, path, graft.Lake.fingerprint(path)),
-      spark.read.parquet(path))
+    Memo("table", Seq(path), spark)(spark.read.parquet(path))
   }
-
-  private val rawFrames =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
 
   /** events with BOTH time views every downstream operator keys on:
     * `ts` as a proper (micro-precision) timestamp and `ts_ns` as BIGINT
@@ -83,21 +78,14 @@ object Tables {
     */
   def eventsDayLake(spark: SparkSession, dir: String): DataFrame = {
     plans.install(spark)
-    val root = eventsLakeRoot(spark, dir)
-    // Memoize the scan relation per (session, root): building a fresh
-    // DataFrame re-lists every day directory and re-infers the schema
-    // in a job of its own — at 3000 day dirs that listing costs ~20× the
-    // one-day read it precedes (measured: 5.9 s vs 0.3 s at span100). A
-    // catalog-backed table shares its FileIndex across queries; this is
-    // the path-based equivalent. The Lake staging key already
-    // fingerprints the SOURCE lake, and a regenerated source yields a
-    // new root, so a stale memo entry can only describe a root that no
-    // longer receives reads.
-    eventsFrames.getOrElseUpdate((spark, root), spark.read.parquet(root))
+    // One relation per (source lake, session): a fresh one re-lists every
+    // day directory and infers the schema in a job of its own — at 3000
+    // day dirs that costs ~20× the one-day read it precedes (measured:
+    // 5.9 s vs 0.3 s at span100). Keyed on the SOURCE parquet, so a hit
+    // takes one fingerprint, as the staging lookup does.
+    val src = s"$dir/events.parquet"
+    Memo("events day lake", Seq(src), spark)(spark.read.parquet(eventsLakeRoot(spark, dir)))
   }
-
-  private val eventsFrames =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 
   /** SQL for the partition day of a BIGINT-ns event-time column: FLOOR
     * division to the day granule. Spark's bare `ts div NsPerDay`
@@ -185,14 +173,13 @@ object Tables {
     */
   /** Bucket-count capacity knob (VERDICT r13 #7): derived from the
     * lake via [[Sizing.bucketCount]], never hard-coded. The target is
-    * env-tunable so the layout witnesses can be RE-PROVEN at a second
-    * derived count; the env value rides the staging key, so flipping
-    * it stages a fresh layout instead of mislabeling an existing one.
+    * tunable through the `graft.bucket.target.bytes` system property so
+    * the layout witnesses can be RE-PROVEN at a second derived count;
+    * the value rides the staging key, so flipping it stages a fresh
+    * layout instead of mislabeling an existing one.
     */
   private def bucketTargetBytes: Long =
-    sys.props.get("graft.bucket.target.bytes").orElse(
-      sys.env.get("SPARK_GRAFT_BUCKET_TARGET_BYTES")).map(_.toLong)
-      .getOrElse(128L << 20)
+    sys.props.get("graft.bucket.target.bytes").map(_.toLong).getOrElse(128L << 20)
 
   /** The staged layout carries its own bucket count (`_graft_buckets`,
     * underscore-prefixed so Spark's file index ignores it): the DDL

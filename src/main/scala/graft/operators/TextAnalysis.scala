@@ -727,42 +727,48 @@ object TextAnalysis {
     // (round, pair, cnt) — the per-round token totals are attached below
     val picked = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
     val totals = scala.collection.mutable.ArrayBuffer.empty[Long]
-    (1 to rounds).foreach { r =>
-      // round r's pair-count job doubles as round r-1's token count: an
-      // observe metric on `cur` (which carries r-1 applied merges) sums
-      // size·cnt in the SAME pass the pair aggregation consumes — one
-      // job per round instead of the former pair-job + count-job two
-      // (guide §1.2 one-pass discipline; the appendWriteCounted pattern)
-      val obs = org.apache.spark.sql.Observation()
-      val observed = cur.observe(obs,
-        sum((size(split(trim(col("s")), " ")) * col("cnt")).cast("long")).as("total"))
-      val toks = observed.withColumn("t", split(trim(col("s")), " "))
-        .filter(size(col("t")) >= 2) // single-token words carry no pairs
-      val top = toks
-        .select(col("cnt"), explode(transform(sequence(lit(0), size(col("t")) - 2),
-          i => concat_ws(" ", element_at(col("t"), i + 1), element_at(col("t"), i + 2))))
-          .as("pair"))
-        .groupBy("pair").agg(sum("cnt").as("n"))
-        .orderBy(col("n").desc, col("pair")).limit(1)
-        .collect()
-      require(top.nonEmpty, s"bpeLearn: vocabulary exhausted at round $r")
-      if (r > 1) totals += obs.get("total").asInstanceOf[Long]
-      val (pair, n) = (top(0).getString(0), top(0).getLong(1))
-      // two plain-replace passes = canonical greedy left-to-right BPE:
-      // one pass misses an occurrence whose leading space was consumed
-      // by the previous match, and such missed occurrences are never
-      // adjacent (a taken match sits between them), so pass 2 gets them
-      // all — identical non-overlapping semantics in DuckDB's replace()
-      val search = lit(s" $pair ")
-      val repl = lit(s" ${pair.replace(" ", "")} ")
-      cur = cur.withColumn("s", replace(replace(col("s"), search, repl), search, repl))
-      picked += ((r.toLong, pair, n))
-    }
-    // the LAST round's post-merge total has no following pair job to
-    // ride — one dedicated count closes the ledger
-    totals += cur
-      .select(sum((size(split(trim(col("s")), " ")) * col("cnt")).cast("long")))
-      .head.getLong(0)
+    // the cache serves this call's rounds only: left persisted, Spark's
+    // CacheManager would hand it to every later plan over the same corpus
+    // (the next lane, the next pass), which would skip the corpus
+    // aggregate. Every use below is an eager action.
+    try {
+      (1 to rounds).foreach { r =>
+        // round r's pair-count job doubles as round r-1's token count: an
+        // observe metric on `cur` (which carries r-1 applied merges) sums
+        // size·cnt in the SAME pass the pair aggregation consumes — one
+        // job per round instead of the former pair-job + count-job two
+        // (guide §1.2 one-pass discipline; the appendWriteCounted pattern)
+        val obs = org.apache.spark.sql.Observation()
+        val observed = cur.observe(obs,
+          sum((size(split(trim(col("s")), " ")) * col("cnt")).cast("long")).as("total"))
+        val toks = observed.withColumn("t", split(trim(col("s")), " "))
+          .filter(size(col("t")) >= 2) // single-token words carry no pairs
+        val top = toks
+          .select(col("cnt"), explode(transform(sequence(lit(0), size(col("t")) - 2),
+            i => concat_ws(" ", element_at(col("t"), i + 1), element_at(col("t"), i + 2))))
+            .as("pair"))
+          .groupBy("pair").agg(sum("cnt").as("n"))
+          .orderBy(col("n").desc, col("pair")).limit(1)
+          .collect()
+        require(top.nonEmpty, s"bpeLearn: vocabulary exhausted at round $r")
+        if (r > 1) totals += obs.get("total").asInstanceOf[Long]
+        val (pair, n) = (top(0).getString(0), top(0).getLong(1))
+        // two plain-replace passes = canonical greedy left-to-right BPE:
+        // one pass misses an occurrence whose leading space was consumed
+        // by the previous match, and such missed occurrences are never
+        // adjacent (a taken match sits between them), so pass 2 gets them
+        // all — identical non-overlapping semantics in DuckDB's replace()
+        val search = lit(s" $pair ")
+        val repl = lit(s" ${pair.replace(" ", "")} ")
+        cur = cur.withColumn("s", replace(replace(col("s"), search, repl), search, repl))
+        picked += ((r.toLong, pair, n))
+      }
+      // the LAST round's post-merge total has no following pair job to
+      // ride — one dedicated count closes the ledger
+      totals += cur
+        .select(sum((size(split(trim(col("s")), " ")) * col("cnt")).cast("long")))
+        .head.getLong(0)
+    } finally vocab.unpersist()
     val merges = picked.zip(totals).map { case ((r, p, n), t) => (r, p, n, t) }
     merges.toSeq.toDF("round", "pair", "cnt", "vocab_tokens_after")
   }

@@ -10,8 +10,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, Repartition}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.SessionBridge
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
 
 import graft.Tables
 import graft.sources.LineProtocol
@@ -42,6 +42,13 @@ import graft.streaming.{LocalCheckpointFileManager, StreamIngest}
   * its first micro-batch. And when the derived width is 1, the input is
   * read as one partition below the stateful operators, so a micro-batch
   * runs as one stage with no exchange.
+  *
+  * Every value a lane derives from the lake — a staged layout
+  * ([[graft.Lake.staged]]), its schema, the corpus max event time, the
+  * uniqueness precondition — is held in [[graft.Memo]] and stays valid
+  * while the source's fingerprint is unchanged, and a replay's width is
+  * read off the stream it starts ([[replayWidth]]), so nothing passes
+  * from one lane to the next outside the memo.
   *
   * Determinism across the batch boundary is BY CONSTRUCTION, not luck:
   * the staging range-partitions on the lane's event-order column (ts
@@ -77,42 +84,39 @@ object StreamQueries {
     */
   private[graft] val replayBatches = TrieMap.empty[String, Int]
 
-  /** State/shuffle partition count for the replay itself. The conf at
-    * query START pins the stateful operators' partition count for the
+  /** The state/shuffle width ([[replayWidth]]) of the most recent replay
+    * of each sink name.
+    */
+  private[graft] val replayWidths = TrieMap.empty[String, Int]
+
+  /** State/shuffle partition count for a replay of `stream`. The conf
+    * at query START pins the stateful operators' partition count for the
     * checkpoint's lifetime, so this is a per-replay sizing knob, not a
     * session-wide one: a micro-batch here carries ~1/K of the staged
     * lake, and running it through the session's batch-sized partition
     * count spends more on task dispatch + per-partition state-store
     * open/commit + one tiny sink file per partition than on rows
     * (measured at sf0.1: 32 partitions ≈ 1.0 s/batch vs 8 ≈ 0.45 s for
-    * the same 26k rows — the suite's 75 s stream subtotal was mostly
-    * this). r14: the width is now DERIVED from the bytes one trigger
-    * carries, through the suite's 8 MB/partition rule, floor 1,
-    * replacing the r13 constant 8 that was still a local-bench tuning
-    * (5.3 → 3.2 s/replay measured at sf0.1). r15 (ADVICE r14): the
-    * bytes come from the lane's OWN staged dir (recorded by [[stageDir]]
-    * below — total staged bytes ÷ StageFiles; sf10's events stage is
-    * ~170 MB → ~6 partitions, matching BENCH_SCALING's measured
-    * derivation), not from the whole lake dir — a lane staging one
-    * projected table was over-widened by the lake-to-table ratio.
-    * Lanes that never stage (the kafka source reads the broker log)
-    * fall back to the lake-dir derivation. Every stateful operator
-    * here is key-deterministic, so the partition count cannot change
-    * any result. This derivation is the only width a lane's replay
-    * gets; [[streamScope]] reads it to pick the one-stage plan.
+    * the same 26k rows).
+    *
+    * The width is [[graft.Sizing.streamReplayParts]] over the bytes one
+    * trigger carries, read off the stream itself: each streaming
+    * file-source leaf (parquet, text or binaryFile) reads a staged root
+    * of `StageFiles` part files delivered one per trigger, so a trigger
+    * carries the root's bytes ÷ `StageFiles`; the largest leaf wins. A
+    * lane staging one projected table is sized by that table, not by
+    * the whole lake. A stream with no file-source leaf (the Kafka lane
+    * reads the broker log) takes the lake-dir rule. Every stateful
+    * operator here is key-deterministic, so the partition count cannot
+    * change any result; [[streamScope]] reads it to pick the one-stage
+    * plan.
     */
-  private val stagedTriggerBytes = new ThreadLocal[Long] {
-    override def initialValue(): Long = -1L
-  }
-  private def replayParts(lakeDir: String): Int = {
-    // consume the recorded staging on EVERY derivation (the sink lanes
-    // derive width without going through replay) so one lane's staged
-    // bytes can never leak into the next lane's width
-    val staged = stagedTriggerBytes.get()
-    stagedTriggerBytes.remove()
-    if (staged >= 0L)
-      math.min(8192, math.max(1, math.ceil(staged.toDouble / (8L << 20)).toInt))
-    else graft.Sizing.streamReplayParts(lakeDir, StageFiles)
+  private[graft] def replayWidth(stream: DataFrame, lakeDir: String): Int = {
+    val perTrigger = stream.queryExecution.analyzed.collect {
+      case r: StreamingRelation => r.dataSource.options.get("path")
+    }.flatten.map(root => graft.Sizing.fileBytes(root) / StageFiles)
+    if (perTrigger.isEmpty) graft.Sizing.streamReplayParts(lakeDir, StageFiles)
+    else graft.Sizing.streamReplayParts(perTrigger.max.toDouble)
   }
 
   /** The conf Spark reads to pick its checkpoint file manager. A replay
@@ -179,8 +183,8 @@ object StreamQueries {
     * configures, inside [[streamScope]], and waits for it to drain. The
     * scoped confs stay set until the query has terminated, so every
     * checkpoint writer it creates sees them. Records the data-bearing
-    * micro-batches under `name` in [[replayBatches]] and returns the
-    * terminated query.
+    * micro-batches and the width under `name` in [[replayBatches]] and
+    * [[replayWidths]] and returns the terminated query.
     */
   private[graft] def runAvailableNow(s: SparkSession, name: String, parts: Int,
       stream: DataFrame)(sink: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery = {
@@ -190,6 +194,7 @@ object StreamQueries {
       q0
     }
     replayBatches(name) = q.recentProgress.count(_.numInputRows > 0)
+    replayWidths(name) = parts
     q
   }
 
@@ -205,8 +210,7 @@ object StreamQueries {
   private def replay(s: SparkSession, out: DataFrame, name: String,
                      lakeDir: String): DataFrame = {
     val root = Files.createTempDirectory(s"graft_replay_$name").toString
-    // replayParts consumes this lane's staging record
-    runAvailableNow(s, name, replayParts(lakeDir), out) {
+    runAvailableNow(s, name, replayWidth(out, lakeDir), out) {
       _.format("parquet")
         .option("path", s"$root/data")
         .option("checkpointLocation", s"$root/ckpt")
@@ -261,28 +265,18 @@ object StreamQueries {
       .filter(p => Files.exists(Paths.get(p)))
     require(srcs.nonEmpty,
       s"stream staging found neither events.parquet nor documents.parquet under $lakeDir")
-    val root = graft.Lake.staged(s"stream|$lakeDir/$lane|$StageFiles", srcs) { dir =>
+    graft.Lake.staged(s"stream|$lakeDir/$lane|$StageFiles", srcs) { dir =>
       write(dir); pinMtimes(dir)
     }
-    // Record this lane's actual per-trigger payload (staged bytes ÷
-    // files staged) for replayParts — any format (parquet/text/binary),
-    // so walk raw file sizes, not just *.parquet.
-    def rawBytes(f: java.io.File): Long =
-      if (f.isDirectory) Option(f.listFiles()).map(_.map(rawBytes).sum).getOrElse(0L)
-      else f.length()
-    val perTrigger = rawBytes(new java.io.File(root)) / math.max(1, StageFiles)
-    stagedTriggerBytes.set(math.max(stagedTriggerBytes.get(), perTrigger))
-    root
   }
-  private val stagedSchemas = TrieMap.empty[String, StructType]
-  private def staged(s: SparkSession, df: DataFrame, orderCol: String,
-                     lakeDir: String, lane: String): DataFrame = {
+  private[graft] def staged(s: SparkSession, df: DataFrame, orderCol: String,
+                            lakeDir: String, lane: String): DataFrame = {
     val root = stageDir(lakeDir, lane, dir =>
       df.repartitionByRange(StageFiles, col(orderCol))
         .write.mode("overwrite").parquet(dir.toString))
     // a published staged dir never changes, and its root carries the
     // source fingerprint, so its schema is inferred once per root
-    val schema = stagedSchemas.getOrElseUpdate(root, s.read.parquet(root).schema)
+    val schema = graft.Memo("staged schema", Seq(root))(s.read.parquet(root).schema)
     s.readStream
       .schema(schema)
       .option("pathGlobFilter", "part-*")
@@ -317,25 +311,24 @@ object StreamQueries {
   private def eventsStream(s: SparkSession, dir: String): DataFrame =
     staged(s, Tables.eventsNanos(s, dir), "ts", dir, "events_by_ts_ns")
 
-  /** The stateful-lane equivalence precondition, asserted loudly: per
-    * (event_type, µs-timestamp) keys must be unique, else
-    * streamingIncrease/streamingGapfillLocf drop ties (`p.ts_us <=
-    * lastTs`) that the SQL oracle keeps and the only symptom would be
-    * an opaque hash mismatch. One cached aggregate scan per lake dir.
-    */
-  /** Corpus max event time (µs), cached per lake dir: the windowed and
+  /** Corpus max event time (µs), once per events lake: the windowed and
     * session lanes both clip to windows strictly before this scalar
     * (emit-boundary independence), so share ONE lake scan across the
     * stream entries instead of re-aggregating per entry (VERDICT r5 #7).
     */
-  private val maxUsCache = TrieMap.empty[String, Long]
-  private def globalMaxUs(s: SparkSession, dir: String): Long =
-    maxUsCache.getOrElseUpdate(dir,
+  private[graft] def globalMaxUs(s: SparkSession, dir: String): Long =
+    graft.Memo("events max ts_us", Seq(s"$dir/events.parquet"))(
       Tables(s, dir, "events").agg(max(expr("ts_ns div 1000"))).head.getLong(0))
 
-  private val uniqueTsOk = TrieMap.empty[String, Boolean]
-  private def requireUniqueSeriesTs(s: SparkSession, dir: String): Unit =
-    if (!uniqueTsOk.contains(dir)) {
+  /** The stateful-lane equivalence precondition, asserted loudly: per
+    * (event_type, µs-timestamp) keys must be unique, else
+    * streamingIncrease/streamingGapfillLocf drop ties (`p.ts_us <=
+    * lastTs`) that the SQL oracle keeps and the only symptom would be
+    * an opaque hash mismatch. One aggregate scan per events lake; a
+    * lake that fails it is checked again on the next call.
+    */
+  private[graft] def requireUniqueSeriesTs(s: SparkSession, dir: String): Unit =
+    graft.Memo("unique series ts", Seq(s"$dir/events.parquet")) {
       val r = Tables.eventsNanos(s, dir)
         .select(col("event_type"), expr("ts div 1000").as("ts_us"))
         .agg(count(lit(1)).as("n"), countDistinct(col("event_type"), col("ts_us")).as("d"))
@@ -345,7 +338,6 @@ object StreamQueries {
           s"${r.getLong(0) - r.getLong(1)} duplicate (event_type, ts_us) keys — the " +
           "stateful streaming operators drop timestamp ties while the SQL oracle " +
           "keeps them; dedup the lake before running the stream_* entries")
-      uniqueTsOk(dir) = true
     }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -910,11 +902,10 @@ object StreamQueries {
       val root = Files.createTempDirectory("graft_stream_daylake").toString
       // floor-day arithmetic shared with the batch lake writer, so the
       // pruning rule's Math.floorDiv inverts BOTH layouts exactly —
-      // including pre-epoch instants (ADVICE r11). Built BEFORE the
-      // width derivation so replayParts sees THIS lane's staged bytes.
+      // including pre-epoch instants (ADVICE r11).
       val src = eventsStream(s, dir)
         .withColumn("day", expr(graft.Tables.dayOfNsSql("ts")))
-      runAvailableNow(s, "stream_sink_partitioned", replayParts(dir), src) {
+      runAvailableNow(s, "stream_sink_partitioned", replayWidth(src, dir), src) {
         _.format("parquet")
           .option("path", s"$root/data")
           .option("checkpointLocation", s"$root/ckpt")
@@ -983,9 +974,8 @@ object StreamQueries {
            |CLUSTERED BY (event_type) SORTED BY (event_type, ts) INTO $buckets BUCKETS
            |LOCATION '$root'""".stripMargin)
       val dataCols = Seq("event_id", "ts", "user_id", "event_type", "value", "props")
-      // staged before the width derivation (see stream_sink_partitioned)
       val srcStream = eventsStream(s, dir)
-      runAvailableNow(s, "stream_sink_unified", replayParts(dir), srcStream) {
+      runAvailableNow(s, "stream_sink_unified", replayWidth(srcStream, dir), srcStream) {
         _.foreachBatch { (batch: DataFrame, batchId: Long) =>
             val v = s"graft_stream_uni_b${batchId}_${System.nanoTime()}"
             batch.withColumn("day", expr(graft.Tables.dayOfNsSql("ts")))

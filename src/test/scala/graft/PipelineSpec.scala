@@ -1867,6 +1867,16 @@ class PipelineSpec extends AnyFunSuite with TestSpark {
     assert(ex.getMessage.contains("vocabulary exhausted"))
   }
 
+  test("bpeLearn leaves no persisted RDD behind, also when a round fails") {
+    import spark.implicits._
+    val docs = Seq((1L, "aaab aaab"), (2L, "ab")).toDF("doc_id", "text")
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    TextAnalysis.bpeLearn(docs, "text", 3).collect()
+    intercept[Exception](TextAnalysis.bpeLearn(docs, "text", 4))
+    assert((persisted -- before).isEmpty, s"left persisted: ${persisted -- before}")
+  }
+
   test("bpe_seg_count kernel ≡ the composed transform/replace chain") {
     import spark.implicits._
     // doc 4 pins the run>=5 self-pair + cascading-merge case: "bbbbb"
