@@ -258,7 +258,7 @@ object Bench {
     // The list is normally empty/tiny, so it fits the stdout line's
     // fixed-size tail-capture budget (the full queries map does not).
     val regressions: Seq[String] = {
-      val basePath = sys.env.getOrElse("SPARK_GRAFT_BASELINE", "BENCH_SELF_r13.json")
+      val basePath = sys.env.getOrElse("SPARK_GRAFT_BASELINE", "BENCH_SELF_r14.json")
       try {
         val txt = java.nio.file.Files.readString(java.nio.file.Paths.get(basePath))
         val baseSf = "\"sf\":\"([^\"]+)\"".r.findFirstMatchIn(txt).map(_.group(1))

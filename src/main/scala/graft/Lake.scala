@@ -102,7 +102,7 @@ object Lake {
       } finally ch.close()
     }
 
-  private def deleteRecursively(p: Path): Unit = {
+  private[graft] def deleteRecursively(p: Path): Unit = {
     if (Files.isDirectory(p, java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
       val s = Files.list(p)
       try s.iterator().forEachRemaining(deleteRecursively) finally s.close()

@@ -1454,7 +1454,7 @@ final class AdminEngine(
 
   /** A stream table as a streaming DataFrame: readStream over the
     * source tskv table's parquet path (each INSERT lands one file →
-    * one micro-batch at the default maxFilesPerTrigger=1), projected
+    * one micro-batch at maxFilesPerTrigger=1), projected
     * to the declared columns, watermarked on the event-time column
     * with the reference's 0ms delay (the explain in stream/basic.slt:
     * "Watermark: event_time=time, delay=0ms"). */
@@ -1466,9 +1466,8 @@ final class AdminEngine(
       srcT.columns.filter(_.colType != "TIME").sortBy(_.ordinal)
         .map(c => StructField(c.physical,
           if (c.colType == "TAG") StringType else sparkType(c.dataType))))
-    val maxFiles = spark.conf.get("spark.graft.stream.maxFilesPerTrigger", "1")
     val raw = spark.readStream.schema(phys)
-      .option("maxFilesPerTrigger", maxFiles)
+      .option("maxFilesPerTrigger", "1")
       .parquet(tablePath(st.db, st.table))
     val byName = srcT.columns.map(c => c.name -> c).toMap
     val cols = st.columns.map { sc =>
@@ -1552,33 +1551,21 @@ final class AdminEngine(
         // partition costs a store open/commit plus a sink file PER
         // BATCH whatever it holds. The conf read at query start pins
         // the stateful operators' partitioning for the checkpoint's
-        // lifetime, so this is a per-job capacity knob — same rule as
-        // the replay harness: DERIVED from the bytes one trigger
-        // carries (source-table bytes ÷ part files × the configured
-        // maxFilesPerTrigger — a trigger reads that many files — through
-        // Sizing's 8 MB/partition rule), replacing the r13 constant 8.
-        // Caveat (ADVICE r14): the width is derived ONCE here from the
+        // lifetime: the width is DERIVED from the bytes one trigger
+        // carries (source-table bytes ÷ part files, one file per
+        // trigger) through Sizing's 8 MB/partition rule.
+        // Caveat (ADVICE r14): it is derived ONCE here from the
         // source's CURRENT bytes and pinned for the checkpoint's
         // lifetime — a job created against an empty/young table keeps
-        // the floor width even if the table grows; recreate the job (or
-        // set spark.graft.stream.shufflePartitions) after bulk growth.
-        // spark.graft.stream.shufflePartitions stays as the explicit
-        // override.
-        val streamParts = spark.conf.getOption("spark.graft.stream.shufflePartitions")
-          .getOrElse {
-            val src = tablePath(st.db, st.table)
-            val filesPerTrigger = spark.conf
-              .get("spark.graft.stream.maxFilesPerTrigger", "1").toInt
-            val srcFiles = math.max(1, graft.Sizing.parquetFileCount(src))
-            // bytes/trigger = (bytes/file) × files/trigger; expressed
-            // through the shared rule by shrinking the divisor.
-            graft.Sizing.streamReplayParts(src,
-              math.max(1, srcFiles / math.max(1, filesPerTrigger))).toString
-          }
+        // the floor width even if the table grows; recreate the job
+        // after bulk growth.
+        val src = tablePath(st.db, st.table)
+        val streamParts = graft.Sizing.streamReplayParts(src,
+          graft.Sizing.parquetFileCount(src))
         // started the way a replay starts: scoped confs (an unset conf
         // stays unset), shared compiled code, one stage per micro-batch
         // at width 1
-        graft.queries.StreamQueries.streamScope(spark, streamParts.toInt, q) {
+        graft.queries.StreamQueries.streamScope(spark, streamParts, q) {
           _.foreachBatch((batch: DataFrame, _: Long) =>
               appendWrite(projectForStorage(targets, batch), sinkPath))
             .outputMode("append")

@@ -5,6 +5,8 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** IoTDB-style data-quality metrics — completeness, consistency,
   * timeliness, validity — over a (time, value) series, matching cnosdb's
   * data_quality UDAFs (reference
@@ -284,10 +286,8 @@ object DataQuality {
       .withColumn("__p", last(fin, ignoreNulls = true).over(wPrev))
       .withColumn("__x", first(fin, ignoreNulls = true).over(wNext))
       // materialized: both the per-group endpoint aggregate and the
-      // repair join below consume this windowed frame, and without a
-      // materialization point each re-ran the scan + sort + window
-      // pass (guide §3.3)
-      .localCheckpoint(false)
+      // repair join below consume this windowed frame
+      .transform(Materialize)
     // first two / last two finite samples as per-group scalars
     val firsts = n1.filter(col("__v").isNotNull)
       .withColumn("__r", row_number().over(w))
@@ -319,12 +319,11 @@ object DataQuality {
     // explode emits the same rows from a single chain (null filters
     // mirror the per-kind filters: val rows always kept, the derived
     // kinds exactly when their lag-difference exists), and the
-    // localCheckpoint pins the 4-rows-per-sample frame so the three
-    // median/deviation consumers re-read it instead of re-deriving it
-    // (the dupGroups/e2e stage-boundary discipline). 5.0 → 1.2 s warm
-    // at sf0.1 in the full-suite bench (the residual is the two
-    // whole-series windows + four per-kind median sorts, all genuinely
-    // needed).
+    // 4-rows-per-sample frame is materialized so the three
+    // median/deviation consumers re-read it instead of re-deriving it.
+    // 5.0 → 1.2 s warm at sf0.1 in the full-suite bench (the residual is
+    // the two whole-series windows + four per-kind median sorts, all
+    // genuinely needed).
     val lagV = lag(col("__rv"), 1).over(w)
     val lagT = lag(col("__t"), 1).over(w)
     val tall = repaired
@@ -338,13 +337,7 @@ object DataQuality {
         struct(lit("sch").as("k"), col("__sc").as("x")))).as("__e")): _*)
       .filter(col("__e.k") === "val" || col("__e.x").isNotNull)
       .select(g ++ Seq(col("__e.k").as("__kind"), col("__e.x").as("__x")): _*)
-      // eager = false: a library operator must stay lazy — the default
-      // eager checkpoint would execute the whole repair chain at
-      // DataFrame CONSTRUCTION time even if the caller never acts on
-      // the result (ADVICE r9). The plan is still pinned: the first
-      // action materializes it once and the three median/MAD consumers
-      // below re-read the checkpointed partitions.
-      .localCheckpoint(eager = false)
+      .transform(Materialize)
 
     // positional median per (group, kind): avg of the middle one or two
     // order statistics — the Scala med() spelling, engine-portable.

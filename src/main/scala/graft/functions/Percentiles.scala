@@ -62,12 +62,12 @@ object Percentiles {
     // NOTE: the sharded frame feeds BOTH the offsets aggregate and the
     // final cumsum join, and Catalyst clones the subplan per branch —
     // the fact table is scanned 4× (2 branches × (base + range)). A
-    // tokenBudgetMix-style lazy localCheckpoint here measured SLOWER
+    // tokenBudgetMix-style Materialize boundary here measured SLOWER
     // at sf0.1 AND sf1 (1.5→1.7 s / 3.2→4.0 s warm): materializing the
     // full-width sharded rows costs more than re-running cheap columnar
     // scans + a map-side-combined min/max. Scans are the cheap, fully
     // parallel part; the r15 win is removing the group-count-bounded
-    // sort (r15 negative result, kept un-checkpointed).
+    // sort (r15 negative result, kept unmaterialized).
     val sharded = base.join(broadcast(rng), groupCols)
       .withColumn("__shard",
         when(col("__hi") <= col("__lo") || isnan(col("__v")), lit(shards - 1))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.functions.Native
 
 /** Deduplication operators for LLM training-data pipelines (SURVEY.md
@@ -161,18 +162,18 @@ object Dedup {
     // output-proportional; the md5/signature work drops by the corpus
     // dup factor (the dominant term on real web corpora).
     val withH = df.withColumn("__h", md5(col(textCol)))
-    // materialized stage boundaries (lazy localCheckpoint) — the
-    // hash→rep manifest and member map feed four downstream branches
-    // each; see [[dupGroupsOf]] for the rationale (guide §3.3/§8)
+    // materialized: the hash→rep manifest and member map feed four
+    // downstream branches each, the rep rows the signature and shingle
+    // passes
     val repTbl = withH.select(col("__h"), col(idCol))
       .groupBy("__h").agg(min(col(idCol)).as("__rep"))
-      .localCheckpoint(false)
+      .transform(Materialize)
     val members = withH.select(col("__h"), col(idCol)).join(repTbl, "__h")
-      .localCheckpoint(false)
+      .transform(Materialize)
     val repRows = withH.join(repTbl, "__h")
       .filter(col(idCol) === col("__rep"))
       .select(col(idCol), col(textCol))
-      .localCheckpoint(false)
+      .transform(Materialize)
     val repPairs = minHashNearDupsRaw(repRows, idCol, textCol, numHashes,
       bands, threshold, maxBucketSize)
     val m = members.select(col("__rep"), col(idCol).as("__mid"))
@@ -298,22 +299,13 @@ object Dedup {
     * Output: (doc_id, group_id) for every doc that appears in a pair.
     */
   def dupGroups(pairs: DataFrame, aCol: String, bCol: String,
-                maxIters: Int = 20,
-                checkpointDir: Option[String] = None): DataFrame = {
-    val spark = pairs.sparkSession
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    // Each round references the previous labels TWICE, so without
-    // truncation the logical plan doubles per round and the driver OOMs
-    // serializing it by ~10 rounds. The checkpoint is LAZY: the round's
-    // single aggregate action below materializes it, so each round runs
-    // ONE driver action (r3 ran an eager checkpoint + a convergence
-    // count() join — two blocking actions). With `checkpointDir` set,
-    // reliable checkpoint() replaces localCheckpoint: blocks survive
-    // executor loss (localCheckpoint loses them and fails the 100 TB
-    // job mid-propagation) at the cost of one write pass per round.
-    def truncate(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager = false)
-      else df.localCheckpoint(eager = false)
+                maxIters: Int = 20): DataFrame = {
+    // Each round references the previous labels TWICE, so without a
+    // materialization point the logical plan doubles per round and the
+    // driver OOMs serializing it by ~10 rounds. The round's single
+    // aggregate action below materializes it, so each round runs ONE
+    // driver action (r3 ran an eager checkpoint + a convergence count()
+    // join — two blocking actions).
     // one-explode symmetrization: the self-union form cloned the pair
     // subplan (often a full MinHash pipeline) twice (SURVEY §5 r9 rule)
     val edges = pairs.select(explode(array(
@@ -334,7 +326,7 @@ object Dedup {
     def labelSum(df: DataFrame): java.math.BigDecimal =
       Option(df.agg(sum(col("lbl").cast("decimal(38,0)")).as("s"))
         .head.getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
-    var labels = truncate(
+    var labels = Materialize(
       edges.groupBy("src").agg(least(min(col("dst")), col("src")).as("lbl"))
         .select(col("src").as("v"), col("lbl")))
     var prevSum = labelSum(labels)
@@ -342,7 +334,7 @@ object Dedup {
     var it = 0
     while (!converged && it < maxIters) {
       // propagate: candidate label for dst is its neighbor's label
-      val prop = truncate(
+      val prop = Materialize(
         edges.join(labels, edges("src") === labels("v"))
           .select(col("dst").as("v"), col("lbl"))
           .unionByName(labels)
@@ -385,32 +377,24 @@ object Dedup {
     * every doc that appears in a pair, group_id = component minimum.
     */
   def dupGroupsStar(pairs: DataFrame, aCol: String, bCol: String,
-                    maxIters: Int = 30,
-                    checkpointDir: Option[String] = None): DataFrame =
-    dupGroupsStarWithRounds(pairs, aCol, bCol, maxIters, checkpointDir)._1
+                    maxIters: Int = 30): DataFrame =
+    dupGroupsStarWithRounds(pairs, aCol, bCol, maxIters)._1
 
   private[graft] def dupGroupsStarWithRounds(
       pairs: DataFrame, aCol: String, bCol: String,
-      maxIters: Int = 30,
-      checkpointDir: Option[String] = None): (DataFrame, Int) = {
-    val spark = pairs.sparkSession
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    def truncate(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager = false)
-      else df.localCheckpoint(eager = false)
-
+      maxIters: Int = 30): (DataFrame, Int) = {
     // ONE materialization of the (often expensive — e.g. a full MinHash
     // confirm pipeline) pair subplan: allVerts previously re-executed
     // `pairs` from scratch for the final join ([[dupGroups]] caches its
     // edge list; the star backend must too — measured at sf0.1 the
     // whole LSH+confirm ran twice per lane without this).
-    val canon = truncate(pairs.select(
+    val canon = Materialize(pairs.select(
       col(aCol).cast("long").as("pa"), col(bCol).cast("long").as("pb")))
     val allVerts = canon.select(explode(array(col("pa"), col("pb"))).as("vid"))
       .distinct()
     // canonical big→small directed edges; self-pairs drop here and are
     // restored as singleton groups by the final left join
-    var edges = truncate(canon.select(
+    var edges = Materialize(canon.select(
         greatest(col("pa"), col("pb")).as("u"),
         least(col("pa"), col("pb")).as("v"))
       .filter(col("u") =!= col("v"))
@@ -443,7 +427,7 @@ object Dedup {
         .distinct()
     }
     // (count, Σu, Σv) as exact DECIMAL(38) — computed in the same action
-    // that materializes the round's checkpoint
+    // that materializes the round
     def stats(e: DataFrame): (Long, java.math.BigDecimal, java.math.BigDecimal) = {
       val r = e.agg(count(lit(1)), sum(col("u").cast("decimal(38,0)")),
         sum(col("v").cast("decimal(38,0)"))).head
@@ -454,7 +438,7 @@ object Dedup {
     var converged = edges.isEmpty
     var prev = if (converged) null else stats(edges)
     while (!converged && it < maxIters) {
-      val next = truncate(smallStar(largeStar(edges)))
+      val next = Materialize(smallStar(largeStar(edges)))
       val cur = stats(next)
       // stats equality is necessary for a fixed point; the exceptAll
       // run (sets, post-distinct) makes it sufficient
@@ -504,7 +488,7 @@ object Dedup {
     // fast path (e.g. input already exact-deduped): with every text
     // unique, each doc is its own representative, so the collapse
     // manifest maps id → id and the rep filter keeps every row — the
-    // md5 aggregate, both collapse joins and their checkpoints are
+    // md5 aggregate, both collapse joins and their materializations are
     // provably identity work (PipelineSpec pins the equivalence). The
     // raw rule then runs directly on `df`.
     if (!collapseExact) {
@@ -517,17 +501,15 @@ object Dedup {
         .drop("__drop")
     }
     val withH = df.withColumn("__h", md5(col(textCol)))
-    // materialized stage boundaries, same discipline as [[dupGroupsOf]]:
-    // the hash→rep manifest and the rep corpus are each referenced by
-    // several downstream branches (signature pass, shingle pass, keep
-    // filter), and Catalyst clones the whole upstream subplan per
-    // branch without a materialization point (guide §3.3/§8)
+    // materialized: the hash→rep manifest and the rep corpus are each
+    // referenced by several downstream branches (signature pass,
+    // shingle pass, keep filter)
     val repTbl = withH.select(col("__h"), col(idCol))
       .groupBy("__h").agg(min(col(idCol)).as("__rep"))
-      .localCheckpoint(false)
+      .transform(Materialize)
     val labeled = withH.join(repTbl, "__h")
     val reps = labeled.filter(col(idCol) === col("__rep")).drop("__h", "__rep")
-      .localCheckpoint(false)
+      .transform(Materialize)
     val pairs = minHashNearDupsRaw(reps, idCol, textCol, numHashes, bands,
       threshold, maxBucketSize)
     val dropReps = pairs.select(col("id_b").as("__drop")).distinct()
@@ -590,27 +572,21 @@ object Dedup {
   def dupGroupsOf(df: DataFrame, idCol: String, textCol: String,
                   numHashes: Int = 8, bands: Int = 2, threshold: Double = 0.5,
                   maxBucketSize: Int = 1000, maxIters: Int = 20,
-                  checkpointDir: Option[String] = None,
                   useStar: Boolean = false): DataFrame = {
     val withH = df.withColumn("__h", md5(col(textCol)))
-    // MATERIALIZED stage boundaries (lazy localCheckpoint — computed in
-    // the first downstream action, reused by every later one): Catalyst
-    // shares no common subtrees, so without these every branch below —
-    // the minhash signature pass, the shingle-set pass, the rep-state
-    // join, the member mapping — re-executed the corpus union + md5 +
-    // collapse aggregate from scratch (guide §3.3: materialise an
-    // intermediate to truncate the plan; §8: these are exactly the
-    // manifests a production dedup pipeline persists — the content-hash
-    // keep table and the exact-deduped rep corpus).
+    // materialized: every branch below — the minhash signature pass,
+    // the shingle-set pass, the rep-state join, the member mapping —
+    // reads the content-hash keep table and the exact-deduped rep
+    // corpus, the manifests a production dedup pipeline persists
     val repTbl = withH.select(col("__h"), col(idCol))
       .groupBy("__h").agg(min(col(idCol)).as("__rep"),
         count(lit(1)).as("__nclass"))
-      .localCheckpoint(false)
+      .transform(Materialize)
     val reps = withH.join(repTbl, "__h")
       .filter(col(idCol) === col("__rep"))
       .withColumn("__sig", size(split(col(textCol), " ")) >= 3)
       .select(col(idCol), col(textCol), col("__nclass"), col("__sig"))
-      .localCheckpoint(false)
+      .transform(Materialize)
     val repPairs = minHashNearDupsRaw(
       reps.select(col(idCol), col(textCol)), idCol, textCol,
       numHashes, bands, threshold, maxBucketSize)
@@ -619,8 +595,8 @@ object Dedup {
     // for chain-shaped boilerplate components). Identical (doc_id,
     // group_id = component min) contract, so callers and oracles are
     // backend-agnostic.
-    val repGroups = (if (useStar) dupGroupsStar(repPairs, "id_a", "id_b", maxIters, checkpointDir)
-                     else dupGroups(repPairs, "id_a", "id_b", maxIters, checkpointDir))
+    val repGroups = (if (useStar) dupGroupsStar(repPairs, "id_a", "id_b", maxIters)
+                     else dupGroups(repPairs, "id_a", "id_b", maxIters))
       .select(col("doc_id").as("__rep2"), col("group_id"))
     val repState = reps.select(col(idCol).as("__rep2"), col("__nclass"), col("__sig"))
       .join(repGroups, Seq("__rep2"), "left")

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Product/event-analytics rollups over the time-series event stream —
   * the ClickHouse `retention`/`windowFunnel` class of operators a
   * metrics engine grows once events carry user ids (the reference's
@@ -56,23 +58,21 @@ object EventAnalytics {
              typeCol: String, steps: Seq[String]): DataFrame = {
     require(steps.nonEmpty)
     // reached(i) = users whose earliest chain through steps 0..i exists.
-    // Each step manifest is materialized ONCE (lazy localCheckpoint):
-    // step i's frame is referenced both by step i+1's join AND by its
-    // own count branch below, and the count branches nest — without the
-    // truncation the union re-executed step 0's scan+aggregate K times
-    // and step i's join chain K-i times (triangular re-execution, r15
-    // measured 10 Spark jobs for a 3-step funnel). The manifests are
-    // one (user, ts) row per reaching user — exactly what a production
-    // funnel pipeline persists per stage.
+    // Each step manifest is materialized ONCE: step i's frame is
+    // referenced both by step i+1's join AND by its own count branch
+    // below, and the count branches nest — without the boundary the
+    // union re-executed step 0's scan+aggregate K times and step i's
+    // join chain K-i times (r15 measured 10 Spark jobs for a 3-step
+    // funnel). The manifests are one (user, ts) row per reaching user.
     val reached = steps.tail.scanLeft(
       df.filter(col(typeCol) === steps.head)
         .groupBy(col(userCol)).agg(min(col(tsCol)).as("__t"))
-        .localCheckpoint(false)) { (prev, step) =>
+        .transform(Materialize)) { (prev, step) =>
       df.filter(col(typeCol) === step)
         .join(prev.select(col(userCol), col("__t").as("__prev")), userCol)
         .filter(col(tsCol) > col("__prev"))
         .groupBy(col(userCol)).agg(min(col(tsCol)).as("__t"))
-        .localCheckpoint(false)
+        .transform(Materialize)
     }
     // one lazy plan: a counts branch per step, unioned — no driver-side
     // actions; each branch is a 1-row aggregate

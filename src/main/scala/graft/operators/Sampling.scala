@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Deterministic corpus sampling/splitting for training-data pipelines
   * (SURVEY.md §2.4). Everything keys off md5 of the id, not an RNG, so
   * a 100 TB re-run (or another engine — the DuckDB oracles recompute
@@ -199,11 +201,11 @@ object Sampling {
       .withColumn("__shard", rangeShard("__v", "__t", shards))
       .drop("__v", "__t")
     // the candidate frame feeds BOTH the per-shard offset aggregate and
-    // the final cumsum join; checkpoint it lazily so the dominant IO —
-    // the threshold-filtered corpus scan — is paid once, not twice
-    // (ADVICE r10). The materialized set is budget-bounded (~headroom ×
-    // the token budget's document mass), not corpus-sized.
-    val cand = cand0.localCheckpoint(eager = false)
+    // the final cumsum join, so the dominant IO — the threshold-filtered
+    // corpus scan — is paid once, not twice (ADVICE r10). The
+    // materialized set is budget-bounded (~headroom × the token
+    // budget's document mass), not corpus-sized.
+    val cand = Materialize(cand0)
     // exclusive per-shard offsets: map-side-combined aggregate to ≤
     // languages × shards rows, window over that tiny frame only
     val wSh = org.apache.spark.sql.expressions.Window

@@ -43,8 +43,8 @@ import org.apache.spark.sql.internal.SQLConf
   * multiply rows ([[measured]]): a `Generate`, a Dataset `flatMap` /
   * `mapPartitions` (or any operator not listed there) below the sort
   * makes it decline, and so does a leaf whose size is not measured —
-  * the `LogicalRDD` a `localCheckpoint` leaves carries only the old
-  * plan's estimate. A materialized AQE stage is measured: when an
+  * the `LogicalRDD` a [[graft.Materialize]] boundary leaves carries
+  * only the old plan's estimate. A materialized AQE stage is measured: when an
   * aggregate stage finishes, AQE re-plans the sort above it with the
   * stage's runtime size, and that is where aggregate→sort queries get
   * the one-stage form. Scan→project→sort queries get their form at the

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import graft.Tables
+import graft.{Lake, Tables}
 import graft.admin.{AdminEngine, AdminError, MetaCatalog}
 
 /** The mutating admin DDL/DCL surface (SURVEY §2.5 → closed):
@@ -74,16 +74,6 @@ object AdminQueries {
     } finally ls.close()
   }
 
-  private def deleteTree(p: java.nio.file.Path): Unit = {
-    import java.nio.file._
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .iterator().forEachRemaining(Files.delete(_))
-      finally walk.close()
-    }
-  }
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // The full catalog surface in one deterministic script: two
@@ -132,7 +122,7 @@ object AdminQueries {
           all("cluster_schema", "users").map(r =>
             Seq("user", r.getString(0), r.getBoolean(1).toString, r.getString(2), ""))
         strDf(s, Seq("src", "a", "b", "c", "d"), rows)
-      } finally deleteTree(root)
+      } finally Lake.deleteRecursively(root)
     }),
 
     // The access-control matrix of user_access.slt/dcl_role.slt as
@@ -186,7 +176,7 @@ object AdminQueries {
           attempt("root", "tenant_a", "db_a", "revoke_absent_priv", "REVOKE WRITE ON DATABASE db_a FROM role_a"),
           attempt("root", "tenant_a", "db_a", "add_user_missing_role", "ALTER TENANT tenant_a ADD USER user_c AS ghost"))
         strDf(s, Seq("usr", "op", "outcome"), rows)
-      } finally deleteTree(root)
+      } finally Lake.deleteRecursively(root)
     }),
 
     // Database-TTL POLICY driving the day-lake MECHANISM: a catalog
@@ -215,7 +205,7 @@ object AdminQueries {
           fileSchema = Some(Tables.eventsNanos(s, dir).schema)).get
         require(stats.droppedDays == days.count(_ < mid) && stats.boundaryRewritten,
           s"TTL-policy expiry wrong: $stats for cutoff $mid+12h over ${days.size} days")
-      } finally deleteTree(eroot)
+      } finally Lake.deleteRecursively(eroot)
       // the copy has the primary layout's schema: no inference job
       s.read.schema(Tables.eventsDayLake(s, dir).schema).parquet(root.toString)
         .groupBy("event_type")
@@ -259,7 +249,7 @@ object AdminQueries {
           step("missing_db", post("DESCRIBE DATABASE nope"), keepBody = false),
           step("parse_reject", post("FROBNICATE x"), keepBody = false))
         strDf(s, Seq("step", "status", "body"), rows)
-      } finally { srv.stop(); deleteTree(spool); deleteTree(root) }
+      } finally { srv.stop(); Lake.deleteRecursively(spool); Lake.deleteRecursively(root) }
     }),
 
     // CREATE STREAM TABLE end-to-end IN SQL (ddl/create_stream_table
@@ -509,7 +499,7 @@ object AdminQueries {
           Seq(r.getString(0), r.getString(1), r.getString(2), r.getString(3),
             r.getLong(4).toString, r.getLong(5).toString))
         strDf(s, Seq("t", "t0", "t1", "t2", "f0", "f1"), rows)
-      } finally deleteTree(root)
+      } finally Lake.deleteRecursively(root)
     }),
 
     // INSERT/SELECT through the engine under a µs-precision database:
@@ -535,7 +525,7 @@ object AdminQueries {
         val rows = out.collect().toSeq.map(r => // bounded: 2 stations
           Seq(r.getString(0), r.getLong(1).toString, r.getDouble(2).toString, r.getString(3)))
         strDf(s, Seq("station", "n", "sum_p", "first_t"), rows)
-      } finally deleteTree(root)
+      } finally Lake.deleteRecursively(root)
     }))
 
   def oracleSql: Map[String, String] = Map(

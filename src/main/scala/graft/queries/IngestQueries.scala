@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.sources.LineProtocol
 
 /** Ingest-path driver entries (SURVEY.md §2.3): line-protocol parsing
@@ -11,21 +11,11 @@ import graft.sources.LineProtocol
   * protocol, parsed back by graft.sources.LineProtocol, and the oracle
   * recomputes the original values directly.
   *
-  * `localCheckpoint` policy (the seven wire round-trip lanes whose
-  * global sort sits directly on the decode). Each decode is a Dataset
-  * `flatMap` (or, for OpenTSDB JSON, an `explode`), so no size estimate
-  * survives it: [[graft.plans.SmallSortPlanning]] declines there, and
-  * the sort keeps Spark's range exchange at every scale. That exchange
-  * first runs a boundary-sampling job over its whole input, which would
-  * run the render+encode+decode chain a second time. A lazy
-  * `localCheckpoint(false)` between the decode and the sort makes the
-  * sampling job the one decode pass; the sort's map stage reads its
-  * blocks. The trade: lineage stops at the checkpoint, and the blocks
-  * live only on the executor that computed them, so an executor lost
-  * after the sampling job fails the action instead of recomputing the
-  * decode. The exposure is that one action (the checkpoint is built and
-  * read inside it). A deployment that must survive executor loss swaps
-  * each site for `persist(DISK_ONLY)`, which keeps the single decode.
+  * The seven wire round-trip lanes put a [[graft.Materialize]] boundary
+  * between the decode and the global sort. A decode is a Dataset
+  * `flatMap` (or, for OpenTSDB JSON, an `explode`), so the sort keeps
+  * Spark's range exchange, whose sampling job would otherwise run the
+  * render+encode+decode chain a second time.
   */
 object IngestQueries {
 
@@ -47,7 +37,7 @@ object IngestQueries {
           col("fields")("value").cast("double").as("value"),
           expr("cast(substring(fields['n'], 1, length(fields['n']) - 1) AS BIGINT)").as("n"),
           col("ts").as("ts_us"))
-        .localCheckpoint(false) // one parse per action: the policy above
+        .transform(Materialize) // one parse per action
         .orderBy("event_id")
     }),
 
@@ -65,7 +55,7 @@ object IngestQueries {
         .select(col("tags")("event_id").cast("long").as("event_id"),
           col("metric"), col("ts").as("ts_us"), col("value"),
           col("tags")("user_id").cast("long").as("user_id"))
-        .localCheckpoint(false) // one parse per action: the policy above
+        .transform(Materialize) // one parse per action
         .orderBy("event_id")
     }),
 
@@ -82,7 +72,7 @@ object IngestQueries {
         .select(col("tags")("event_id").cast("long").as("event_id"),
           col("metric"), col("ts").as("ts_us"), col("value"),
           col("tags")("user_id").cast("long").as("user_id"))
-        .localCheckpoint(false) // one parse per action: the policy above
+        .transform(Materialize) // one parse per action
         .orderBy("event_id")
     }),
 
@@ -113,7 +103,7 @@ object IngestQueries {
           col("numFields")("value").as("value"),
           col("numFields")("u.id").as("user_id_f"),
           col("boolFields")("ok").as("ok"))
-        .localCheckpoint(false) // one parse per action: the policy above
+        .transform(Materialize) // one parse per action
         .orderBy("event_id")
     }),
 
@@ -138,7 +128,7 @@ object IngestQueries {
           col("numFields")("value").as("value"),
           col("numFields")("n.chars").as("chars_f"),
           col("strFields")("lvl").as("lvl"))
-        .localCheckpoint(false) // one parse per action: the policy above
+        .transform(Materialize) // one parse per action
         .orderBy("event_id")
     }),
 
@@ -217,7 +207,7 @@ object IngestQueries {
           col("labels"), col("ts_ns"),
           regexp_extract(col("msg"), "value=(.+)$", 1).cast("double")
             .as("value"))
-        .localCheckpoint(false) // one decode per action: the policy above
+        .transform(Materialize) // one decode per action
         .orderBy("event_id")
     }),
 
@@ -261,9 +251,9 @@ object IngestQueries {
           col("kind"), col("start_ns"), col("end_ns"),
           regexp_extract(col("attrs"), "user_id=(\\d+)", 1).cast("long")
             .as("user_id"))
-        // one encode+decode per action: the policy above (QBench showed
-        // two equal ~0.42 s jobs before the checkpoint)
-        .localCheckpoint(false)
+        // one encode+decode per action (QBench showed two equal ~0.42 s
+        // jobs without the boundary)
+        .transform(Materialize)
         .orderBy("event_id")
     }),
 

@@ -1,9 +1,10 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Lake, Tables}
 import graft.functions.Native
 
 /** Lake schema contract, checked as a first-class driver entry.
@@ -907,6 +908,7 @@ object LakeContract {
           s"SELECT ${dataCols.mkString(", ")} FROM $v")
         s.catalog.dropTempView(v)
       }
+      Lake.deleteRecursively(frag)
       def dayFiles(): Array[String] =
         Option(new java.io.File(root.toFile, s"day=$d1").listFiles())
           .getOrElse(Array.empty).map(_.getName).filter(_.endsWith(".parquet"))
@@ -956,12 +958,6 @@ object LakeContract {
     })
   )
 
-  /** A PRIVATE copy of the staged unified catalog table, registered
-    * under a fresh name — the lifecycle lanes (TTL, compaction) mutate
-    * this copy, never the shared layout. Returns (table name, local
-    * root). The copy and its catalog entry live for the session, like
-    * the path-lake lifecycle lanes' tempdir copies.
-    */
   /** A catalog table's bucket count, from its metadata — the layout is
     * input-derived (Sizing.bucketCount), so every consumer reads it
     * rather than assuming a constant. */
@@ -972,16 +968,30 @@ object LakeContract {
       .getOrElse(sys.error(s"table $tbl carries no bucket spec"))
   }
 
+  /** A catalog table's local root directory. */
+  private def tableRoot(s: SparkSession, ident: TableIdentifier): java.nio.file.Path =
+    java.nio.file.Paths.get(s.sessionState.catalog.getTableMetadata(ident).location.getPath)
+
+  /** A PRIVATE copy of the staged unified catalog table, registered
+    * under a fresh name — the lifecycle lanes (TTL, compaction) mutate
+    * this copy, never the shared layout. Returns (table name, local
+    * root). The copy and its catalog entry live until the next call
+    * with the same `prefix`, which drops the table and deletes its root
+    * first, so the catalog holds at most one copy per lane.
+    */
   private def privateUnifiedCopy(s: SparkSession, dir: String,
                                  prefix: String): (String, java.nio.file.Path) = {
+    val cat = s.sessionState.catalog
+    cat.listTables(cat.getCurrentDatabase, s"${prefix}_*").filterNot(cat.isTempView)
+      .foreach { old =>
+        val oldRoot = tableRoot(s, old)
+        s.sql(s"DROP TABLE ${old.quotedString}")
+        Lake.deleteRecursively(oldRoot)
+      }
     val shared = Tables.eventsUnifiedTable(s, dir)
     val buckets = tableBuckets(s, shared)
-    val ident = s.sessionState.sqlParser.parseTableIdentifier(shared)
-    val srcRoot = java.nio.file.Paths.get(
-      new java.net.URI(s.sessionState.catalog.getTableMetadata(ident)
-        .location.toString).getPath)
     val root = java.nio.file.Files.createTempDirectory(prefix)
-    copyTree(srcRoot, root)
+    copyTree(tableRoot(s, s.sessionState.sqlParser.parseTableIdentifier(shared)), root)
     val tbl = s"${prefix}_${System.nanoTime()}"
     s.sql(
       s"""CREATE TABLE $tbl (

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.functions.Native
 import graft.operators.{Dedup, Multimodal, Sampling, Similarity, TextAnalysis}
 
@@ -495,24 +495,25 @@ object PipelineQueries {
         .filter(col("hit") * 2 >= col("nsh"))
         .select("doc_id")
       val clean = quality.join(contaminated, Seq("doc_id"), "left_anti")
-      // exact-dedup manifest, materialized ONCE (lazy localCheckpoint —
-      // the stage boundary a production pipeline persists): the near-dup
-      // stage references it four times (signature pass, both confirm
-      // sides, keep filter), and without the truncation each reference
+      // exact-dedup manifest, materialized ONCE: the near-dup stage
+      // references it four times (signature pass, both confirm sides,
+      // keep filter), and without the boundary each reference
       // re-executed the whole corpus→quality→decontaminate→exact chain
       // (r15 measured 37 Spark jobs / 4.9 s warm for this lane).
       // Texts are unique after the exact collapse, so the near stage
       // skips its own (now identity) exact-collapse wrapper.
       val exact = Dedup.dedupedCorpus(clean, "doc_id", "text")
-        .localCheckpoint(false)
+        .transform(Materialize)
       val near = Dedup.nearDedupKeep(exact, "doc_id", "text",
         collapseExact = false)
       val meta = Tables(s, dir, "documents")
         .select(col("doc_id").as("base_id"), col("source"))
+      // materialized: the sampler's per-source rate aggregate and its
+      // keep join both read the survivors
       val survivors = near.withColumn("base_id", col("doc_id") % 1000000)
         .join(meta, "base_id")
         .select("doc_id", "source")
-        .localCheckpoint(false)
+        .transform(Materialize)
       Sampling.temperatureSample(survivors, "doc_id", "source", 150L)
         .select("doc_id", "source")
         .orderBy("doc_id")
@@ -883,11 +884,10 @@ object PipelineQueries {
       val hashes = Multimodal.aHash8Batch(
         Multimodal.resizeBmpBatch(imgs, "doc_id", 8, 8), "doc_id")
       // materialized (ahash, keep-id) manifest: both the Hamming pair
-      // pass and the final keep filter reference reps, and without a
-      // materialization point each re-ran the whole BMP synth + decode
-      // + resize + hash pipeline (guide §3.3)
+      // pass and the final keep filter reference reps, each of which
+      // would otherwise re-run the BMP synth + decode + resize + hash
       val reps = hashes.groupBy("ahash").agg(min("doc_id").as("doc_id"))
-        .localCheckpoint(false)
+        .transform(Materialize)
       val pairs = Dedup.sigHammingPairs(reps, "doc_id", "ahash", 64, 3)
       val groups = Dedup.dupGroups(pairs, "id_a", "id_b")
       reps.select("doc_id").join(groups, Seq("doc_id"), "left")

@@ -368,6 +368,26 @@ class ContractSpec extends AnyFunSuite with TestSpark {
     assert(queries.LakeContract.queries("ts_prune_join")(spark, sf).count() > 0)
   }
 
+  test("the unified lifecycle lanes keep at most one private table copy each") {
+    val cat = spark.sessionState.catalog
+    def copies(prefix: String) =
+      cat.listTables(cat.getCurrentDatabase, s"${prefix}_*").filterNot(cat.isTempView)
+    for ((lane, prefix) <- Seq("ts_ttl_unified" -> "graft_ttl_unified",
+                               "ts_compact_unified" -> "graft_compact_unified")) {
+      // every table a run left, with its root, as seen right after the run
+      val seen = (1 to 3).flatMap { _ =>
+        assert(queries.LakeContract.queries(lane)(spark, sf).count() > 0)
+        copies(prefix).map(t => t -> java.nio.file.Paths.get(cat.getTableMetadata(t).location.getPath))
+      }.toMap
+      val left = copies(prefix)
+      assert(left.size <= 1, s"$lane left ${left.size} tables after 3 runs: ${left.mkString(", ")}")
+      assert(seen.size == 3, "each run copies the layout afresh")
+      val dropped = (seen -- left).values
+      assert(dropped.forall(r => !java.nio.file.Files.exists(r)),
+        s"$lane left earlier copies on disk: ${dropped.mkString(", ")}")
+    }
+  }
+
   test("unified table witnesses hold at a SECOND derived bucket count") {
     // the bucket count is a derived capacity knob (Sizing.bucketCount),
     // not a constant: shrink the per-file target so the SAME lake

@@ -1140,15 +1140,23 @@ class PipelineSpec extends AnyFunSuite with TestSpark {
   test("dupGroups with reliable checkpointing matches the localCheckpoint path") {
     import spark.implicits._
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-    def groups(dir: Option[String]) =
-      graft.operators.Dedup.dupGroups(pairs, "id_a", "id_b", checkpointDir = dir)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val local = groups(None)
+    def groups() = graft.operators.Dedup.dupGroups(pairs, "id_a", "id_b")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val local = groups()
     assert(local == Set((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L)),
       s"chain 1-2-3 collapses to 1, pair 10-11 to 10; got $local")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    assert(groups(Some(dir)) == local,
-      "reliable checkpoint() must produce identical components")
+    // the deployment's checkpoint directory turns every Materialize
+    // boundary into a reliable checkpoint; the spec puts the prior one back
+    val sc = spark.sparkContext
+    val prior = sc.getCheckpointDir
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt")
+    try {
+      val reliable = org.apache.spark.graftspec.Checkpoints.withDir(sc, dir.toString)(groups())
+      assert(reliable == local, "reliable checkpoint() must produce identical components")
+      assert(sc.getCheckpointDir == prior)
+      assert(java.nio.file.Files.walk(dir).anyMatch(java.nio.file.Files.isRegularFile(_)),
+        "the rounds were checkpointed under the directory")
+    } finally Lake.deleteRecursively(dir)
   }
 
   test("lineDedup keeps first corpus occurrence, drops within-doc repeats, reassembles in order") {
