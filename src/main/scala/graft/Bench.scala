@@ -291,16 +291,18 @@ object Bench {
     }
     val regJson = "\"regressions\":[" + regressions.mkString(",") + "]"
     val fullLine = s"""{"metric":"total","value":${fmt(kept.total)},"unit":"sec","total_run2":${fmt(kept.total2)},$calibJson,$regJson,"queries":$qs,"sf":"$sfName"}"""
-    // Full per-query map goes to the file; stdout gets ONLY a short
-    // totals line LAST so it survives any fixed-size tail capture
-    // (r1/r2 both had "parsed": null because the 100-query map pushed
-    // the line start outside the captured tail window).
+    // The full per-query map goes to the file and, on its own line, to
+    // stdout just before a short totals line, which stays LAST so it
+    // survives any fixed-size tail capture (r1/r2 both had "parsed": null
+    // because the 100-query map pushed the line start outside the
+    // captured tail window).
     java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_RESULT.json"), fullLine + "\n")
     spark.stop()
     // build.sbt routes forked stdout straight through (StdoutOutput) and
     // suppresses sbt's [success] epilogue, so this is the LITERAL last
     // stdout line — r1-r3 all parsed null because sbt decorated/followed
     // the line.
+    println(qs)
     println(s"""{"metric":"total","value":${fmt(kept.total)},"unit":"sec","total_run2":${fmt(kept.total2)},$calibJson,$regJson,"sf":"$sfName"}""")
   }
 }

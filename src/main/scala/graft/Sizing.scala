@@ -74,12 +74,10 @@ object Sizing {
     * tiny-sf layouts identical to the driver rounds (a 17 MB lake
     * derives the floor); the cap bounds small-file count at any scale
     * — at 100 TB over 3,650 days (~27 GB/day) this derives 256 buckets
-    * ≈ 107 MB bucket files, the compaction target. The count is
-    * stamped into the staged layout (`_graft_buckets`) so the DDL that
-    * registers the table can never disagree with the files on disk.
+    * ≈ 107 MB bucket files, the compaction target.
     */
   def bucketCount(bytesPerPartition: Double,
-                  targetFileBytes: Long = 128L << 20,
+                  targetFileBytes: Long,
                   floor: Int = 4, cap: Int = 4096): Int = {
     val raw = math.max(1, math.ceil(bytesPerPartition / targetFileBytes).toInt)
     val p2 = Integer.highestOneBit(raw) * (if (Integer.bitCount(raw) == 1) 1 else 2)

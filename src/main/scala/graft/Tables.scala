@@ -1,6 +1,11 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Table loader for the driver-generated parquet lake (TESTDATA.md).
@@ -25,6 +30,37 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * keeps them valid while the source parquet's fingerprint is unchanged,
   * so a lake regenerated at the same path is read fresh, never through a
   * stale FileIndex.
+  *
+  * This object is the only module that knows the bucketed event
+  * layouts — SURVEY §5's "partitioned by date + bucketed by tag" rule
+  * as catalog tables, the tskv file organization of time levels ×
+  * series files:
+  *  - unified ([[eventsUnifiedTable]]): every events column, `day`
+  *    partitions, bucketed on `event_type`, sorted (event_type, ts);
+  *  - multi-tag ([[eventsMultiTagTable]]): ts, event_type, a derived
+  *    second tag `region` and integer `cents`, bucketed on the
+  *    (event_type, region) tuple, sorted (event_type, region, ts), in
+  *    4 KB parquet blocks, not partitioned;
+  *  - multi-tag day ([[eventsMultiTagDayTable]]): the same columns and
+  *    buckets in `day` partitions.
+  * Each is one [[Layout]] value, staged once per (lake dir, fingerprint,
+  * bucket target) through [[Lake.staged]] and registered per session
+  * under a name keyed by the staged root.
+  *
+  * Bucket-count rule: one bucket file per 128 MB (the target) of the
+  * table's bytes per partition — the lake's parquet bytes over the day
+  * layout's day count ([[eventsLakeDays]]) for a day-partitioned layout,
+  * the whole lake otherwise — through [[Sizing.bucketCount]]. The count
+  * is stamped into the staged root (`_graft_buckets`), and every table
+  * registered over it reads the stamp.
+  *
+  * Private-copy rule: a lane that mutates a layout works on a private
+  * copy — a file copy of the day layout ([[dayLakeCopy]]), a registered
+  * copy of the unified table ([[unifiedCopy]]) or an empty registered
+  * table of the unified layout ([[emptyUnifiedTable]]) — under a fresh
+  * root named after the lane. Each call first drops the table and
+  * deletes the root of the lane's previous copy, so a JVM holds at most
+  * one copy per lane.
   */
 object Tables {
   /** 86 400 s in nanoseconds: the day-partition granule. */
@@ -129,9 +165,6 @@ object Tables {
       // day never becomes a single task — at 100 TB a day is ~300 GB,
       // and the r11 first cut's repartition(day) would have funneled it
       // through one writer.
-      val width = math.max(spark.sparkContext.defaultParallelism,
-        Sizing.shufflePartitions(s"$dir/events.parquet",
-          spark.sparkContext.defaultParallelism))
       // day from pure integer FLOOR arithmetic on the ns value —
       // timezone-free by construction, and exactly the arithmetic
       // EventTimeDayPruning inverts when it derives partition bounds
@@ -144,235 +177,249 @@ object Tables {
       // witness at observable granularity.
       rawEventsNanos(spark, dir)
         .withColumn("day", expr(dayOfNsSql("ts")))
-        .repartitionByRange(width, col("day"), col("ts"))
+        .repartitionByRange(writerWidth(spark, dir), col("day"), col("ts"))
         .sortWithinPartitions(col("day"), col("event_type"), col("ts"))
         .write.partitionBy("day").mode("overwrite").parquet(p.toString)
     }
 
-  /** The UNIFIED primary layout as ONE catalog table: day-partitioned
-    * AND tag-bucketed AND series-key sorted — the full composition of
-    * SURVEY §5's layout rule on a single artifact (VERDICT r12 #2: the
-    * two halves were previously proven on two different layouts). This
-    * is exactly the reference's tskv file organization — time levels ×
-    * series files: `day=` partition directories give O(K-day) listing
-    * for time-bounded queries (via [[plans.EventTimeDayPruning]] — the
-    * catalog relation plans as the same HadoopFsRelation shape the rule
-    * matches), and within each day, 4 `event_type`-hash bucket files
-    * sorted (event_type, ts) give shuffle-free per-series aggregation
-    * plus tag zone-skipping. At 100 TB the bucket count scales with the
-    * series cardinality (it is a layout constant, not a data pass).
-    *
-    * Returns the session-registered table NAME. The data is staged once
-    * per (lake dir, fingerprint) via [[Lake.staged]] — `saveAsTable`
-    * into the staged location through a throwaway external table (Spark
-    * only writes bucket-id file names through the table API), dropped
-    * after the write (external ⇒ files stay); each session then
-    * re-registers the real table over the staged root (name keyed by
-    * the root, so a regenerated lake gets a fresh table) and recovers
-    * the day partitions from the directory names.
-    */
-  /** Bucket-count capacity knob (VERDICT r13 #7): derived from the
-    * lake via [[Sizing.bucketCount]], never hard-coded. The target is
-    * tunable through the `graft.bucket.target.bytes` system property so
-    * the layout witnesses can be RE-PROVEN at a second derived count;
-    * the value rides the staging key, so flipping it stages a fresh
-    * layout instead of mislabeling an existing one.
-    */
-  private def bucketTargetBytes: Long =
-    sys.props.get("graft.bucket.target.bytes").map(_.toLong).getOrElse(128L << 20)
+  /** The unified layout as a catalog table; returns its name. */
+  def eventsUnifiedTable(spark: SparkSession, dir: String): String =
+    eventsUnifiedTable(spark, dir, DefaultBucketTargetBytes)
 
-  /** The staged layout carries its own bucket count (`_graft_buckets`,
-    * underscore-prefixed so Spark's file index ignores it): the DDL
-    * that registers a table over the files can never disagree with
-    * what was written — a mismatch would silently break the
-    * shuffle-free witnesses. */
-  private def stampBuckets(p: java.nio.file.Path, n: Int): Unit =
-    java.nio.file.Files.write(p.resolve("_graft_buckets"),
-      n.toString.getBytes("UTF-8"))
-  private def stampedBuckets(root: String): Int = {
-    val f = java.nio.file.Paths.get(root, "_graft_buckets")
-    require(java.nio.file.Files.exists(f),
-      s"staged bucketed layout at $root carries no _graft_buckets stamp")
-    new String(java.nio.file.Files.readAllBytes(f), "UTF-8").trim.toInt
-  }
-
-  def eventsUnifiedTable(spark: SparkSession, dir: String): String = {
-    plans.install(spark)
-    val root = Lake.staged(s"unified_lake_v2|$dir|$bucketTargetBytes",
-        Seq(s"$dir/events.parquet")) { p =>
-      import org.apache.spark.sql.functions._
-      val width = math.max(spark.sparkContext.defaultParallelism,
-        Sizing.shufflePartitions(s"$dir/events.parquet",
-          spark.sparkContext.defaultParallelism))
-      val tmpTbl = s"graft_unified_stage_${ProcessHandle.current().pid()}_${System.nanoTime()}"
-      // canonical column types so the re-registration DDL below is
-      // guaranteed to match the written parquet exactly
-      val frame = rawEventsNanos(spark, dir)
-        .select(col("event_id").cast("bigint").as("event_id"),
-          col("ts").cast("bigint").as("ts"),
-          col("user_id").cast("bigint").as("user_id"),
-          col("event_type").cast("string").as("event_type"),
-          col("value").cast("double").as("value"),
-          col("props").cast("string").as("props"))
-        .withColumn("day", expr(dayOfNsSql("ts")))
-      // bucket count from bytes-per-DAY (the table's partition unit) —
-      // one distinct-count job, once per staged layout
-      val days = math.max(1L, frame.select(countDistinct(col("day"))).head.getLong(0))
-      val buckets = Sizing.bucketCount(
-        Sizing.parquetBytes(s"$dir/events.parquet").toDouble / days, bucketTargetBytes)
-      frame
-        // day-locality-preserving parallelism, as in eventsLakeRoot; the
-        // bucketBy/sortBy spec below adds the per-task (bucket, sort)
-        // ordering itself
-        .repartitionByRange(width, col("day"), col("ts"))
-        .write.mode("overwrite")
-        .partitionBy("day")
-        .bucketBy(buckets, "event_type").sortBy("event_type", "ts")
-        .option("path", p.toString)
-        .saveAsTable(tmpTbl)
-      spark.sql(s"DROP TABLE $tmpTbl")
-      stampBuckets(p, buckets)
-    }
-    val buckets = stampedBuckets(root)
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(root.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val tbl = s"graft_events_unified_$tag"
-    if (!spark.catalog.tableExists(tbl)) synchronized {
-      if (!spark.catalog.tableExists(tbl)) {
-        spark.sql(
-          s"""CREATE TABLE $tbl (
-             |  event_id BIGINT, ts BIGINT, user_id BIGINT,
-             |  event_type STRING, value DOUBLE, props STRING, day DATE)
-             |USING parquet
-             |PARTITIONED BY (day)
-             |CLUSTERED BY (event_type) SORTED BY (event_type, ts) INTO $buckets BUCKETS
-             |LOCATION '$root'""".stripMargin)
-        spark.sql(s"MSCK REPAIR TABLE $tbl")
-      }
-    }
-    tbl
-  }
-
-  /** Multi-tag series keys (VERDICT r12 stretch): cnosdb series keys are
-    * arbitrary tag SETS, not one tag — this stages the events lake
-    * bucketed on the FULL two-tag tuple (event_type, region) and sorted
-    * (event_type, region, ts), the tskv series-file shape for a two-tag
-    * schema, and registers it as a catalog table. The second tag is
-    * derived deterministically from user_id (the driver lake carries
-    * one physical tag), which both engines replay identically. Fine
-    * parquet row groups make sort-order zone skipping observable at toy
-    * scale (the ts_tag_zone_skip discipline). Returns the table name.
+  /** As [[eventsUnifiedTable]], with one bucket file per
+    * `bucketTargetBytes` of bytes per day: a spec re-proves the layout
+    * at a second derived bucket count this way. The target rides the
+    * staging key, so another target stages another layout and table.
     */
-  def eventsMultiTagTable(spark: SparkSession, dir: String): String = {
-    import org.apache.spark.sql.functions._
-    val root = Lake.staged(s"multitag_lake_v2|$dir|$bucketTargetBytes",
-        Seq(s"$dir/events.parquet")) { p =>
-      val tmpTbl = s"graft_multitag_stage_${ProcessHandle.current().pid()}_${System.nanoTime()}"
-      // unpartitioned table: bytes-per-partition-unit = the whole lake
-      val buckets = Sizing.bucketCount(
-        Sizing.parquetBytes(s"$dir/events.parquet").toDouble, bucketTargetBytes)
-      eventsNanos(spark, dir)
-        .select(col("ts").cast("bigint").as("ts"),
-          col("event_type").cast("string").as("event_type"),
-          concat(lit("r"), pmod(col("user_id"), lit(3)).cast("string")).as("region"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-        .repartition(buckets, col("event_type"), col("region"))
-        .write.mode("overwrite")
-        .bucketBy(buckets, "event_type", "region")
-        .sortBy("event_type", "region", "ts")
-        .option("path", p.toString)
-        .option("parquet.block.size", "4096")
-        .saveAsTable(tmpTbl)
-      spark.sql(s"DROP TABLE $tmpTbl")
-      stampBuckets(p, buckets)
-    }
-    val buckets = stampedBuckets(root)
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(root.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val tbl = s"graft_events_multitag_$tag"
-    if (!spark.catalog.tableExists(tbl)) synchronized {
-      if (!spark.catalog.tableExists(tbl)) {
-        spark.sql(
-          s"""CREATE TABLE $tbl (
-             |  ts BIGINT, event_type STRING, region STRING, cents BIGINT)
-             |USING parquet
-             |CLUSTERED BY (event_type, region)
-             |SORTED BY (event_type, region, ts) INTO $buckets BUCKETS
-             |LOCATION '$root'""".stripMargin)
-      }
-    }
-    tbl
-  }
+  private[graft] def eventsUnifiedTable(spark: SparkSession, dir: String,
+                                        bucketTargetBytes: Long): String =
+    table(spark, dir, Unified, bucketTargetBytes)
 
-  /** The multi-tag series layout COMPOSED with time partitioning (new
-    * r13 — the tskv file organization for a multi-tag schema: time
-    * levels × multi-tag series files): `day=` partition directories,
-    * each holding 4 files bucketed on the FULL (event_type, region) tag
-    * tuple and sorted (event_type, region, ts). One catalog table gives
-    * O(K-day) listing via [[plans.EventTimeDayPruning]] AND
-    * shuffle-free per-tuple-series aggregation at once — the two-tag
-    * generalization of [[eventsUnifiedTable]]. Returns the table name.
-    */
-  def eventsMultiTagDayTable(spark: SparkSession, dir: String): String = {
-    import org.apache.spark.sql.functions._
-    plans.install(spark)
-    val root = Lake.staged(s"multitag_day_lake_v2|$dir|$bucketTargetBytes",
-        Seq(s"$dir/events.parquet")) { p =>
-      val width = math.max(spark.sparkContext.defaultParallelism,
-        Sizing.shufflePartitions(s"$dir/events.parquet",
-          spark.sparkContext.defaultParallelism))
-      val tmpTbl = s"graft_mtday_stage_${ProcessHandle.current().pid()}_${System.nanoTime()}"
-      val frame = eventsNanos(spark, dir)
-        .select(col("ts").cast("bigint").as("ts"),
-          col("event_type").cast("string").as("event_type"),
-          concat(lit("r"), pmod(col("user_id"), lit(3)).cast("string")).as("region"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-        .withColumn("day", expr(dayOfNsSql("ts")))
-      val days = math.max(1L, frame.select(countDistinct(col("day"))).head.getLong(0))
-      val buckets = Sizing.bucketCount(
-        Sizing.parquetBytes(s"$dir/events.parquet").toDouble / days, bucketTargetBytes)
-      frame
-        .repartitionByRange(width, col("day"), col("ts"))
-        .write.mode("overwrite")
-        .partitionBy("day")
-        .bucketBy(buckets, "event_type", "region")
-        .sortBy("event_type", "region", "ts")
-        .option("path", p.toString)
-        .saveAsTable(tmpTbl)
-      spark.sql(s"DROP TABLE $tmpTbl")
-      stampBuckets(p, buckets)
-    }
-    val buckets = stampedBuckets(root)
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(root.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val tbl = s"graft_events_mtday_$tag"
-    if (!spark.catalog.tableExists(tbl)) synchronized {
-      if (!spark.catalog.tableExists(tbl)) {
-        spark.sql(
-          s"""CREATE TABLE $tbl (
-             |  ts BIGINT, event_type STRING, region STRING, cents BIGINT,
-             |  day DATE)
-             |USING parquet
-             |PARTITIONED BY (day)
-             |CLUSTERED BY (event_type, region)
-             |SORTED BY (event_type, region, ts) INTO $buckets BUCKETS
-             |LOCATION '$root'""".stripMargin)
-        spark.sql(s"MSCK REPAIR TABLE $tbl")
-      }
-    }
-    tbl
-  }
+  /** The multi-tag layout as a catalog table; returns its name. */
+  def eventsMultiTagTable(spark: SparkSession, dir: String): String =
+    table(spark, dir, MultiTag, DefaultBucketTargetBytes)
+
+  /** The multi-tag day layout as a catalog table; returns its name. */
+  def eventsMultiTagDayTable(spark: SparkSession, dir: String): String =
+    table(spark, dir, MultiTagDay, DefaultBucketTargetBytes)
 
   /** Sorted UTC days present in the partitioned lake, from the directory
     * listing alone — O(days), no file IO; the discovery path a 100 TB
     * time-bounded query planner uses.
     */
-  def eventsLakeDays(spark: SparkSession, dir: String): Seq[String] = {
-    val root = new java.io.File(eventsLakeRoot(spark, dir))
-    Option(root.listFiles()).getOrElse(Array.empty)
+  def eventsLakeDays(spark: SparkSession, dir: String): Seq[String] =
+    layoutDays(eventsLakeRoot(spark, dir))
+
+  /** Sorted days of a day-partitioned layout root, from its `day=`
+    * directory names. */
+  private[graft] def layoutDays(root: String): Seq[String] =
+    Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("day="))
       .map(_.getName.stripPrefix("day=")).sorted.toSeq
+
+  /** Sorted days of a day-partitioned catalog table, from its partition
+    * inventory. */
+  private[graft] def tableDays(spark: SparkSession, table: String): Seq[String] =
+    spark.sql(s"SHOW PARTITIONS $table").collect()
+      .map(_.getString(0).stripPrefix("day=")).sorted.toSeq
+
+  /** A catalog table's bucket spec — count, bucket and sort columns —
+    * from its metadata. */
+  private[graft] def bucketSpec(spark: SparkSession, table: String): BucketSpec =
+    spark.sessionState.catalog
+      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(table))
+      .bucketSpec.getOrElse(sys.error(s"table $table carries no bucket spec"))
+
+  /** A lane-private file copy of the day layout, under a fresh root
+    * named after `lane` (the object doc's private-copy rule). */
+  private[graft] def dayLakeCopy(spark: SparkSession, dir: String, lane: String): Path = {
+    val root = reclaim(spark, lane)
+    copyTree(Paths.get(eventsLakeRoot(spark, dir)), root)
+    root
   }
+
+  /** A lane-private copy of the unified table's files, registered as a
+    * table of its own. Returns (table name, root). */
+  private[graft] def unifiedCopy(spark: SparkSession, dir: String,
+                                 lane: String): (String, Path) =
+    registeredCopy(spark, lane) { root =>
+      copyTree(Paths.get(stage(spark, dir, Unified, DefaultBucketTargetBytes)), root)
+    }
+
+  /** An empty lane-private table of the unified layout, at the bucket
+    * count the unified table derives. Returns (table name, root). */
+  private[graft] def emptyUnifiedTable(spark: SparkSession, dir: String,
+                                       lane: String): (String, Path) =
+    registeredCopy(spark, lane) { root =>
+      stampBuckets(root, bucketCount(spark, dir, Unified, DefaultBucketTargetBytes))
+    }
+
+  /** One bucketed event layout: its data columns with their SQL types,
+    * whether it is partitioned by a `day` DATE column, its bucket and
+    * sort columns, its writer options, the version its staging key
+    * starts with (bumped with any change to the layout, so a changed
+    * layout restages instead of reusing files written under the old
+    * rule), the prefix of its table names, and the rows it holds — a
+    * frame with every data column by name.
+    */
+  private final case class Layout(
+      stageKey: String,
+      tablePrefix: String,
+      columns: Seq[(String, String)],
+      byDay: Boolean,
+      bucketCols: Seq[String],
+      sortCols: Seq[String],
+      writerOptions: Map[String, String],
+      rows: (SparkSession, String) => DataFrame)
+
+  private val Unified = Layout("unified_lake_v2", "graft_events_unified",
+    Seq("event_id" -> "BIGINT", "ts" -> "BIGINT", "user_id" -> "BIGINT",
+      "event_type" -> "STRING", "value" -> "DOUBLE", "props" -> "STRING"),
+    byDay = true, Seq("event_type"), Seq("event_type", "ts"), Map.empty,
+    rawEventsNanos)
+
+  // 4 KB parquet blocks make sort-order row-group skipping observable
+  // at toy scale (the ts_tag_zone_skip discipline)
+  private val MultiTag = Layout("multitag_lake_v2", "graft_events_multitag",
+    Seq("ts" -> "BIGINT", "event_type" -> "STRING", "region" -> "STRING",
+      "cents" -> "BIGINT"),
+    byDay = false, Seq("event_type", "region"), Seq("event_type", "region", "ts"),
+    Map("parquet.block.size" -> "4096"), taggedEvents)
+
+  private val MultiTagDay = MultiTag.copy(stageKey = "multitag_day_lake_v2",
+    tablePrefix = "graft_events_mtday", byDay = true, writerOptions = Map.empty)
+
+  private val DefaultBucketTargetBytes = 128L << 20
+
+  /** The layout staged for `dir` and registered in `spark` under a name
+    * keyed by the staged root, so a regenerated lake gets a fresh table. */
+  private def table(spark: SparkSession, dir: String, l: Layout,
+                    bucketTargetBytes: Long): String = {
+    plans.install(spark)
+    val root = stage(spark, dir, l, bucketTargetBytes)
+    val tag = java.security.MessageDigest.getInstance("MD5")
+      .digest(root.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+    val tbl = s"${l.tablePrefix}_$tag"
+    if (!spark.catalog.tableExists(tbl)) synchronized {
+      if (!spark.catalog.tableExists(tbl)) register(spark, tbl, l, root)
+    }
+    tbl
+  }
+
+  /** The layout's root, staged once per (lake dir, fingerprint, target)
+    * through [[Lake.staged]] and stamped with its bucket count. Spark
+    * writes bucket-id file names only through the table API, so the
+    * files are written through a throwaway external table, dropped after
+    * the write (the files stay).
+    */
+  private def stage(spark: SparkSession, dir: String, l: Layout,
+                    bucketTargetBytes: Long): String =
+    Lake.staged(s"${l.stageKey}|$dir|$bucketTargetBytes", Seq(s"$dir/events.parquet")) { p =>
+      import org.apache.spark.sql.functions._
+      val buckets = bucketCount(spark, dir, l, bucketTargetBytes)
+      // the registration DDL's types, so the table matches the files
+      val rows = l.rows(spark, dir)
+        .select(l.columns.map { case (c, t) => col(c).cast(t).as(c) }: _*)
+      // a day layout keeps day-locality as eventsLakeRoot does; the
+      // bucket spec adds the per-task (bucket, sort) ordering itself
+      val spread =
+        if (l.byDay) rows.withColumn("day", expr(dayOfNsSql("ts")))
+          .repartitionByRange(writerWidth(spark, dir), col("day"), col("ts"))
+        else rows.repartition(buckets, l.bucketCols.map(col): _*)
+      val w = spread.write.mode("overwrite").options(l.writerOptions)
+      val tmp = s"${l.tablePrefix}_stage_${ProcessHandle.current().pid()}_${System.nanoTime()}"
+      (if (l.byDay) w.partitionBy("day") else w)
+        .bucketBy(buckets, l.bucketCols.head, l.bucketCols.tail: _*)
+        .sortBy(l.sortCols.head, l.sortCols.tail: _*)
+        .option("path", p.toString)
+        .saveAsTable(tmp)
+      spark.sql(s"DROP TABLE $tmp")
+      stampBuckets(p, buckets)
+    }
+
+  /** The object doc's bucket-count rule, for a layout of `dir`. */
+  private def bucketCount(spark: SparkSession, dir: String, l: Layout,
+                          bucketTargetBytes: Long): Int = {
+    val bytes = Sizing.parquetBytes(s"$dir/events.parquet").toDouble
+    val perPartition =
+      if (l.byDay) bytes / math.max(1, eventsLakeDays(spark, dir).size) else bytes
+    Sizing.bucketCount(perPartition, bucketTargetBytes)
+  }
+
+  /** Registers `tbl` over `root` with the layout's DDL and the bucket
+    * count stamped in `root`, recovering any day partitions. */
+  private def register(spark: SparkSession, tbl: String, l: Layout, root: String): Unit = {
+    val cols = l.columns ++ (if (l.byDay) Seq("day" -> "DATE") else Nil)
+    spark.sql(
+      s"""CREATE TABLE $tbl (${cols.map { case (c, t) => s"$c $t" }.mkString(", ")})
+         |USING parquet
+         |${if (l.byDay) "PARTITIONED BY (day)" else ""}
+         |CLUSTERED BY (${l.bucketCols.mkString(", ")})
+         |SORTED BY (${l.sortCols.mkString(", ")}) INTO ${stampedBuckets(root)} BUCKETS
+         |LOCATION '$root'""".stripMargin)
+    if (l.byDay) spark.sql(s"MSCK REPAIR TABLE $tbl")
+  }
+
+  /** The bucket count a staged layout was written with, in
+    * `_graft_buckets` (underscore-prefixed, so Spark's file index
+    * ignores it): the DDL over the files reads it, so the two cannot
+    * disagree. */
+  private def stampBuckets(p: Path, n: Int): Unit =
+    Files.write(p.resolve("_graft_buckets"), n.toString.getBytes("UTF-8"))
+  private def stampedBuckets(root: String): Int = {
+    val f = Paths.get(root, "_graft_buckets")
+    require(Files.exists(f), s"staged bucketed layout at $root carries no _graft_buckets stamp")
+    new String(Files.readAllBytes(f), "UTF-8").trim.toInt
+  }
+
+  /** A fresh root for `lane`'s private copy, once the `<lane>_*` tables
+    * are dropped and the roots this process made for the lane before
+    * are deleted (the pid in the name keeps other processes' copies). */
+  private def reclaim(spark: SparkSession, lane: String): Path = {
+    val cat = spark.sessionState.catalog
+    cat.listTables(cat.getCurrentDatabase, s"${lane}_*").filterNot(cat.isTempView)
+      .foreach(t => spark.sql(s"DROP TABLE ${t.quotedString}"))
+    val mine = s"${lane}_${ProcessHandle.current().pid()}_"
+    val root = Files.createTempDirectory(mine)
+    val ls = Files.newDirectoryStream(root.getParent, s"$mine*")
+    try ls.iterator().asScala.filter(_ != root).toList.foreach(Lake.deleteRecursively)
+    finally ls.close()
+    root
+  }
+
+  private def registeredCopy(spark: SparkSession, lane: String)(
+      fill: Path => Unit): (String, Path) = {
+    val root = reclaim(spark, lane)
+    fill(root)
+    val tbl = s"${lane}_${System.nanoTime()}"
+    register(spark, tbl, Unified, root.toString)
+    (tbl, root)
+  }
+
+  private def copyTree(src: Path, dst: Path): Unit = {
+    val walk = Files.walk(src)
+    try walk.iterator().forEachRemaining { p =>
+      val q = dst.resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(q)
+      else Files.copy(p, q, StandardCopyOption.REPLACE_EXISTING)
+    } finally walk.close()
+  }
+
+  /** Events with a second tag, `region`, derived from user_id, and the
+    * value as integer `cents` — both replayed identically by the
+    * oracle. */
+  private def taggedEvents(spark: SparkSession, dir: String): DataFrame = {
+    import org.apache.spark.sql.functions._
+    eventsNanos(spark, dir)
+      .withColumn("region", concat(lit("r"), pmod(col("user_id"), lit(3)).cast("string")))
+      .withColumn("cents", expr("CAST(round(value * 100) AS BIGINT)"))
+  }
+
+  /** Writer parallelism of a day layout, derived from the input (the
+    * Sizing discipline). */
+  private def writerWidth(spark: SparkSession, dir: String): Int =
+    math.max(spark.sparkContext.defaultParallelism,
+      Sizing.shufflePartitions(s"$dir/events.parquet", spark.sparkContext.defaultParallelism))
 
   /** The raw driver lake read, normalized to BIGINT nanos — the staging
     * input. Dispatching on the SCANNED dtype keeps both physical lakes

@@ -232,8 +232,7 @@ object Dml {
     val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
     val rootP = new Path(spark.sessionState.catalog.getTableMetadata(ident).location)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val days = spark.sql(s"SHOW PARTITIONS $table").collect()
-      .map(_.getString(0).stripPrefix("day=")).sorted
+    val days = graft.Tables.tableDays(spark, table)
     require(days.nonEmpty, s"$table has no day= partitions")
     var dropped = 0
     var rewritten = false

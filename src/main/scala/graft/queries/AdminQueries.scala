@@ -187,9 +187,7 @@ object AdminQueries {
     // expiry work stays O(expired days) through the Hadoop FS.
     "q_admin_ttl_expire" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val src = java.nio.file.Paths.get(Tables.eventsLakeRoot(s, dir))
-      val root = java.nio.file.Files.createTempDirectory("graft_admin_ttl_lake")
-      LakeContract.copyTree(src, root)
+      val root = Tables.dayLakeCopy(s, dir, "graft_admin_ttl_lake")
       val days = Tables.eventsLakeDays(s, dir)
       require(days.size > 2, s"lake spans ${days.size} day(s); need at least 3")
       val mid = days(days.size / 2)

@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.types._
 
 import graft.{Lake, Tables}
@@ -516,9 +515,7 @@ object LakeContract {
     // lake's `ts >= cutoff` aggregate in the oracle.
     "ts_ttl_expire" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val src = java.nio.file.Paths.get(Tables.eventsLakeRoot(s, dir))
-      val root = java.nio.file.Files.createTempDirectory("graft_ttl_lake")
-      copyTree(src, root)
+      val root = Tables.dayLakeCopy(s, dir, "graft_ttl_lake")
       val days = Tables.eventsLakeDays(s, dir)
       require(days.size > 2, s"lake spans ${days.size} day(s); need at least 3")
       val mid = days(days.size / 2)
@@ -530,9 +527,7 @@ object LakeContract {
       val lakeSchema = Tables.eventsDayLake(s, dir).schema
       val stats = graft.operators.Dml.expireDays(s, root.toString, cutoffNs,
         fileSchema = Some(Tables.eventsNanos(s, dir).schema))
-      val remaining = Option(root.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("day="))
-        .map(_.getName.stripPrefix("day=")).sorted.toSeq
+      val remaining = Tables.layoutDays(root.toString)
       require(remaining == days.filter(_ >= mid),
         s"TTL listing wrong: expected days >= $mid, lake has ${remaining.mkString(",")}")
       require(stats.droppedDays == days.count(_ < mid) && stats.boundaryRewritten,
@@ -561,9 +556,7 @@ object LakeContract {
     // must answer identically to the never-fragmented one).
     "ts_compact_daylake" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val src = java.nio.file.Paths.get(Tables.eventsLakeRoot(s, dir))
-      val root = java.nio.file.Files.createTempDirectory("graft_compact_lake")
-      copyTree(src, root)
+      val root = Tables.dayLakeCopy(s, dir, "graft_compact_lake")
       val days = Tables.eventsLakeDays(s, dir)
       require(days.size > 1, s"lake spans ${days.size} day(s)")
       val d1 = days(1)
@@ -642,13 +635,12 @@ object LakeContract {
     // ordinary dashboard shape, never naming the partition column —
     // must prune the catalog table's file listing to exactly 2 of N day
     // partitions, with N cross-checked against the catalog's own
-    // partition inventory (SHOW PARTITIONS). Proves the optimizer rule
+    // partition inventory. Proves the optimizer rule
     // fires on catalog-backed relations exactly as on path reads.
     "ts_unified_prune" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val tbl = Tables.eventsUnifiedTable(s, dir)
-      val days = s.sql(s"SHOW PARTITIONS $tbl").collect()
-        .map(_.getString(0).stripPrefix("day=")).sorted.toSeq
+      val days = Tables.tableDays(s, tbl)
       require(days.size > 2, s"unified table holds ${days.size} day(s); need 3+")
       val (da, db) = (java.time.LocalDate.parse(days(1)),
         java.time.LocalDate.parse(days(1)).plusDays(1))
@@ -680,8 +672,7 @@ object LakeContract {
     "ts_unified_layout" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val tbl = Tables.eventsUnifiedTable(s, dir)
-      val days = s.sql(s"SHOW PARTITIONS $tbl").collect()
-        .map(_.getString(0).stripPrefix("day=")).sorted.toSeq
+      val days = Tables.tableDays(s, tbl)
       require(days.size > 1, s"unified table holds ${days.size} day(s)")
       val d1 = java.time.LocalDate.parse(days(1))
       val q = s.table(tbl)
@@ -750,10 +741,7 @@ object LakeContract {
       // ever held (every sf ≥ 0.01, where series ≥ 640 rows). This was
       // a latent r13 defect surfaced by the first full sf0.001 verify
       // (r15); the lane's ANSWER was always oracle-checked at every sf.
-      val buckets = s.sql(s"DESCRIBE TABLE EXTENDED $tbl").collect()
-        .find(r => r.getString(0).trim == "Num Buckets")
-        .map(_.getString(1).trim.toInt)
-        .getOrElse(sys.error(s"no bucket spec found on $tbl"))
+      val buckets = Tables.bucketSpec(s, tbl).numBuckets
       val limit =
         if (share >= 512) 2 * share
         else math.max(2 * share, (total + buckets - 1) / buckets)
@@ -778,8 +766,7 @@ object LakeContract {
     "ts_multitag_day" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val tbl = Tables.eventsMultiTagDayTable(s, dir)
-      val days = s.sql(s"SHOW PARTITIONS $tbl").collect()
-        .map(_.getString(0).stripPrefix("day=")).sorted.toSeq
+      val days = Tables.tableDays(s, tbl)
       require(days.size > 1, s"multi-tag day table holds ${days.size} day(s)")
       val d1 = java.time.LocalDate.parse(days(1))
       val q = s.table(tbl)
@@ -823,16 +810,14 @@ object LakeContract {
     // SQL verbatim — both lifecycles must implement the same predicate).
     "ts_ttl_unified" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val (tbl, root) = privateUnifiedCopy(s, dir, "graft_ttl_unified")
-      def partitions(): Seq[String] = s.sql(s"SHOW PARTITIONS $tbl").collect()
-        .map(_.getString(0).stripPrefix("day=")).sorted.toSeq
-      val days = partitions()
+      val (tbl, root) = Tables.unifiedCopy(s, dir, "graft_ttl_unified")
+      val days = Tables.tableDays(s, tbl)
       require(days.size > 2, s"unified table spans ${days.size} day(s); need 3+")
       val mid = days(days.size / 2)
       val cutoffNs = java.time.LocalDate.parse(mid).toEpochDay * Tables.NsPerDay +
         Tables.NsPerDay / 2
       val stats = graft.operators.Dml.expireDaysUnified(s, tbl, cutoffNs)
-      val remaining = partitions()
+      val remaining = Tables.tableDays(s, tbl)
       require(remaining == days.filter(_ >= mid),
         s"unified TTL catalog listing wrong: expected days >= $mid, " +
           s"table lists ${remaining.mkString(",")}")
@@ -884,12 +869,12 @@ object LakeContract {
     // compacted table must answer identically to the never-touched lake.
     "ts_compact_unified" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val (tbl, root) = privateUnifiedCopy(s, dir, "graft_compact_unified")
-      val days = s.sql(s"SHOW PARTITIONS $tbl").collect()
-        .map(_.getString(0).stripPrefix("day=")).sorted.toSeq
+      val (tbl, root) = Tables.unifiedCopy(s, dir, "graft_compact_unified")
+      val days = Tables.tableDays(s, tbl)
       require(days.size > 1, s"unified table holds ${days.size} day(s)")
       val d1 = days(1)
-      val buckets = tableBuckets(s, tbl)
+      val spec = Tables.bucketSpec(s, tbl)
+      val buckets = spec.numBuckets
       val dataCols = s.table(tbl).columns.filterNot(_ == "day")
       // materialize the day's rows BEFORE overwriting it (never a
       // self-read), then land them back as `buckets` single-task
@@ -916,7 +901,7 @@ object LakeContract {
       require(fragged > buckets,
         s"fragmentation failed: day=$d1 holds $fragged file(s), want > $buckets")
       val (before, after) =
-        graft.operators.Dml.compactUnified(s, tbl, d1, buckets, Seq("event_type"))
+        graft.operators.Dml.compactUnified(s, tbl, d1, buckets, spec.bucketColumnNames)
       require(before == fragged && after <= buckets && after < before,
         s"unified compaction failed: $before files -> $after (want <= $buckets)")
       require(dayFiles().forall(_.matches(".*_\\d{5}\\..*parquet")),
@@ -957,66 +942,6 @@ object LakeContract {
         .orderBy("table_name", "column_name")
     })
   )
-
-  /** A catalog table's bucket count, from its metadata — the layout is
-    * input-derived (Sizing.bucketCount), so every consumer reads it
-    * rather than assuming a constant. */
-  private def tableBuckets(s: SparkSession, tbl: String): Int = {
-    val ident = s.sessionState.sqlParser.parseTableIdentifier(tbl)
-    s.sessionState.catalog.getTableMetadata(ident).bucketSpec
-      .map(_.numBuckets)
-      .getOrElse(sys.error(s"table $tbl carries no bucket spec"))
-  }
-
-  /** A catalog table's local root directory. */
-  private def tableRoot(s: SparkSession, ident: TableIdentifier): java.nio.file.Path =
-    java.nio.file.Paths.get(s.sessionState.catalog.getTableMetadata(ident).location.getPath)
-
-  /** A PRIVATE copy of the staged unified catalog table, registered
-    * under a fresh name — the lifecycle lanes (TTL, compaction) mutate
-    * this copy, never the shared layout. Returns (table name, local
-    * root). The copy and its catalog entry live until the next call
-    * with the same `prefix`, which drops the table and deletes its root
-    * first, so the catalog holds at most one copy per lane.
-    */
-  private def privateUnifiedCopy(s: SparkSession, dir: String,
-                                 prefix: String): (String, java.nio.file.Path) = {
-    val cat = s.sessionState.catalog
-    cat.listTables(cat.getCurrentDatabase, s"${prefix}_*").filterNot(cat.isTempView)
-      .foreach { old =>
-        val oldRoot = tableRoot(s, old)
-        s.sql(s"DROP TABLE ${old.quotedString}")
-        Lake.deleteRecursively(oldRoot)
-      }
-    val shared = Tables.eventsUnifiedTable(s, dir)
-    val buckets = tableBuckets(s, shared)
-    val root = java.nio.file.Files.createTempDirectory(prefix)
-    copyTree(tableRoot(s, s.sessionState.sqlParser.parseTableIdentifier(shared)), root)
-    val tbl = s"${prefix}_${System.nanoTime()}"
-    s.sql(
-      s"""CREATE TABLE $tbl (
-         |  event_id BIGINT, ts BIGINT, user_id BIGINT,
-         |  event_type STRING, value DOUBLE, props STRING, day DATE)
-         |USING parquet
-         |PARTITIONED BY (day)
-         |CLUSTERED BY (event_type) SORTED BY (event_type, ts) INTO $buckets BUCKETS
-         |LOCATION '$root'""".stripMargin)
-    s.sql(s"MSCK REPAIR TABLE $tbl")
-    (tbl, root)
-  }
-
-  /** Recursive file-tree copy — the TTL lane mutates a private copy of
-    * the staged primary lake, never the shared layout itself.
-    */
-  private[queries] def copyTree(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
-    import java.nio.file._
-    val walk = Files.walk(src)
-    try walk.iterator().forEachRemaining { p =>
-      val q = dst.resolve(src.relativize(p).toString)
-      if (Files.isDirectory(p)) Files.createDirectories(q)
-      else Files.copy(p, q, StandardCopyOption.REPLACE_EXISTING)
-    } finally walk.close()
-  }
 
   /** Replace the files of the flat directory `dst` with those of `src`,
     * moving them (a rename within one file system) and removing `src`.

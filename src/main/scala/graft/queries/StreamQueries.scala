@@ -912,10 +912,7 @@ object StreamQueries {
           .partitionBy("day")
           .outputMode("append")
       }
-      val days = Option(new java.io.File(s"$root/data").listFiles())
-        .getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("day="))
-        .map(_.getName.stripPrefix("day=")).sorted.toSeq
+      val days = Tables.layoutDays(s"$root/data")
       require(days.size > 1, s"streaming sink wrote ${days.size} day dir(s)")
       val day0 = days.head
       val agg = s.read.parquet(s"$root/data")
@@ -958,22 +955,8 @@ object StreamQueries {
     // dedup column); the replay here runs each batch exactly once.
     "stream_sink_unified" -> ((s, dir) => {
       graft.plans.install(s)
-      val root = Files.createTempDirectory("graft_stream_unified")
-      val tbl = s"graft_stream_unified_${System.nanoTime()}"
-      // same input-derived capacity rule as the batch-staged unified
-      // table: buckets from bytes-per-day, never a constant
-      val buckets = graft.Sizing.bucketCount(
-        graft.Sizing.parquetBytes(s"$dir/events.parquet").toDouble /
-          math.max(1, graft.Tables.eventsLakeDays(s, dir).size))
-      s.sql(
-        s"""CREATE TABLE $tbl (
-           |  event_id BIGINT, ts BIGINT, user_id BIGINT,
-           |  event_type STRING, value DOUBLE, props STRING, day DATE)
-           |USING parquet
-           |PARTITIONED BY (day)
-           |CLUSTERED BY (event_type) SORTED BY (event_type, ts) INTO $buckets BUCKETS
-           |LOCATION '$root'""".stripMargin)
-      val dataCols = Seq("event_id", "ts", "user_id", "event_type", "value", "props")
+      val (tbl, root) = Tables.emptyUnifiedTable(s, dir, "graft_stream_unified")
+      val dataCols = s.table(tbl).columns.filterNot(_ == "day")
       val srcStream = eventsStream(s, dir)
       runAvailableNow(s, "stream_sink_unified", replayWidth(srcStream, dir), srcStream) {
         _.foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -987,8 +970,7 @@ object StreamQueries {
           }
           .option("checkpointLocation", s"$root/_ckpt")
       }
-      val days = s.sql(s"SHOW PARTITIONS $tbl").collect()
-        .map(_.getString(0).stripPrefix("day=")).sorted.toSeq
+      val days = Tables.tableDays(s, tbl)
       require(days.size > 1,
         s"streaming unified sink registered ${days.size} day partition(s)")
       val d1 = java.time.LocalDate.parse(days(1))

@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -369,22 +373,44 @@ class ContractSpec extends AnyFunSuite with TestSpark {
   }
 
   test("the unified lifecycle lanes keep at most one private table copy each") {
+    // every lane that mutates a layout works on a private copy, and each
+    // run first reclaims the copy its previous run left: after 3 runs at
+    // most 1 remains, and the dropped copies' roots are gone from disk
     val cat = spark.sessionState.catalog
+    def run(lane: String) = assert(SparkEntry.queries(lane)(spark, sf).count() > 0)
     def copies(prefix: String) =
       cat.listTables(cat.getCurrentDatabase, s"${prefix}_*").filterNot(cat.isTempView)
     for ((lane, prefix) <- Seq("ts_ttl_unified" -> "graft_ttl_unified",
-                               "ts_compact_unified" -> "graft_compact_unified")) {
+                               "ts_compact_unified" -> "graft_compact_unified",
+                               "stream_sink_unified" -> "graft_stream_unified")) {
       // every table a run left, with its root, as seen right after the run
       val seen = (1 to 3).flatMap { _ =>
-        assert(queries.LakeContract.queries(lane)(spark, sf).count() > 0)
-        copies(prefix).map(t => t -> java.nio.file.Paths.get(cat.getTableMetadata(t).location.getPath))
+        run(lane)
+        copies(prefix).map(t => t -> Paths.get(cat.getTableMetadata(t).location.getPath))
       }.toMap
       val left = copies(prefix)
       assert(left.size <= 1, s"$lane left ${left.size} tables after 3 runs: ${left.mkString(", ")}")
       assert(seen.size == 3, "each run copies the layout afresh")
       val dropped = (seen -- left).values
-      assert(dropped.forall(r => !java.nio.file.Files.exists(r)),
+      assert(dropped.forall(r => !Files.exists(r)),
         s"$lane left earlier copies on disk: ${dropped.mkString(", ")}")
+    }
+    // the day-layout file copies have no table: count their roots
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    def roots(prefix: String): Set[Path] = {
+      val ls = Files.list(tmp)
+      try ls.iterator().asScala.filter(_.getFileName.toString.startsWith(prefix)).toSet
+      finally ls.close()
+    }
+    for ((lane, prefix) <- Seq("ts_ttl_expire" -> "graft_ttl_lake",
+                               "ts_compact_daylake" -> "graft_compact_lake")) {
+      val before = roots(prefix)
+      val seen = (1 to 3).flatMap { _ => run(lane); roots(prefix) -- before }.toSet
+      val left = roots(prefix) -- before
+      assert(left.size <= 1, s"$lane left ${left.size} roots after 3 runs: ${left.mkString(", ")}")
+      assert(seen.size == 3, "each run copies the layout afresh")
+      assert((seen -- left).forall(r => !Files.exists(r)),
+        s"$lane left earlier copies on disk: ${(seen -- left).mkString(", ")}")
     }
   }
 
@@ -397,37 +423,47 @@ class ContractSpec extends AnyFunSuite with TestSpark {
     val defaultTbl = Tables.eventsUnifiedTable(spark, sf)
     val days = Tables.eventsLakeDays(spark, sf).size
     val perDay = Sizing.parquetBytes(s"$sf/events.parquet").toDouble / math.max(1, days)
-    System.setProperty("graft.bucket.target.bytes",
-      math.max(1L, (perDay / 5).toLong).toString) // raw 5–6 → pow2 8
-    try {
-      val tbl = Tables.eventsUnifiedTable(spark, sf)
-      assert(tbl != defaultTbl, "a new target must stage a new table")
-      def buckets(t: String): Int = spark.sessionState.catalog
-        .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(t))
-        .bucketSpec.get.numBuckets
-      assert(buckets(defaultTbl) == 4 && buckets(tbl) == 8,
-        s"derived ${buckets(defaultTbl)} then ${buckets(tbl)}")
-      // witness 1: a one-day µs window still prunes the catalog listing
-      val d1 = java.time.LocalDate.parse(spark.sql(s"SHOW PARTITIONS $tbl")
-        .collect().map(_.getString(0).stripPrefix("day=")).sorted.apply(1))
-      val window = spark.table(tbl)
-        .withColumn("tstamp", timestamp_micros(expr("ts div 1000")))
-        .filter(col("tstamp") >= expr(s"TIMESTAMP '$d1 00:00:00'") &&
-          col("tstamp") < expr(s"TIMESTAMP '${d1.plusDays(1)} 00:00:00'"))
-        .groupBy("event_type").count()
-      assert(scanOfPlan(window).selectedPartitions.partitionCount == 1)
-      // witness 2: the per-series agg still plans ZERO hash exchanges
-      // over a bucketed scan at the new count
-      val agg = spark.table(tbl).groupBy("event_type").count()
-      val plan = agg.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange hashpartitioning"), plan.take(2000))
-      assert(plan.contains("Bucketed: true"), plan.take(2000))
-      // row parity: both layouts answer identically
-      val a = spark.table(defaultTbl).groupBy("event_type").count()
-        .orderBy("event_type").collect().toSeq
-      val b = agg.orderBy("event_type").collect().toSeq
-      assert(a == b, "bucket-count change altered answers")
-    } finally System.clearProperty("graft.bucket.target.bytes")
+    val tbl = Tables.eventsUnifiedTable(spark, sf,
+      math.max(1L, (perDay / 5).toLong)) // raw 5–6 → pow2 8
+    assert(tbl != defaultTbl, "a new target must stage a new table")
+    def buckets(t: String): Int = Tables.bucketSpec(spark, t).numBuckets
+    assert(buckets(defaultTbl) == 4 && buckets(tbl) == 8,
+      s"derived ${buckets(defaultTbl)} then ${buckets(tbl)}")
+    // witness 1: a one-day µs window still prunes the catalog listing
+    val d1 = java.time.LocalDate.parse(Tables.tableDays(spark, tbl)(1))
+    val window = spark.table(tbl)
+      .withColumn("tstamp", timestamp_micros(expr("ts div 1000")))
+      .filter(col("tstamp") >= expr(s"TIMESTAMP '$d1 00:00:00'") &&
+        col("tstamp") < expr(s"TIMESTAMP '${d1.plusDays(1)} 00:00:00'"))
+      .groupBy("event_type").count()
+    assert(scanOfPlan(window).selectedPartitions.partitionCount == 1)
+    // witness 2: the per-series agg still plans ZERO hash exchanges
+    // over a bucketed scan at the new count
+    val agg = spark.table(tbl).groupBy("event_type").count()
+    val plan = agg.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange hashpartitioning"), plan.take(2000))
+    assert(plan.contains("Bucketed: true"), plan.take(2000))
+    // row parity: both layouts answer identically
+    val a = spark.table(defaultTbl).groupBy("event_type").count()
+      .orderBy("event_type").collect().toSeq
+    val b = agg.orderBy("event_type").collect().toSeq
+    assert(a == b, "bucket-count change altered answers")
+  }
+
+  test("src/main defines, stages and registers the bucketed layouts only in Tables") {
+    val main = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p.toString -> Files.readString(p)
+        .replaceAll("""(?s)/\*.*?\*/""", "").replaceAll("//[^\n]*", ""))
+      .toSeq
+    assert(main.size > 50)
+    for (word <- Seq("saveAsTable", ".bucketBy(", "CLUSTERED BY", "MSCK REPAIR",
+                     "SHOW PARTITIONS", "graft.bucket.target.bytes")) {
+      val at = main.collect { case (p, src) if src.contains(word) => p }.toSet
+      assert(at.subsetOf(Set("src/main/scala/graft/Tables.scala")), s"$word in $at")
+    }
+    val tables = main.collectFirst { case (p, src) if p.endsWith("graft/Tables.scala") => src }.get
+    assert(!tables.contains("sys.props") && !tables.contains("System.getProperty"))
   }
 
   private def scanOfPlan(df: org.apache.spark.sql.DataFrame) = {
